@@ -19,10 +19,10 @@ package graft.engine
   *     the key, so a rewritten dataset at the same path misses and
   *     rebuilds.
   *
-  * Usage contract (the q37/s05 success-only discipline): `get` before
-  * building; on a miss, `invalidate` → build → `put`, so a partial
-  * build (second write throws) retries next call instead of silently
-  * serving half a layout.
+  * Usage contract: [[buildOnce]] is the only way in. It looks the
+  * value up and, on a miss, runs invalidate → build → record, so a
+  * partial build (second write throws) records nothing and retries
+  * next call instead of silently serving half a layout.
   */
 final class CatalogMemo[V] {
   // WeakHashMap compares keys with equals(); SharedState doesn't
@@ -30,16 +30,21 @@ final class CatalogMemo[V] {
   private val m = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[AnyRef, (String, V)]())
 
-  /** The memoized value, iff one was recorded for this catalog AND the
-    * recorded content key still matches (same path, same files).
+  /** The value recorded for `s`'s catalog under `dir`'s current
+    * content key; on a miss, `build(contentKey)`, recorded only if it
+    * returns normally and `keep` accepts it (an empty training result
+    * is returned but not kept, so the next call trains again).
     */
-  def get(catalog: AnyRef, contentKey: String): Option[V] =
-    Option(m.get(catalog)).filter(_._1 == contentKey).map(_._2)
-
-  def invalidate(catalog: AnyRef): Unit = { m.remove(catalog); () }
-
-  def put(catalog: AnyRef, contentKey: String, v: V): Unit = {
-    m.put(catalog, (contentKey, v)); ()
+  def buildOnce(s: org.apache.spark.sql.SparkSession, dir: String,
+      keep: V => Boolean = (_: V) => true)(build: String => V): V = {
+    val catalog = s.sharedState
+    val ck = CatalogMemo.contentKey(dir, s.sparkContext.hadoopConfiguration)
+    Option(m.get(catalog)).filter(_._1 == ck).map(_._2).getOrElse {
+      m.remove(catalog)
+      val v = build(ck)
+      if (keep(v)) m.put(catalog, (ck, v))
+      v
+    }
   }
 }
 

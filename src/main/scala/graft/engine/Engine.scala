@@ -572,6 +572,20 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     m
   }
 
+  /** [[writeManifest]] then [[verifyManifest]]: a landing that fails
+    * its own fresh audit throws (stage `upload`, naming `what` was
+    * landed) rather than reporting success.
+    */
+  def writeManifestAudited(dest: String, format: Format,
+      what: String): ArchiveManifest = {
+    val m = writeManifest(dest, format)
+    val findings = verifyManifest(dest)
+    if (findings.nonEmpty)
+      throw new ArchiveException("upload", new IllegalStateException(
+        s"$what failed its manifest audit: ${findings.mkString("; ")}"))
+    m
+  }
+
   /** Re-audit a landed archive against its `_MANIFEST.json`: returns
     * the discrepancies (missing manifest, missing/extra/resized data
     * files, row-count drift), empty when the landing is intact. The
@@ -735,13 +749,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         }
       }
     }
-    if (fs.exists(new Path(root, Engine.ManifestName))) {
-      writeManifest(dest, format)
-      val findings = verifyManifest(dest)
-      if (findings.nonEmpty)
-        throw new ArchiveException("upload", new IllegalStateException(
-          s"compaction failed its manifest audit: ${findings.mkString("; ")}"))
-    }
+    if (fs.exists(new Path(root, Engine.ManifestName)))
+      writeManifestAudited(dest, format, "compaction")
     CompactionReport(parts, before, after, bytes, rows)
   }
 
@@ -839,14 +848,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         }
       }
     }
-    val remaining: Option[Long] = oldFormat.map { f =>
-      val m = writeManifest(dest, f)
-      val findings = verifyManifest(dest)
-      if (findings.nonEmpty)
-        throw new ArchiveException("upload", new IllegalStateException(
-          s"retention failed its manifest audit: ${findings.mkString("; ")}"))
-      m.rows
-    }
+    val remaining: Option[Long] =
+      oldFormat.map(writeManifestAudited(dest, _, "retention").rows)
     RetentionReport(expired, kept, files, bytes, remaining)
   }
 

@@ -857,15 +857,13 @@ object Dedup {
         JOIN dmin m ON d.text = m.text
       ORDER BY d.doc_id""")) { (s, d) =>
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    val idxTable = graft.engine.CatalogMemo.tableName("graft_dedup_index", ck)
-    if (dedupIndexBuilt.get(s.sharedState, ck).isEmpty) {
-      dedupIndexBuilt.invalidate(s.sharedState)
+    val idxTable = dedupIndexBuilt.buildOnce(s, d) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName("graft_dedup_index", ck)
       new graft.engine.Engine(s).archiveBucketed(
         docs.filter(col("doc_id") % 8 =!= 0)
           .groupBy("text").agg(min("doc_id").as("bkeep")),
-        idxTable, "text", 8)
-      dedupIndexBuilt.put(s.sharedState, ck, d)
+        tbl, "text", 8)
+      tbl
     }
     // the arrival batch: genuinely novel docs, RE-CRAWLS of already-
     // accepted docs (same text, fresh id — the realistic duplicate

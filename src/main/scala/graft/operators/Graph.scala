@@ -159,25 +159,19 @@ object Graph {
   private val coPurchaseMemo = new graft.engine.CatalogMemo[String]
   private val simEdgeMemo = new graft.engine.CatalogMemo[String]
 
-  /** Get-or-build a content-keyed bucketed edge table (the s05
-    * success-only discipline: record the memo only after the write
-    * lands, so a failed build retries instead of serving half a
-    * table). Returns the catalog table, bucketed by `bucketCol`.
+  /** Get-or-build a content-keyed bucketed edge table
+    * ([[graft.engine.CatalogMemo.buildOnce]]). Returns the catalog
+    * table, bucketed by `bucketCol`.
     */
   private[operators] def memoEdgeTable(s: org.apache.spark.sql.SparkSession, d: String,
       memo: graft.engine.CatalogMemo[String], base: String, bucketCol: String)
       (build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val tbl = graft.engine.CatalogMemo.tableName(base, ck)
-    if (memo.get(s.sharedState, ck).isEmpty) {
-      memo.invalidate(s.sharedState)
+      : org.apache.spark.sql.DataFrame =
+    s.table(memo.buildOnce(s, d) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName(base, ck)
       new graft.engine.Engine(s).archiveBucketed(build, tbl, bucketCol, 32)
-      memo.put(s.sharedState, ck, tbl)
-    }
-    s.table(tbl)
-  }
+      tbl
+    })
 
   /** The symmetrized fulfilment graph: (edges-with-degree, node-degree
     * table) — the loop-invariant operand shared by g01/g02/g05, built

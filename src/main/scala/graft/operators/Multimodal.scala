@@ -199,25 +199,16 @@ object MultimodalOps {
   }
 
   /** The decoded (doc_id, phash) frame — a narrow projection of the
-    * MEMOIZED one-decode metrics frame ([[imageMetricsMemo]] /
-    * [[buildImageMetrics]], which already carries the pHash60 per
-    * decoded asset), so m06 and m16 share the SAME decode pass as
+    * MEMOIZED one-decode metrics frame ([[imageMetrics]], which
+    * already carries the pHash60 per decoded asset), so m06 and m16
+    * share the SAME decode pass as
     * m13/c04/c07 instead of running a second `javax.imageio` sweep
     * per call (undecodable assets quarantine out identically — the
     * metrics frame only holds decoded rows).
     */
   private def imagePhashes(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val metrics = imageMetricsMemo.get(s.sharedState, ck).getOrElse {
-      val frame = buildImageMetrics(s, d)
-      imageMetricsMemo.put(s.sharedState, ck, frame)
-      frame
-    }
-    metrics.persist() // idempotent; re-registers after any clearCache
-    metrics.select(col("asset_id").as("doc_id"), col("phash"))
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    imageMetrics(s, d).select(col("asset_id").as("doc_id"), col("phash"))
 
   val m06 = QueryDef(
     "m06_phash_neardup",
@@ -726,6 +717,13 @@ object MultimodalOps {
   private val imageMetricsMemo =
     new graft.engine.CatalogMemo[org.apache.spark.sql.DataFrame]
 
+  /** The memoized decode-metrics frame, re-`persist()`ed per use
+    * (idempotent; re-registers after any clearCache).
+    */
+  private def imageMetrics(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    imageMetricsMemo.buildOnce(s, d)(_ => buildImageMetrics(s, d)).persist()
+
   /** m13's curation chain over ONE CACHED decode pass, shared with
     * the c04 landing capstone: decode-derived metrics → exact phash
     * collapse → near-dup keep-lowest over the GROUP table → entropy
@@ -740,17 +738,8 @@ object MultimodalOps {
     * c01's attribute frame.
     */
   private[graft] def curatedImageMetrics(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val metrics = imageMetricsMemo.get(s.sharedState, ck).getOrElse {
-      val frame = buildImageMetrics(s, d)
-      imageMetricsMemo.put(s.sharedState, ck, frame)
-      frame
-    }
-    metrics.persist() // idempotent; re-registers after any clearCache
-    curateFromMetrics(metrics)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    curateFromMetrics(imageMetrics(s, d))
 
   /** The raw decode pass: ONE mapPartitions yields every downstream
     * metric — codec, dims, perceptual hash, entropy — so curation

@@ -49,23 +49,16 @@ object Pipeline {
     * must fail the pipeline, not pass silently.
     */
   private def ensureLanded(s: org.apache.spark.sql.SparkSession, d: String,
-      packed: org.apache.spark.sql.DataFrame): Unit = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    if (landMemo.get(s.sharedState, ck).isEmpty) {
-      landMemo.invalidate(s.sharedState)
+      packed: org.apache.spark.sql.DataFrame): Unit =
+    landMemo.buildOnce(s, d) { ck =>
       val destDir = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
         "/" + graft.engine.CatalogMemo.tableName("graft_c01_land", ck)
       val eng = new graft.engine.Engine(s)
       val dest = eng.archiveDF(packed, destDir, "train_shards",
         _.copy(sharded = true, format = graft.engine.Format.Parquet))
-      eng.writeManifest(dest, graft.engine.Format.Parquet)
-      val findings = eng.verifyManifest(dest)
-      require(findings.isEmpty,
-        s"graft: c01 landing failed its manifest audit: ${findings.mkString("; ")}")
-      landMemo.put(s.sharedState, ck, dest)
+      eng.writeManifestAudited(dest, graft.engine.Format.Parquet, "c01 landing")
+      dest
     }
-  }
 
   /** c01: the curation capstone (see object doc). Output is the
     * per-shard packing summary — the artifact a training run's data
@@ -207,32 +200,28 @@ object Pipeline {
       d: String, surv: org.apache.spark.sql.DataFrame, buckets: Int,
       memo: graft.engine.CatalogMemo[String] = idxMemo,
       tableBase: String = "graft_c02_index"): String = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val tbl = graft.engine.CatalogMemo.tableName(tableBase, ck)
-    memo.get(s.sharedState, ck) match {
-      case Some(stored) =>
-        // the (memo, tableBase) pairing is one-to-one BY CONTRACT — a
-        // caller reusing a memo under a different base would otherwise
-        // be handed a name that was never landed; make that loud
-        require(stored == tbl,
-          s"graft: memo/tableBase mismatch: memo holds $stored but " +
-            s"caller derives $tbl — use one CatalogMemo per tableBase")
-        stored
-      case None =>
-        memo.invalidate(s.sharedState)
-        val eng = new graft.engine.Engine(s)
-        eng.archiveBucketed(surv, tbl, "cell", buckets)
-        val loc = s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl)).toString
-        eng.writeManifest(loc, graft.engine.Format.Parquet)
-        val findings = eng.verifyManifest(loc)
-        require(findings.isEmpty,
-          s"graft: $tableBase landing failed its manifest audit: ${findings.mkString("; ")}")
-        memo.put(s.sharedState, ck, tbl)
-        tbl
+    val tbl = memo.buildOnce(s, d) { ck =>
+      val name = graft.engine.CatalogMemo.tableName(tableBase, ck)
+      val eng = new graft.engine.Engine(s)
+      eng.archiveBucketed(surv, name, "cell", buckets)
+      eng.writeManifestAudited(landedPath(s, name), graft.engine.Format.Parquet,
+        s"$tableBase landing")
+      name
     }
+    // the (memo, tableBase) pairing is one-to-one BY CONTRACT — a
+    // caller reusing a memo under a different base would otherwise be
+    // handed a name that was never landed; make that loud (a hit's
+    // name is `<base>_<hex>` of the same content key)
+    require(tbl.substring(0, tbl.lastIndexOf('_')) == tableBase,
+      s"graft: memo/tableBase mismatch: memo holds $tbl but caller's " +
+        s"base is $tableBase — use one CatalogMemo per tableBase")
+    tbl
   }
+
+  /** A catalog table's landed directory (where its manifest goes). */
+  private def landedPath(s: org.apache.spark.sql.SparkSession, tbl: String): String =
+    s.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl)).toString
 
   /** c02: the RETRIEVAL-INDEX capstone — c01's end-to-end discipline
     * applied to the embedding side of a training-data platform. One
@@ -389,24 +378,15 @@ object Pipeline {
     * Returns the content-keyed physical table name.
     */
   private def ensureImagesLanded(s: org.apache.spark.sql.SparkSession,
-      d: String, curated: org.apache.spark.sql.DataFrame): String = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val tbl = graft.engine.CatalogMemo.tableName("graft_c04_images", ck)
-    if (imgLandMemo.get(s.sharedState, ck).isEmpty) {
-      imgLandMemo.invalidate(s.sharedState)
+      d: String, curated: org.apache.spark.sql.DataFrame): String =
+    imgLandMemo.buildOnce(s, d) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName("graft_c04_images", ck)
       val eng = new graft.engine.Engine(s)
       eng.archiveClustered(curated, tbl, "width", "height")
-      val loc = s.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl)).toString
-      eng.writeManifest(loc, graft.engine.Format.Parquet)
-      val findings = eng.verifyManifest(loc)
-      require(findings.isEmpty,
-        s"graft: c04 landing failed its manifest audit: ${findings.mkString("; ")}")
-      imgLandMemo.put(s.sharedState, ck, tbl)
+      eng.writeManifestAudited(landedPath(s, tbl), graft.engine.Format.Parquet,
+        "c04 landing")
+      tbl
     }
-    tbl
-  }
 
   /** c04: the MULTIMODAL curation-landing capstone — m13 ends at a
     * verdict table; c04 ends where c01 does, at an AUDITED ARCHIVE:
@@ -661,24 +641,16 @@ object Pipeline {
     * the landed directory.
     */
   private def ensurePairsLanded(s: org.apache.spark.sql.SparkSession,
-      d: String, pairs: org.apache.spark.sql.DataFrame): String = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val destDir = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-      "/" + graft.engine.CatalogMemo.tableName("graft_c07_pairs", ck)
-    if (pairLandMemo.get(s.sharedState, ck).isEmpty) {
-      pairLandMemo.invalidate(s.sharedState)
+      d: String, pairs: org.apache.spark.sql.DataFrame): String =
+    pairLandMemo.buildOnce(s, d) { ck =>
+      val destDir = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
+        "/" + graft.engine.CatalogMemo.tableName("graft_c07_pairs", ck)
       val eng = new graft.engine.Engine(s)
       val dest = eng.archiveDF(pairs, destDir, "train_pairs",
         _.copy(sharded = true, format = graft.engine.Format.Parquet))
-      eng.writeManifest(dest, graft.engine.Format.Parquet)
-      val findings = eng.verifyManifest(dest)
-      require(findings.isEmpty,
-        s"graft: c07 landing failed its manifest audit: ${findings.mkString("; ")}")
-      pairLandMemo.put(s.sharedState, ck, destDir)
+      eng.writeManifestAudited(dest, graft.engine.Format.Parquet, "c07 landing")
+      destDir
     }
-    destDir
-  }
 
   /** c07: the PAIRED CROSS-MODAL capstone — the composition a
     * multimodal training run needs that no single-family entry

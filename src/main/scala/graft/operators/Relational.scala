@@ -82,7 +82,7 @@ object Relational {
     * (bench's min-of-2 therefore times the JOIN, as the entry's name
     * says; the first call still pays and times the write).
     */
-  private val bucketedLaidOut = new graft.engine.CatalogMemo[String]
+  private val bucketedLaidOut = new graft.engine.CatalogMemo[(String, String)]
 
   val q37 = QueryDef(
     "q37_bucketed_join",
@@ -90,28 +90,20 @@ object Relational {
       CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY o_orderpriority ORDER BY o_orderpriority""")) { (s, d) =>
-    val engine = new graft.engine.Engine(s)
-    // keyed by catalog, content-keyed on the source dir (CatalogMemo):
-    // a different dir — or the SAME dir rewritten in place — through
-    // the same catalog must re-lay-out (same table names, different
-    // data). The memo records success only AFTER both writes land — a
+    // the memo records the pair only AFTER both writes land — a
     // partial layout (second write throws) must retry next call, not
-    // silently join a fresh lineitem against stale orders.
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    // content-keyed physical names: concurrent processes sharing one
-    // warehouse but reading different sources cannot clobber each
-    // other's layout (CatalogMemo.tableName)
-    val bktLineitem = graft.engine.CatalogMemo.tableName("graft_bkt_lineitem", ck)
-    val bktOrders = graft.engine.CatalogMemo.tableName("graft_bkt_orders", ck)
-    if (bucketedLaidOut.get(s.sharedState, ck).isEmpty) {
-      bucketedLaidOut.invalidate(s.sharedState)
+    // silently join a fresh lineitem against stale orders
+    val (bktLineitem, bktOrders) = bucketedLaidOut.buildOnce(s, d) { ck =>
+      val names = (graft.engine.CatalogMemo.tableName("graft_bkt_lineitem", ck),
+        graft.engine.CatalogMemo.tableName("graft_bkt_orders", ck))
+      val engine = new graft.engine.Engine(s)
       engine.archiveBucketed(
         Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice"),
-        bktLineitem, "l_orderkey", 8)
+        names._1, "l_orderkey", 8)
       engine.archiveBucketed(
         Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
-        bktOrders, "o_orderkey", 8)
-      bucketedLaidOut.put(s.sharedState, ck, d)
+        names._2, "o_orderkey", 8)
+      names
     }
     // private-session conf (the d06 pattern): disable broadcast for
     // THIS query only; the catalog is SharedState-scoped, so the
@@ -151,17 +143,15 @@ object Relational {
       CAST(coalesce(sum(l_partkey), 0) AS BIGINT) AS sum_pk
       FROM lineitem
       WHERE l_partkey BETWEEN 100 AND 300 AND l_suppkey BETWEEN 10 AND 40""")) { (s, d) =>
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    if (zorderLaidOut.get(s.sharedState, ck).isEmpty) {
-      zorderLaidOut.invalidate(s.sharedState)
+    val zLineitem = zorderLaidOut.buildOnce(s, d) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName("graft_z_lineitem", ck)
       new graft.engine.Engine(s).archiveClustered(
         Tables.lineitem(s, d)
           .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity"),
-        "graft_z_lineitem", "l_partkey", "l_suppkey",
-        bloomCol = Some("l_orderkey"))
-      zorderLaidOut.put(s.sharedState, ck, d)
+        tbl, "l_partkey", "l_suppkey", bloomCol = Some("l_orderkey"))
+      tbl
     }
-    s.table("graft_z_lineitem")
+    s.table(zLineitem)
       .filter(col("l_partkey").between(100, 300) &&
         col("l_suppkey").between(10, 40))
       .agg(big(count(lit(1))).as("n"),
@@ -640,14 +630,11 @@ object Relational {
     val li = Tables.lineitem(s, d)
       .select("l_returnflag", "l_linestatus", "l_quantity",
         "l_extendedprice", "l_orderkey")
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    val mvTable = graft.engine.CatalogMemo.tableName("graft_mv_lineitem", ck)
-    if (mvBuilt.get(s.sharedState, ck).isEmpty) {
-      mvBuilt.invalidate(s.sharedState)
+    val mvTable = mvBuilt.buildOnce(s, d) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName("graft_mv_lineitem", ck)
       new graft.engine.Engine(s).archiveBucketed(
-        states(li.filter(col("l_orderkey") % 8 =!= 0)),
-        mvTable, "l_returnflag", 4)
-      mvBuilt.put(s.sharedState, ck, d)
+        states(li.filter(col("l_orderkey") % 8 =!= 0)), tbl, "l_returnflag", 4)
+      tbl
     }
     val delta = states(li.filter(col("l_orderkey") % 8 === 0))
     s.table(mvTable).unionByName(delta)
@@ -890,16 +877,13 @@ object Relational {
         CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
       FROM orders JOIN dim ON o_orderpriority = p
       GROUP BY o_orderpriority ORDER BY o_orderpriority""")) { (s, d) =>
-    val engine = new graft.engine.Engine(s)
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    val partOrders = graft.engine.CatalogMemo.tableName("graft_part_orders", ck)
-    if (partitionedLaidOut.get(s.sharedState, ck).isEmpty) {
-      partitionedLaidOut.invalidate(s.sharedState)
-      engine.archivePartitioned(
+    val partOrders = partitionedLaidOut.buildOnce(s, d) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName("graft_part_orders", ck)
+      new graft.engine.Engine(s).archivePartitioned(
         Tables.orders(s, d)
           .select("o_orderkey", "o_totalprice", "o_orderpriority"),
-        partOrders, "o_orderpriority")
-      partitionedLaidOut.put(s.sharedState, ck, d)
+        tbl, "o_orderpriority")
+      tbl
     }
     // runtime-only dim: its priorities exist only after scanning the
     // sample, so the partitioned side can't be statically pruned
@@ -1866,8 +1850,10 @@ object Relational {
     * one-scan path.
     */
   private def cteMaterializeMinBytes(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.cteMaterializeMinBytes")
-      .map(_.toLong).getOrElse(256L << 20)
+    s.conf.getOption("spark.graft.cteMaterializeMinBytes").map { v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"graft: spark.graft.cteMaterializeMinBytes must be a whole number of bytes, got '$v'"))
+    }.getOrElse(256L << 20)
 
   val q80 = QueryDef(
     "q80_min_cost_supplier",

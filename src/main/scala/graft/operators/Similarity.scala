@@ -57,17 +57,17 @@ object Similarity {
   private[operators] val duckIvfK: String =
     "ksel AS (SELECT greatest(8, CAST(floor(sqrt(count(*) / 4.0)) AS BIGINT)) AS k FROM n)"
 
-  /** Trained-coarse-quantizer memo: (catalog, source content) →
-    * tag → centroids. Round-6 bench: five operators (s04/s11/s12/
-    * s14/d11) each retrained the identical quantizer inline, ~2.5 s
+  /** Trained-coarse-quantizer memos, one per subset tag: (catalog,
+    * source content) → centroids. Round-6 bench: five operators
+    * (s04/s11/s12/s14/d11) each retrained the identical quantizer inline, ~2.5 s
     * apiece at sf0.1's k=22 — the g-family rebuild-per-operator
     * anti-pattern on the training side. One training per source
     * content, every consumer reuses it; `tag` separates quantizers
     * trained on different SUBSETS of the same source (s14's base
     * partition must not alias the full-corpus model).
     */
-  private val coarseBuilt =
-    new graft.engine.CatalogMemo[Map[String, Seq[(Long, Array[Double], Double)]]]
+  private val coarseBuilt = scala.collection.concurrent.TrieMap
+    .empty[String, graft.engine.CatalogMemo[Seq[(Long, Array[Double], Double)]]]
 
   /** Train the COARSE quantizer with the data-derived cell count —
     * the one entry point every coarse-quantizer consumer (s04–s06,
@@ -78,18 +78,9 @@ object Similarity {
     */
   private[graft] def trainCoarse(s: org.apache.spark.sql.SparkSession,
       d: String, e: org.apache.spark.sql.DataFrame, tag: String = "full")
-      : Seq[(Long, Array[Double], Double)] = {
-    val ck = graft.engine.CatalogMemo.contentKey(
-      d, s.sparkContext.hadoopConfiguration)
-    val cached = coarseBuilt.get(s.sharedState, ck).getOrElse(Map.empty)
-    cached.get(tag) match {
-      case Some(c) => c
-      case None =>
-        val c = trainQuantizer(e, ivfK(e.count()), 3)
-        if (c.nonEmpty) coarseBuilt.put(s.sharedState, ck, cached + (tag -> c))
-        c
-    }
-  }
+      : Seq[(Long, Array[Double], Double)] =
+    coarseBuilt.getOrElseUpdate(tag, new graft.engine.CatalogMemo)
+      .buildOnce(s, d, keep = _.nonEmpty)(_ => trainQuantizer(e, ivfK(e.count()), 3))
 
   /** s08: MMR (maximal-marginal-relevance) diversity re-rank — the
     * dedup-aware top-k of retrieval and training-data curation:
@@ -190,12 +181,13 @@ object Similarity {
       .orderBy("pick_rank")
   }
 
-  /** s05's build memo: catalog → (source content key, trained
-    * centroids). Same success-only discipline as q37's layout memo;
-    * identity + staleness hazards handled by [[graft.engine.CatalogMemo]].
+  /** s05's build memo: catalog → (source content key, (trained
+    * centroids, index table)). Same success-only discipline as q37's
+    * layout memo; identity + staleness hazards handled by
+    * [[graft.engine.CatalogMemo]].
     */
   private val ivfBuilt =
-    new graft.engine.CatalogMemo[Seq[(Long, Array[Double], Double)]]
+    new graft.engine.CatalogMemo[(Seq[(Long, Array[Double], Double)], String)]
 
   /** Persistent IVF index + bucket-pruned probe — the build-once /
     * query-many production shape s04 (which trains inline per query)
@@ -288,25 +280,21 @@ object Similarity {
     */
   private[operators] def ensureIvfIndex(s: org.apache.spark.sql.SparkSession,
       d: String, e: org.apache.spark.sql.DataFrame)
-      : (Seq[(Long, Array[Double], Double)], String) = {
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    val tbl = graft.engine.CatalogMemo.tableName("graft_ivf_assign", ck)
-    val cached = ivfBuilt.get(s.sharedState, ck)
-    val centroids = cached.getOrElse(trainCoarse(s, d, e))
-    if (centroids.nonEmpty && cached.isEmpty) {
-      ivfBuilt.invalidate(s.sharedState)
+      : (Seq[(Long, Array[Double], Double)], String) =
+    ivfBuilt.buildOnce(s, d, keep = _._1.nonEmpty) { ck =>
+      val tbl = graft.engine.CatalogMemo.tableName("graft_ivf_assign", ck)
+      val centroids = trainCoarse(s, d, e)
       // label rides WITH the index (one extra int per row): filtered
       // search (s17) applies its metadata predicate inside the
       // bucket-pruned index scan — a label join-back would reintroduce
       // the corpus-sized side the index exists to avoid
-      new graft.engine.Engine(s).archiveBucketed(
-        e.withColumn("cell", cellOf(centroids))
-          .select(col("vec_id"), col("cell"), col("label"), col("v"), col("nrm")),
-        tbl, "cell", ivfBuckets(centroids))
-      ivfBuilt.put(s.sharedState, ck, centroids)
+      if (centroids.nonEmpty)
+        new graft.engine.Engine(s).archiveBucketed(
+          e.withColumn("cell", cellOf(centroids))
+            .select(col("vec_id"), col("cell"), col("label"), col("v"), col("nrm")),
+          tbl, "cell", ivfBuckets(centroids))
+      (centroids, tbl)
     }
-    (centroids, tbl)
-  }
 
   /** DuckDB twins of the s04 k-means legs, composed per unrolled
     * iteration. Every float op is the bit-identical cross-engine form
@@ -789,18 +777,14 @@ object Similarity {
     * grades the codebooks the scorer ships.
     */
   private def pqCodebooks(s: org.apache.spark.sql.SparkSession, d: String,
-      e: org.apache.spark.sql.DataFrame): Seq[Seq[(Long, Array[Double], Double)]] = {
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    pqBuilt.get(s.sharedState, ck).getOrElse {
-      val trained = (0 until PqM).map { m =>
+      e: org.apache.spark.sql.DataFrame): Seq[Seq[(Long, Array[Double], Double)]] =
+    pqBuilt.buildOnce(s, d, keep = _.forall(_.nonEmpty)) { _ =>
+      (0 until PqM).map { m =>
         trainQuantizer(
           e.select(col("vec_id"), expr(s"slice(v, ${m * PqSubDim + 1}, $PqSubDim)").as("v")),
           PqK, PqRounds)
       }
-      if (trained.forall(_.nonEmpty)) pqBuilt.put(s.sharedState, ck, trained)
-      trained
     }
-  }
 
   /** DuckDB strict-fold dot over the first `n` elements (1-based). */
   private def duckDotN(a: String, b: String, n: Int): String =
@@ -1477,9 +1461,8 @@ object Similarity {
     */
   private[operators] def ensureIvfPq(s: org.apache.spark.sql.SparkSession,
       d: String, e: org.apache.spark.sql.DataFrame)
-      : (Seq[(Long, Array[Double], Double)], Seq[Seq[(Long, Array[Double], Double)]]) = {
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    ivfPqBuilt.get(s.sharedState, ck).getOrElse {
+      : (Seq[(Long, Array[Double], Double)], Seq[Seq[(Long, Array[Double], Double)]]) =
+    ivfPqBuilt.buildOnce(s, d, keep = t => t._1.nonEmpty && t._2.forall(_.nonEmpty)) { _ =>
       val c = trainCoarse(s, d, e)
       val b =
         if (c.isEmpty) Seq.empty[Seq[(Long, Array[Double], Double)]]
@@ -1490,11 +1473,8 @@ object Similarity {
               expr(s"slice(r, ${m * PqSubDim + 1}, $PqSubDim)").as("v")), PqK, PqRounds)
           }
         }
-      val t = (c, b)
-      if (c.nonEmpty && b.forall(_.nonEmpty)) ivfPqBuilt.put(s.sharedState, ck, t)
-      t
+      (c, b)
     }
-  }
 
   /** Strict left-fold dot of the driver-held query against a codebook
     * slice — the oracle's list_reduce, the driver way.

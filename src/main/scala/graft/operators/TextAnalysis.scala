@@ -939,14 +939,8 @@ object TextAnalysis {
     * See [[x14]]'s doc for the algorithm and scale design.
     */
   private[operators] def learnBpe(
-      s: org.apache.spark.sql.SparkSession, d: String): Seq[(Long, String, String, Long)] = {
-    val ck = graft.engine.CatalogMemo.contentKey(d, s.sparkContext.hadoopConfiguration)
-    bpeLearned.get(s.sharedState, ck).getOrElse {
-      val learned = trainBpe(s, d)
-      bpeLearned.put(s.sharedState, ck, learned)
-      learned
-    }
-  }
+      s: org.apache.spark.sql.SparkSession, d: String): Seq[(Long, String, String, Long)] =
+    bpeLearned.buildOnce(s, d)(_ => trainBpe(s, d))
 
   /** The BPE trainers' shared input: the char-split WORD-FREQUENCY
     * DICTIONARY (the standard trainer reduction — every pair count is

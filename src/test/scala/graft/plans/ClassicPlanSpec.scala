@@ -63,7 +63,19 @@ class ClassicPlanSpec extends SparkSpec {
       }
       assert(direct.isEmpty,
         s"gated body must not scan lineitem directly (found ${direct.size})")
-    } finally spark.conf.unset("spark.graft.cteMaterializeMinBytes")
+      // a bad value is a named error, not a bare NumberFormatException
+      spark.conf.set("spark.graft.cteMaterializeMinBytes", "256MB")
+      val e = intercept[IllegalArgumentException] {
+        graft.Registry.byName("q80_min_cost_supplier").fn(spark, dir)
+      }
+      assert(e.getMessage.contains("spark.graft.cteMaterializeMinBytes"), e.getMessage)
+    } finally {
+      spark.conf.unset("spark.graft.cteMaterializeMinBytes")
+      // the gated path cached `supply` in the shared session: leave no
+      // cached relation or view behind for later suites
+      spark.sharedState.cacheManager.clearCache()
+      spark.catalog.dropTempView("supply")
+    }
   }
 
   test("q81 (Q4): EXISTS rewrites to a left SEMI join") {
