@@ -16,8 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** Why through [[graft.sources.Sources.parquet]]: its driver-side
+    * footer read spares every table read Spark's schema-inference job.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Sources.parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

@@ -39,7 +39,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val df = stage("query") {
       if (source.startsWith("jdbc:"))
         graft.sources.Sources.jdbcTable(spark, source, table)
-      else spark.read.parquet(s"$source/$table.parquet")
+      else graft.sources.Sources.parquet(spark, s"$source/$table.parquet")
     }
     archiveDF(df, destDir, table, config)
   }
@@ -74,9 +74,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * cancellation surfaces as a stage-prefixed [[ArchiveException]]
     * and the destination object is never committed — the final object
     * appears only via a rename after a complete write, and staged
-    * parts are discarded with the job (best-effort: a straggler task
-    * outliving the abort can briefly recreate staging, the same
-    * residual-garbage caveat Spark's own file committers carry).
+    * parts are discarded with the job (the row path waits, bounded,
+    * for the job's tasks to end before it removes staging; the
+    * columnar path carries the residual-garbage caveat of Spark's own
+    * file committers).
     */
   def archiveDFCancellable(df: DataFrame, destDir: String, table: String = "table",
       config: ArchiveConfig => ArchiveConfig = identity): ArchiveJob = {
@@ -167,7 +168,11 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           val committed = new Path(f"$staging/part-$idx%05d")
           val fs = attempt.getFileSystem(bcConf.value.value)
           var any = false
-          val out = new java.io.BufferedOutputStream(fs.create(attempt, true), 1 << 20)
+          // non-recursive: staging is made by the driver, so a task
+          // that runs after a failed archive removed it fails here
+          // instead of recreating it
+          val out = new java.io.BufferedOutputStream(
+            fs.createFile(attempt).overwrite(true).build(), 1 << 20)
           try {
             // row production + formatting are chiv's download leg —
             // tag their failures at the source so the driver rethrows
@@ -223,6 +228,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       stage("upload") {
         val target = new Path(dest)
         val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.mkdirs(new Path(staging)))
+          throw new java.io.IOException(s"cannot create $staging")
         val n = stagedRdd.getNumPartitions
         val results = new Array[(Int, Boolean)](n)
         val ready = new Array[Boolean](n)
@@ -241,38 +248,70 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         }(scala.concurrent.ExecutionContext.global)
         // concatenate into a temp object INSIDE staging, then commit
         // with one rename: a failure mid-copy can never leave a
-        // truncated-but-plausible object at the exact key (the catch
-        // below removes staging, temp object included)
+        // truncated-but-plausible object at the exact key (the
+        // enclosing cleanup removes staging, temp object included)
         val tmp = new Path(s"$staging/_object")
-        val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
         try {
-          out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
-          var first = true
-          var i = 0
-          while (i < n) {
-            lock.synchronized {
-              while (!ready(i) && failure.isEmpty) lock.wait()
+          val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
+          try {
+            out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
+            var first = true
+            var i = 0
+            while (i < n) {
+              lock.synchronized {
+                while (!ready(i) && failure.isEmpty) lock.wait()
+              }
+              failure.foreach(throw _) // stage() unwraps the task's ArchiveException
+              val any = results(i)._2
+              if (any) {
+                if (!first && fmt.separator.nonEmpty)
+                  out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
+                val in = fs.open(new Path(f"$staging/part-$i%05d"))
+                try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
+                finally in.close()
+                first = false
+              }
+              i += 1
             }
-            failure.foreach(throw _) // stage() unwraps the task's ArchiveException
-            val any = results(i)._2
-            if (any) {
-              if (!first && fmt.separator.nonEmpty)
-                out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
-              val in = fs.open(new Path(f"$staging/part-$i%05d"))
-              try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
-              finally in.close()
-              first = false
-            }
-            i += 1
-          }
-          out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
-        } finally out.close()
-        fs.delete(target, false)
-        if (!fs.rename(tmp, target))
-          throw new IllegalStateException(s"rename $tmp -> $target failed")
+            out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
+          } finally out.close()
+          fs.delete(target, false)
+          if (!fs.rename(tmp, target))
+            throw new IllegalStateException(s"rename $tmp -> $target failed")
+        } catch {
+          case e: Throwable =>
+            // a driver-side failure leaves the job running: its tasks
+            // would recreate staging after the cleanup deleted it
+            cancelAndDrain(fut)
+            throw e
+        }
         fs.delete(new Path(staging), true)
       }
     }
+  }
+
+  /** Cancel `fut`'s job and wait until it has ended: the status
+    * tracker shows it finished and none of its tasks still running, so
+    * staging is not removed under a task's writes. Bounded at 30 s,
+    * since the tracker is fed asynchronously; a job the tracker has
+    * not reported within 1 s counts as never started (Spark skips a
+    * job of an already cancelled group without reporting it). A task
+    * whose start reaches the tracker only after the job's end is not
+    * waited for; the tasks' non-recursive create keeps it from
+    * recreating staging.
+    */
+  private def cancelAndDrain(fut: org.apache.spark.FutureAction[_]): Unit = {
+    fut.cancel()
+    val tracker = spark.sparkContext.statusTracker
+    val t0 = System.nanoTime()
+    def elapsedS = (System.nanoTime() - t0) / 1e9
+    def running(id: Int) = tracker.getJobInfo(id) match {
+      case Some(job) =>
+        job.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+          job.stageIds.exists(st => tracker.getStageInfo(st).exists(_.numActiveTasks > 0))
+      case None => elapsedS < 1.0
+    }
+    while ((!fut.isCompleted || fut.jobIds.exists(running)) && elapsedS < 30.0) Thread.sleep(10)
   }
 
   /** Run `body`; on ANY failure best-effort delete the staging path

@@ -85,7 +85,7 @@ object MultimodalPipeline {
     */
   def assetsFromDocuments(spark: SparkSession, dir: String): Dataset[Asset] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir)
       .select(
         col("doc_id").as("asset_id"),
         // deterministic modality assignment, 3 classes
@@ -110,7 +110,7 @@ object MultimodalPipeline {
     // documents scan is one task, and encode/decode is the cost (the
     // ids crossing the exchange are 8 bytes/row) — guide §2.5
     graft.Tables.spreadForCompute(
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
+      graft.Tables.documents(spark, dir).select(col("doc_id")),
       col("doc_id")).as[Long]
       .map { id =>
         val (w, h) = ImageCodecs.dims(id)
@@ -137,7 +137,7 @@ object MultimodalPipeline {
     // and pay contention on top of serialization. The production shape
     // plugs a native (lock-free) decoder into the same batch seam, and
     // THEN the imageAssets spread applies verbatim.
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables.documents(spark, dir)
       .select(col("doc_id")).as[Long]
       .map { id =>
         Asset(id, "audio", AudioCodecs.encode(id),
@@ -154,7 +154,7 @@ object MultimodalPipeline {
     import spark.implicits._
     // id-scan spread before the codec map (see imageAssets)
     graft.Tables.spreadForCompute(
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
+      graft.Tables.documents(spark, dir).select(col("doc_id")),
       col("doc_id")).as[Long]
       .map { id =>
         Asset(id, "video", VideoCodecs.encode(id), VideoCodecs.nFrames(id), 0)

@@ -1,8 +1,15 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 import java.util.Properties
+import scala.util.control.NonFatal
 
 /** Source surface (SURVEY.md §2.1). The reference reads exactly one
   * kind of source — a `database/sql` cursor over Postgres/MariaDB
@@ -51,9 +58,71 @@ object Sources {
 
   /** File sources (S6): self-describing parquet, header'd CSV with
     * schema inference or an explicit DDL schema, JSON lines.
+    *
+    * `parquet` is the one plain-parquet reader. Why: Spark infers a
+    * missing schema through a one-task job; reading that footer on the
+    * driver ([[footerSchema]]) spares every table read and archive it.
+    * Layouts it leaves to Spark fall back to the plain read.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** The schema Spark's inference would give a plain read of `path`
+    * (`ParquetUtils.inferSchema` with `mergeSchema` off), from one
+    * footer read on the driver. It picks the file inference reads:
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * sorted path, among the entries the file index keeps. `None` for
+    * every case it leaves to Spark: a glob, `mergeSchema` on, a
+    * missing or hidden path, a directory with sub-directories (nested
+    * or `k=v` partitioned), a streaming sink's output, no data file,
+    * an unreadable footer, or an empty schema.
+    */
+  private[sources] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      val rootStatus = fs.getFileStatus(root)
+      val leaves =
+        if (rootStatus.isFile) Option.when(!hidden(root.getName))(Seq(rootStatus))
+        else {
+          val children = fs.listStatus(root).toSeq
+          val kept = children.filterNot(c => hidden(c.getPath.getName))
+          val streamSink = children.exists(_.getPath.getName == "_spark_metadata")
+          if (streamSink || kept.exists(_.isDirectory)) None else Some(kept)
+        }
+      leaves.flatMap { files =>
+        val sorted = files.sortBy(_.getPath.toString)
+        summaryFiles.flatMap(n => sorted.find(_.getPath.getName == n)).headOption
+          .orElse(sorted.find(f => !summaryFiles.contains(f.getPath.getName)))
+      }.map { file =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        // the converter inference builds (`mergeSchemasInParallel`):
+        // these five settings from the session, the rest at defaults
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
+      }.filter(_.nonEmpty)
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Summary files, in the order inference prefers them. */
+  private val summaryFiles =
+    Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** Names the file index leaves out (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hidden(name: String): Boolean = {
+    val exclude = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    exclude && !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
+  }
 
   /** Parquet read across an EVOLVING schema: union the footer schemas
     * of every file (`mergeSchema`), so a column added mid-history is

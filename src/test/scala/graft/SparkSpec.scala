@@ -19,6 +19,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
 
+  /** The smallest testdata scale (TESTDATA.md). */
+  val sf0001: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` and returns its value with the number of Spark jobs
+    * it submitted, counted by a listener once the bus has drained.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def afterAll(): Unit = {
     // one JVM-wide session across suites; do not stop between suites
     super.afterAll()

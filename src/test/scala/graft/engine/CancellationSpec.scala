@@ -120,6 +120,36 @@ class CancellationSpec extends SparkSpec {
     }
   }
 
+  test("a driver-side concat failure cancels the staged job: no staging residue, no active job, key untouched") {
+    import spark.implicits._
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    hconf.setBoolean("fs.faulty.impl.disable.cache", true)
+    try {
+      val out = Files.createTempDirectory("graft-faulty")
+      val key = out.resolve("t.csv")
+      Files.writeString(key, "previous archive\n")
+      // 8 slow partitions on 4 cores: tasks are still running and
+      // queued when the driver fails to create the temp object
+      val slow = org.apache.spark.sql.functions.udf { (i: Long) =>
+        Thread.sleep(20L); i
+      }
+      val df = spark.range(0, 160, 1, 8).toDF("id").withColumn("id", slow($"id"))
+      val e = intercept[ArchiveException] {
+        new Engine(spark).archiveDF(df, s"faulty://$out", "t")
+      }
+      assert(e.getMessage.startsWith("graft: upload: "), e.getMessage)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+      Thread.sleep(1000) // time for a surviving task to recreate staging
+      val names = out.toFile.list().toList
+      assert(names == List("t.csv"), s"residue: $names")
+      assert(Files.readString(key) == "previous archive\n")
+    } finally {
+      hconf.unset("fs.faulty.impl")
+      hconf.unset("fs.faulty.impl.disable.cache")
+    }
+  }
+
   test("cancellable API completes normally when not cancelled") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-cancel").toString

@@ -147,6 +147,18 @@ class EngineSpec extends SparkSpec {
     assert(content.linesIterator.size == 6) // header + 5 regions
   }
 
+  test("archiving an sf0.001 table submits exactly one Spark job, single CSV and sharded Parquet") {
+    // a new driver-side job (a schema probe, a count) fails here
+    val dir = tmpDir.toString
+    val single = jobsDuring(new Engine(spark).archive(sf0001, "orders", dir))
+    assert(single._2 == 1, s"single CSV object: ${single._2} jobs")
+    val sharded = jobsDuring(new Engine(spark, ArchiveConfig(format = Format.Parquet, sharded = true))
+      .archive(sf0001, "orders", dir))
+    assert(sharded._2 == 1, s"sharded Parquet archive: ${sharded._2} jobs")
+    assert(spark.read.parquet(sharded._1).count() ==
+      spark.read.parquet(s"$sf0001/orders.parquet").count())
+  }
+
   test("columnar formats: exact-key parquet object round-trips") {
     val dir = tmpDir
     val dest = new Engine(spark, ArchiveConfig(format = Format.Parquet))

@@ -100,7 +100,7 @@ class ZorderSpec extends SparkSpec {
     // the probe key (l_orderkey) is uncorrelated with the Z-order sort,
     // so min/max stats barely help — the bloom filter does the pruning
     val probe = spark.table("graft_zspec_clustered").select("l_orderkey")
-      .limit(1).collect()(0).getLong(0)
+      .orderBy("l_orderkey").limit(1).collect()(0).getLong(0)
     val read = scanRows(
       spark.table("graft_zspec_clustered").filter(col("l_orderkey") === probe))
     val total = spark.table("graft_zspec_clustered").count()
