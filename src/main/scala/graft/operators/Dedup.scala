@@ -548,10 +548,10 @@ object Dedup {
     * CLUSTERS and pick one survivor per cluster — connected components
     * by iterative min-label propagation. Each iteration is one
     * distributed join+aggregate; components here are tiny chains so it
-    * converges in ≤ ~6 rounds (the driver loop stops at fixpoint, the
-    * standard Spark pattern for iterative graph algorithms; GraphX/
-    * Pregel would be the long-chain alternative). Oracle: recursive
-    * CTE transitive closure, provably the same min-label result.
+    * converges in ≤ ~6 rounds ([[Fixpoint.until]] stops at the
+    * fixpoint; d16/d07 are the long-chain alternatives). Oracle:
+    * recursive CTE transitive closure, provably the same min-label
+    * result.
     */
   /** The survivor-selection oracle CTE chain (J ≥ 0.5 pairs →
     * symmetric edges → recursive-CTE transitive closure), shared
@@ -583,74 +583,19 @@ object Dedup {
         SELECT a AS doc_id, least(a, min(b)) AS survivor
         FROM reach GROUP BY a)
       ORDER BY doc_id""")) { (s, d) =>
-    val pairs = neardupEdges(s, d)
-    // The whole propagation loop runs at an [[edgeParts]]-derived
-    // parallelism — sized to the MEASURED edge volume (a footer-cheap
-    // count of the memoized bucketed operand), which is orders of
-    // magnitude below the corpus (dozens of rows here; ≤ duplicate
-    // count at any scale). Materialize the edges ONCE at full
-    // parallelism (the memoized operand's FIRST consumer pays d03's
-    // heavy shingle join; later consumers read the bucketed table),
-    // then loop at the derived width. Looping at the cluster default
-    // instead schedules ~100 near-empty tasks per round — pure
-    // small-task overhead that cost 19.4 s at the driver's local[32]
-    // (round 2) for ~50 rows of actual data.
-    val nParts = edgeParts(2L * pairs.count())
-    val edges = pairs.union(pairs.select(col("db"), col("da"))).toDF("a", "b")
-      .repartition(nParts).cache()
-    edges.count()
-    // the parallelism override lives in a PRIVATE session: newSession()
-    // shares the SparkContext, cache, and catalog state but carries its
-    // own SQLConf, so queries planned concurrently on the caller's
-    // session never see the loop-sized shuffle.partitions. The
-    // materialized edge cache is reached through the RDD lineage
-    // (cache blocks are context-global).
-    val loop = s.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    val edgesLoop = loop.createDataFrame(edges.rdd, edges.schema)
-    var converged = false
+    val (edgesLoop, edges) = loopEdges(s, d)
     val nodes = edgesLoop.select(col("a").as("doc_id")).distinct()
-    // Checkpoint (eager) each round: truncates the ever-deepening
-    // lineage AND materializes `next` once, so the convergence test is
-    // a cheap count over checkpointed data instead of a third
-    // join+isEmpty job per iteration (round-1: 20 s → ~4 s at sf0.1).
-    // Superseded rounds' LOCAL checkpoint blocks are reclaimed by the
-    // ContextCleaner once unreferenced (the Dataset API exposes no
-    // explicit release for localCheckpoint storage); they are bounded
-    // by ≤ 20 rounds × one small row per clustered doc. RELIABLE
-    // checkpoint files are NOT auto-reclaimed unless the cluster sets
-    // spark.cleaner.referenceTracking.cleanCheckpoints=true — with the
-    // default false they persist for the app's lifetime, ≤ 20 small
-    // dirs per run; a production deployment should set that conf or
-    // point spark.graft.checkpointDir at a TTL'd path.
-    //
-    // TWO checkpoint modes: localCheckpoint keeps blocks in EXECUTOR
-    // storage only — fastest, right for local mode, but an executor
-    // loss mid-loop is unrecoverable. Setting `spark.graft.checkpointDir`
-    // (or SparkContext.setCheckpointDir) switches the loop to RELIABLE
-    // checkpoint(): each round's labels persist to the configured
-    // fault-tolerant filesystem and survive executor loss — the
-    // cluster-production setting (DeterminismSpec pins both modes to
-    // the same oracle rows; d07, the GraphX twin, remains the
-    // recommended default at scale regardless).
-    val ckpt = loopCkpt(s)
-    var labels = ckpt(nodes.withColumn("lbl", col("doc_id")))
-    var iter = 0
-    while (!converged && iter < 20) {
+    // `changed` rides the state: `done` counts the truncated round
+    // instead of a third join per round (OPTIMIZATION_r09.md §1)
+    val labels = Fixpoint.until(s, nodes.withColumn("lbl", col("doc_id")), 20,
+        "d06 label propagation") { prev =>
+      val labels = prev.drop("changed")
       val neighborMin = edgesLoop.join(labels, edgesLoop("b") === labels("doc_id"))
         .groupBy(edgesLoop("a").as("doc_id")).agg(min("lbl").as("nlbl"))
-      val next = ckpt(labels.join(neighborMin, "doc_id")
+      labels.join(neighborMin, "doc_id")
         .select(col("doc_id"), least(col("lbl"), col("nlbl")).as("lbl"),
-          (col("nlbl") < col("lbl")).as("changed")))
-      converged = next.where(col("changed")).count() == 0L
-      labels = next.drop("changed")
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"graft: d06 label propagation did not converge in $iter iterations " +
-          "(component diameter exceeds the cap — raise it or switch to the " +
-          "large-star/small-star variant)")
+          (col("nlbl") < col("lbl")).as("changed"))
+    }(_.where(col("changed")).count() == 0L).drop("changed")
     edges.unpersist(blocking = false)
     labels
       .select(col("doc_id"), col("lbl").as("survivor"),
@@ -658,10 +603,9 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** d16: the DataFrame-native O(log d) components — the variant
-    * d06's non-convergence error message tells you to reach for, now
-    * shipped: min-label propagation (d06's round) FUSED with POINTER
-    * JUMPING — after each propagation, l(u) ← l(l(u)) via one
+  /** d16: the DataFrame-native O(log d) components — the variant to
+    * reach for when d06 hits its round cap: min-label propagation
+    * (d06's round) FUSED with POINTER JUMPING — after each propagation, l(u) ← l(l(u)) via one
     * label-table self-join, so label paths HALVE every round and a
     * diameter-d chain converges in O(log d) rounds where d06 needs d.
     * Unlike d07 this stays entirely in DataFrames (Catalyst-planned,
@@ -670,21 +614,13 @@ object Dedup {
     * as everything else. Third independent implementation over d06's
     * exact near-dup graph, hash-checked against the SAME recursive
     * ground truth oracle; loop disciplines are d06's verbatim
-    * ([[edgeParts]] volume-derived width in a private session,
-    * eager checkpoint per round with the reliable-mode
-    * escape hatch, sum-of-labels unchanged ⇒ converged — labels only
-    * ever decrease, so an unchanged exact BIGINT sum IS the fixed
-    * point, one cheap agg instead of a join-based change test).
+    * ([[loopEdges]], [[Fixpoint.until]], sum-of-labels unchanged ⇒
+    * converged — labels only ever decrease, so an unchanged exact
+    * BIGINT sum IS the fixed point, one cheap agg instead of a
+    * join-based change test).
     */
   val d16 = QueryDef("d16_cc_pointer_jumping", d06.oracle) { (s, d) =>
-    val pairs = neardupEdges(s, d)
-    val nParts = edgeParts(2L * pairs.count())
-    val edges = pairs.union(pairs.select(col("db"), col("da"))).toDF("a", "b")
-      .repartition(nParts).cache()
-    edges.count()
-    val loop = s.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    val edgesLoop = loop.createDataFrame(edges.rdd, edges.schema)
+    val (edgesLoop, edges) = loopEdges(s, d)
     val (labels, _) = ccPointerJump(s, edgesLoop)
     edges.unpersist(blocking = false)
     labels
@@ -693,17 +629,24 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** The d06/d16 checkpoint discipline, ONE definition: honour
-    * `spark.graft.checkpointDir` (reliable mode — per-round labels
-    * survive executor loss) when set, else executor-local blocks.
-    * See d06's scaladoc for the full mode discussion.
+  /** The d06/d16 loop operand: the symmetric near-dup edges (a, b),
+    * cached once at full parallelism, then read through a private
+    * `newSession()` whose shuffle.partitions is the [[edgeParts]]
+    * width of the measured edge count — the caller's session never
+    * sees the override, and the loop schedules no near-empty
+    * default-width tasks (19.4 s → ~2.3 s at local[32], SURVEY.md
+    * §7.2.3). Returns (loop-session edge frame, cached frame to
+    * unpersist).
     */
-  private def loopCkpt(s: SparkSession): DataFrame => DataFrame = {
-    s.conf.getOption("spark.graft.checkpointDir")
-      .filter(_ => s.sparkContext.getCheckpointDir.isEmpty)
-      .foreach(s.sparkContext.setCheckpointDir)
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    df => if (reliable) df.checkpoint() else df.localCheckpoint()
+  private def loopEdges(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val pairs = neardupEdges(s, d)
+    val nParts = edgeParts(2L * pairs.count())
+    val edges = pairs.union(pairs.select(col("db"), col("da"))).toDF("a", "b")
+      .repartition(nParts).cache()
+    edges.count()
+    val loop = s.newSession()
+    loop.conf.set("spark.sql.shuffle.partitions", nParts.toString)
+    (loop.createDataFrame(edges.rdd, edges.schema), edges)
   }
 
   /** The pointer-jumping loop over ANY symmetric (a, b) edge frame —
@@ -713,13 +656,10 @@ object Dedup {
     */
   private[operators] def ccPointerJump(s: SparkSession,
       edgesLoop: DataFrame, maxRounds: Int = 8): (DataFrame, Int) = {
-    val ckpt = loopCkpt(s)
-    var labels = ckpt(edgesLoop.select(col("a").as("u")).distinct()
-      .withColumn("l", col("u")))
+    val init = edgesLoop.select(col("a").as("u")).distinct().withColumn("l", col("u"))
     var prevSum = Option.empty[Long]
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxRounds) {
+    var rounds = 0
+    val labels = Fixpoint.until(s, init, maxRounds, "d16 pointer jumping") { labels =>
       // (1) d06's neighbor-min propagation round. Both union branches
       // re-aliased via toDF: they share `labels`' attribute ids, and
       // Union's constraint rewriting chokes on the overlap
@@ -730,24 +670,21 @@ object Dedup {
         .groupBy("u").agg(min("l").as("l"))
       // (2) pointer jumping: every label is itself a node with a
       // label, so one self-join halves every remaining label path
-      val next = ckpt(prop.as("x")
+      prop.as("x")
         .join(prop.select(col("u").as("pu"), col("l").as("pl")).as("y"),
           col("x.l") === col("pu"))
-        .select(col("x.u").as("u"), col("pl").as("l")))
+        .select(col("x.u").as("u"), col("pl").as("l"))
+    } { next =>
       // coalesce: an empty edge set aggregates zero label rows — the
       // sum must read 0 (converged), not NULL (getLong crash)
       val sum = next.agg(coalesce(
         org.apache.spark.sql.functions.sum("l"), lit(0L))).head().getLong(0)
-      converged = prevSum.contains(sum)
+      rounds += 1
+      val converged = prevSum.contains(sum)
       prevSum = Some(sum)
-      labels = next
-      iter += 1
+      converged
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"graft: d16 pointer jumping did not converge in $iter rounds — " +
-          s"effective diameter past 2^$maxRounds indicates a corrupt edge set")
-    (labels, iter)
+    (labels, rounds)
   }
 
   /** GraphX twin of d06: the same survivor selection through Pregel

@@ -53,46 +53,6 @@ object Graph {
 
   private val Iters = 6
 
-  /** Lineage-truncation point shared by every fixpoint loop in this
-    * family: EAGER localCheckpoint, reverted from r8's lazy variant
-    * by the r9 verdict-ordered A/B. Two independent interleaved
-    * toggle-only probes at local[32]/sf0.1 (5 reps each, entries
-    * g01/g02/g05/g07/g08/g12): lazy never reproducibly wins its min,
-    * and its distribution is wider and right-shifted on the loops
-    * whose round body references the state TWICE (the union-shaped
-    * BFS/SSSP/harmonic rounds: g05 lazy median 5.0 s vs eager 3.9 s;
-    * g07 5.0 vs 4.1) — a lazily-checkpointed frame there hands an
-    * UNPERSISTED RDD to two AQE query stages that materialize
-    * concurrently, so both recompute it ("Block rdd_N_0 already
-    * exists" warnings, and the suspected driver-box g01 25.5 s
-    * pathology of round 8). Eager costs one extra scheduled job per
-    * truncation (g01: 17 vs 13 jobs) and still measures flat-to-
-    * better; stability wins.
-    */
-  private[operators] def truncate(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    df.localCheckpoint(true)
-
-  /** Truncation cadence: checkpoint at the FINAL round, and at every
-    * 3rd round when at least two more rounds follow. Shipped from the
-    * r9 interleaved cadence A/B (2 vs 3 vs budget, 5 reps, local[32],
-    * sf0.1): each eager materialization is a scheduled job on
-    * node-sized state, so fewer truncations win wherever plan depth
-    * allows — every-3rd beat the r8 every-2nd on the 6-round loops
-    * (g01 min 2.84 s vs 3.31, g02 3.79 vs 4.43), final-only won the
-    * 4-round loops (g07 3.59 vs 3.79; g05 tie 3.26 vs 3.34) and g12
-    * (2.52 vs 3.02) — while a multiple-of-3 truncation ADJACENT to
-    * the final one (rounds = 4 under plain every-3rd: truncate at 3
-    * AND 4) measured WORST (g05 3.66), hence the ≥2-rounds-remaining
-    * guard. Depth between truncations stays ≤ 4 for ANY round
-    * budget, bounding the plan-copy blowup of union-shaped rounds
-    * (state referenced 2–3× per round duplicates the untruncated
-    * subtree per reference; exchanges are reused at execution, but
-    * analysis cost is per-copy).
-    */
-  private[operators] def shouldTruncate(i: Int, rounds: Int): Boolean =
-    i == rounds || (i % 3 == 0 && rounds - i >= 2)
-
   /** g01: fixed-point PageRank over the customer↔supplier fulfilment
     * graph (edge ⇔ supplier shipped a line of the customer's order,
     * deduplicated; undirected so there are no dangling sinks and the
@@ -103,11 +63,10 @@ object Graph {
     * shuffle (orders⋈lineitem then DISTINCT) — and persisted with its
     * precomputed out-degrees; each iteration is then one
     * partial+final aggregation of `ued ⋈ ranks` on the destination
-    * key. Rank state is 16 bytes/node. Lineage is truncated per round
-    * (localCheckpoint, the q46/x14 lesson) so Catalyst analysis cost
-    * stays flat. d07 shows the same loop on GraphX Pregel; this form
-    * keeps the whole iteration inside Tungsten rows and needs no
-    * vertex-program serialization.
+    * key. Rank state is 16 bytes/node; rounds run in
+    * [[Fixpoint.iterate]]. d07 shows the same loop on GraphX Pregel;
+    * this form keeps the whole iteration inside Tungsten rows and
+    * needs no vertex-program serialization.
     */
   val g01 = QueryDef(
     "g01_pagerank",
@@ -213,26 +172,14 @@ object Graph {
     // saved small-task scheduling. d06's edge set is dozens of rows;
     // g01's is fact-shaped — the trick only pays when the looped data
     // is tiny relative to task overhead.
-    var r = truncate(deg.select(col("id"), lit(MassUnit).as("r")))
-    for (i <- 1 to Iters) {
-      r = ued.join(r, ued("src") === r("id"))
+    Fixpoint.iterate(s, deg.select(col("id"), lit(MassUnit).as("r")), Iters) { r =>
+      ued.join(r, ued("src") === r("id"))
         .groupBy(col("dst"))
         .agg(expr(
           s"CAST(${MassUnit * 15 / 100} AS BIGINT) + (CAST(85 AS BIGINT) * sum(r div d)) div 100")
           .as("r"))
         .withColumnRenamed("dst", "id")
-      // lineage truncation (q46/x14 lesson): each eager checkpoint is
-      // a scheduled job on node-sized state, so the cadence is chosen
-      // to minimize materialization count within a bounded plan depth
-      // — [[shouldTruncate]] has the r9 cadence A/B; [[truncate]] has
-      // the r9 eager-vs-lazy A/B (lazy reverted: unpersisted
-      // checkpoint RDDs recompute under concurrent AQE stages). Loops
-      // that COUNT their state each round (q46, d16) keep their own
-      // eager per-round semantics — there the count is the
-      // materializer.
-      if (shouldTruncate(i, Iters)) r = truncate(r)
     }
-    r
   }
 
   /** g02: PERSONALIZED PageRank — the seed-biased variant ("how
@@ -289,17 +236,13 @@ object Graph {
     val seedCase = when(
       col("dst") >= SuppBase && (col("dst") - SuppBase) % 5 === 0, lit(t))
       .otherwise(lit(0L))
-    var r = truncate(deg.select(col("id"), lit(MassUnit).as("r")))
-    for (i <- 1 to Iters) {
-      r = ued.join(r, ued("src") === r("id"))
+    Fixpoint.iterate(s, deg.select(col("id"), lit(MassUnit).as("r")), Iters) { r =>
+      ued.join(r, ued("src") === r("id"))
         .groupBy(col("dst"))
         .agg(expr("(CAST(85 AS BIGINT) * sum(r div d)) div 100").as("flow"))
         .select(col("dst").as("id"),
           (seedCase.alias("tpv") + col("flow")).as("r"))
-      // truncation cadence: see shouldTruncate (r9 measured policy)
-      if (shouldTruncate(i, Iters)) r = truncate(r)
-    }
-    r.select(col("id").as("node_id"),
+    }.select(col("id").as("node_id"),
         when(col("id") >= SuppBase, lit("supplier"))
           .otherwise(lit("customer")).as("node_type"),
         (col("id") >= SuppBase && (col("id") - SuppBase) % 5 === 0)
@@ -552,7 +495,7 @@ object Graph {
     * Scale shape: per round ONE degree aggregation + two semi joins
     * against the survivor set (AQE broadcasts it when small); state
     * is the edge list alone, partitions sized to edge volume (the d06
-    * sizing argument), lineage truncated per round. A production
+    * sizing argument), rounds in [[Fixpoint.iterate]]. A production
     * fixpoint loop would add a cheap `count()` convergence check per
     * round; the registry entry pins rounds for oracle replay.
     */
@@ -604,10 +547,11 @@ object Graph {
     *
     * Scale shape: per round ONE join of the persisted edge operand
     * against node-sized state (16 B/node) + one min-aggregation —
-    * the g01 loop shape with min instead of sum; lineage truncated
-    * per round. Distances are monotone non-increasing per node, so
-    * at a fixpoint extra rounds are no-ops (the g04 microbench
-    * "over-provisioning is safe" argument applies verbatim).
+    * the g01 loop shape with min instead of sum, in
+    * [[Fixpoint.iterate]]. Distances are monotone non-increasing per
+    * node, so at a fixpoint extra rounds are no-ops (the g04
+    * microbench "over-provisioning is safe" argument applies
+    * verbatim).
     */
   private[operators] val BfsRounds = 4
 
@@ -633,18 +577,15 @@ object Graph {
       dist
     FROM h$BfsRounds ORDER BY dist, node_id""")) { (s, d) =>
     val (ued, deg) = fulfilmentGraph(s, d)
-    var dist = truncate(deg
+    val seeds = deg
       .filter(col("id") >= SuppBase && (col("id") - SuppBase) % 5 === 0)
-      .select(col("id"), lit(0L).as("dist")))
-    for (i <- 1 to BfsRounds) {
+      .select(col("id"), lit(0L).as("dist"))
+    Fixpoint.iterate(s, seeds, BfsRounds) { dist =>
       val prop = ued.join(dist, ued("src") === dist("id"))
         .select(ued("dst").as("id"), (col("dist") + 1L).as("dist"))
-      dist = dist.unionByName(prop)
+      dist.unionByName(prop)
         .groupBy("id").agg(min("dist").as("dist"))
-      // truncation cadence: see shouldTruncate (r9 measured policy)
-      if (shouldTruncate(i, BfsRounds)) dist = truncate(dist)
-    }
-    dist.select(col("id").as("node_id"),
+    }.select(col("id").as("node_id"),
         when(col("id") >= SuppBase, lit("supplier"))
           .otherwise(lit("customer")).as("node_type"),
         col("dist"))
@@ -702,7 +643,7 @@ object Graph {
     * state + one min-aggregation — with state |reached| · |pivots|
     * rows (the pivot budget is the knob: at 100 TB you size pivots
     * to the state you can hold, and the estimator stays unbiased);
-    * lineage truncated on the g01 half-rate cadence; the readout is
+    * rounds in [[Fixpoint.iterate]]; the readout is
     * one node-keyed aggregate of the final state.
     */
   val g12 = QueryDef(
@@ -754,17 +695,13 @@ object Graph {
       rounds: Int): org.apache.spark.sql.DataFrame = {
     val caseExpr = "CASE dist " + (1 to rounds)
       .map(d => s"WHEN $d THEN ${harmonicInvNano(d)}").mkString(" ") + " END"
-    var h = truncate(pivots
-      .select(col("id"), col("id").as("pivot"), lit(0L).as("dist")))
-    for (i <- 1 to rounds) {
+    val init = pivots.select(col("id"), col("id").as("pivot"), lit(0L).as("dist"))
+    Fixpoint.iterate(ue.sparkSession, init, rounds) { h =>
       val prop = ue.join(h, ue("src") === h("id"))
         .select(ue("dst").as("id"), col("pivot"), (col("dist") + 1L).as("dist"))
-      h = h.unionByName(prop)
+      h.unionByName(prop)
         .groupBy("id", "pivot").agg(min("dist").as("dist"))
-      // truncation cadence: see shouldTruncate (r9 measured policy)
-      if (shouldTruncate(i, rounds)) h = truncate(h)
-    }
-    h.where(col("dist") >= 1)
+    }.where(col("dist") >= 1)
       .groupBy("id")
       .agg(count(lit(1)).as("n_pivots_reached"),
         expr(s"CAST(sum($caseExpr) AS BIGINT)").as("harmonic_nano"))
@@ -821,19 +758,16 @@ object Graph {
       e.unionByName(
         e.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     }
-    var dist = truncate(ue
+    val seeds = ue
       .filter(col("src") >= SuppBase && (col("src") - SuppBase) % 5 === 0)
       .select(col("src").as("id")).distinct()
-      .select(col("id"), lit(0L).as("dist")))
-    for (i <- 1 to SsspRounds) {
+      .select(col("id"), lit(0L).as("dist"))
+    Fixpoint.iterate(s, seeds, SsspRounds) { dist =>
       val relaxed = ue.join(dist, ue("src") === dist("id"))
         .select(ue("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("id").agg(min("dist").as("dist"))
-      // truncation cadence: see shouldTruncate (r9 measured policy)
-      if (shouldTruncate(i, SsspRounds)) dist = truncate(dist)
-    }
-    dist.select(col("id").as("node_id"),
+    }.select(col("id").as("node_id"),
         when(col("id") >= SuppBase, lit("supplier"))
           .otherwise(lit("customer")).as("node_type"),
         col("dist"))
@@ -966,13 +900,10 @@ object Graph {
       e.select(col("da").as("id"))
         .unionByName(e.select(col("db").as("id")))
         .groupBy("id").agg(count(lit(1)).as("c"))
-    var e = truncate(e0)
-    for (i <- 1 to rounds) {
+    val e = Fixpoint.iterate(e0.sparkSession, e0, rounds) { e =>
       val keep = degrees(e).filter(col("c") >= k).select("id")
-      e = e.join(keep, e("da") === keep("id"), "left_semi")
+      e.join(keep, e("da") === keep("id"), "left_semi")
         .join(keep, e("db") === keep("id"), "left_semi")
-      // truncation cadence: see shouldTruncate (r9 measured policy)
-      if (shouldTruncate(i, rounds)) e = truncate(e)
     }
     degrees(e).select(col("id").as("doc_id"), col("c").cast("long").as("core_degree"))
   }
@@ -1051,8 +982,8 @@ object Graph {
     * Scale shape: per round ONE edge⋈labels shuffle + a two-level
     * aggregation — partial+final counts on (node, label), then a
     * partial+final max_by argmax on node — NO per-node window sort;
-    * label state is 16 bytes/node, lineage truncated per round
-    * (localCheckpoint, the g01/q46 lesson). The same round is GraphX
+    * label state is 16 bytes/node, rounds in [[Fixpoint.iterate]].
+    * The same round is GraphX
     * Pregel's LPA step; this form keeps it in Tungsten rows.
     */
   /** The g08 oracle's shared WITH-chain — rare-part co-purchase
@@ -1141,21 +1072,18 @@ object Graph {
       : org.apache.spark.sql.DataFrame = {
     val ue = pairs.unionByName(
       pairs.select(col("dst").as("src"), col("src").as("dst"))).persist()
-    var lbl = truncate(ue.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl")))
-    for (i <- 1 to rounds) {
+    val init = ue.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl"))
+    Fixpoint.iterate(pairs.sparkSession, init, rounds) { lbl =>
       // neighbor-label counts (partial+final), then argmax by
       // (cnt desc, lbl asc) as max_by over (cnt, -lbl) — two hash
       // aggregations, no window sort over the adjacency
-      lbl = ue.join(lbl, ue("dst") === lbl("id"))
+      ue.join(lbl, ue("dst") === lbl("id"))
         .groupBy(ue("src").as("nid"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("nid").as("id"))
         .agg(max_by(col("lbl"), struct(col("cnt"), -col("lbl"))).as("lbl"))
-      // truncation cadence: see shouldTruncate (r9 measured policy)
-      if (shouldTruncate(i, rounds)) lbl = truncate(lbl)
     }
-    lbl
   }
 
   /** g09: MODULARITY of the g08 partition — the graph family's EVAL

@@ -323,7 +323,7 @@ object Relational {
     // ~1% of rows) is cached lazily — the bloom-build subquery job
     // populates it, the semi join reads it back — so the filter and
     // xxhash64 run once; round 2's two scalar-subquery + semi-join
-    // scans repeated both per leg. (Eager localCheckpoint was tried
+    // scans repeated both per leg. (An eager checkpoint was tried
     // and is slower here: it serializes a third job just to
     // materialize. MEMORY_AND_DISK + the per-query clearCache in
     // Bench/Verify bound the cache's lifetime.)
@@ -544,11 +544,9 @@ object Relational {
     * set). Pointer doubling instead composes the ancestor map with
     * itself each round — after i rounds every node points 2^i hops
     * up — so the loop ends in ceil(log₂ depth) shuffles (~5 here,
-    * measured) over a state of exactly ONE row per node. Each round
-    * is `localCheckpoint`ed: lineage stays flat (the x14 lesson —
-    * unchecked iterative plans double Catalyst analysis cost per
-    * round) and the convergence test is a cheap count over
-    * materialized rows. Settled rows keep joining (their ancestor is
+    * measured) over a state of exactly ONE row per node, in
+    * [[Fixpoint.until]]: the convergence test is a cheap count over
+    * the truncated round. Settled rows keep joining (their ancestor is
     * a root whose self-edge contributes dist 0), so no row ever
     * leaves the loop — there is no growing "done" union to re-merge.
     */
@@ -575,22 +573,16 @@ object Relational {
       when(col("node") <= roots, lit(0L)).otherwise(lit(1L)).as("dist"))
       // settled ⇔ anc is a root ⇔ (anc, dist) = (root(node), depth(node))
       .withColumn("settled", col("anc") <= roots)
-    var state = init.localCheckpoint()
-    var pending = state.filter(!col("settled")).count()
-    var iter = 0
-    while (pending > 0 && iter < 40) { // 40 ⇒ depths to 2^40 — unreachable
+    // 40 rounds ⇒ depths to 2^40: hitting the cap means a cyclic forest
+    Fixpoint.until(s, init, 40, "q46 pointer doubling") { state =>
       val m = state.select(col("node").as("m_node"), col("anc").as("m_anc"),
         col("dist").as("m_dist"), col("settled").as("m_settled"))
-      state = state.join(m, col("anc") === col("m_node"))
+      state.join(m, col("anc") === col("m_node"))
         .select(col("node"),
           when(col("settled"), col("anc")).otherwise(col("m_anc")).as("anc"),
           when(col("settled"), col("dist")).otherwise(col("dist") + col("m_dist")).as("dist"),
           (col("settled") || col("m_settled")).as("settled"))
-        .localCheckpoint()
-      pending = state.filter(!col("settled")).count()
-      iter += 1
-    }
-    state.select(col("node"), col("anc").as("root"), col("dist").as("depth"))
+    }(_.filter(!col("settled")).count() == 0L).select(col("node"), col("anc").as("root"), col("dist").as("depth"))
       .orderBy("node")
   }
 

@@ -1002,15 +1002,8 @@ object TextAnalysis {
     val (dict, parts) = bpeDict(s, d)
     val rows = scala.collection.mutable.ListBuffer[(Long, String, String, Long)]()
     // rolling state: `cur` holds the dictionary with all learned rules
-    // APPLIED. Each generation is localCheckpoint(eager)-ed: chained
-    // typed maps grow the Catalyst plan per generation and
-    // analysis/cache-lookup cost DOUBLES per iteration past ~10 rules
-    // (measured: 0.25 s/iter → 13 s/iter by rule 16); truncating
-    // lineage to a materialized RDD keeps every iteration O(vocab) and
-    // plan-size O(1). (For executor-loss safety on a real cluster,
-    // set a checkpoint dir and swap in reliable checkpoint() — the
-    // d06 option.)
-    var cur = dict.repartition(parts).localCheckpoint(true)
+    // APPLIED, truncated per generation (OPTIMIZATION_r09.md §1)
+    var cur = Fixpoint.truncate(s, dict.repartition(parts))
     var rank = 1
     var done = false
     while (!done && rank <= BpeMerges) {
@@ -1021,8 +1014,8 @@ object TextAnalysis {
         val r = top(0)
         val (a, b) = (r.getString(0), r.getString(1))
         rows += ((rank.toLong, a, b, r.getLong(2)))
-        cur = cur.map { case (ts, n) => (BpeKernel.applyMerge(ts, a, b), n) }
-          .localCheckpoint(true)
+        cur = Fixpoint.truncate(s,
+          cur.map { case (ts, n) => (BpeKernel.applyMerge(ts, a, b), n) })
         rank += 1
       }
     }
@@ -1146,7 +1139,7 @@ object TextAnalysis {
     Some(bpeBatchOracle(BpeBatchRounds))) { (s, d) =>
     import s.implicits._
     val (dict, parts) = bpeDict(s, d)
-    var cur = dict.repartition(parts).localCheckpoint(true)
+    var cur = Fixpoint.truncate(s, dict.repartition(parts))
     val out = scala.collection.mutable.ListBuffer[(Long, Long, String, String, Long)]()
     var rank = 1L
     for (round <- 1 to BpeBatchRounds) {
@@ -1162,8 +1155,8 @@ object TextAnalysis {
         // token feed another rule whose symbol equals the
         // concatenation, diverging from the oracle's pre-round marking
         val rules = sel.map(r => (r.getString(0), r.getString(1))).toSet
-        cur = cur.map { case (ts, n) => (BpeKernel.applyBatch(ts, rules), n) }
-          .localCheckpoint(true)
+        cur = Fixpoint.truncate(s,
+          cur.map { case (ts, n) => (BpeKernel.applyBatch(ts, rules), n) })
       }
     }
     out.toSeq.toDF("merge_rank", "round", "w1", "w2", "c").orderBy("merge_rank")

@@ -53,25 +53,36 @@ class DeterminismSpec extends SparkSpec {
   }
 
   // the cluster-production variant: spark.graft.checkpointDir switches
-  // d06's label loop from executor-local to RELIABLE checkpoints
-  // (survives executor loss); the rows must be bit-identical. Runs
-  // LAST in this suite: SparkContext.setCheckpointDir cannot be unset
-  // on the shared session, and later d06 runs staying reliable is
-  // correct (just marginally slower).
-  test("d06 with a reliable checkpoint dir produces identical rows") {
-    val base = Registry.byName("d06_dedup_survivors").fn(spark, dir)
-      .collect().map(_.toString).toSeq
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set("spark.graft.checkpointDir", ckptDir)
-    try {
-      val reliable = Registry.byName("d06_dedup_survivors").fn(spark, dir)
-        .collect().map(_.toString).toSeq
-      assert(reliable == base)
-      // the loop really took the reliable path: checkpoint data landed
-      def anyFile(f: java.io.File): Boolean =
-        f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
-      assert(anyFile(new java.io.File(ckptDir)),
-        s"no reliable checkpoint data written under $ckptDir")
-    } finally spark.conf.unset("spark.graft.checkpointDir")
+  // every loop form (until: d06, q46; iterate: g05; truncate: x28) from
+  // executor-local to RELIABLE checkpoints (survive executor loss); the
+  // rows must be bit-identical. Runs LAST in this suite:
+  // SparkContext.setCheckpointDir cannot be unset on the shared
+  // session, and later loops staying reliable is correct (just
+  // marginally slower). So every local-mode run happens before the
+  // first reliable one, and all reliable runs share one dir.
+  private val reliableEntries = Seq("d06" -> "d06_dedup_survivors",
+    "g05" -> "g05_hop_distance", "q46" -> "q46_tree_closure", "x28" -> "x28_bpe_batch")
+  private def rowsOf(name: String): Seq[String] =
+    Registry.byName(name).fn(spark, dir).collect().map(_.toString).toSeq
+  private lazy val localRows: Map[String, Seq[String]] = {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "a checkpoint dir was set before the local-mode runs")
+    reliableEntries.map { case (_, name) => name -> rowsOf(name) }.toMap
   }
+  private lazy val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+  private def filesUnder(f: java.io.File): Int =
+    if (f.isFile) 1 else Option(f.listFiles).map(_.map(filesUnder).sum).getOrElse(0)
+
+  for ((tag, name) <- reliableEntries)
+    test(s"$tag with a reliable checkpoint dir produces identical rows") {
+      val base = localRows(name)
+      val before = filesUnder(ckptDir)
+      spark.conf.set("spark.graft.checkpointDir", ckptDir.toString)
+      try {
+        assert(rowsOf(name) == base)
+        // the loop really took the reliable path: checkpoint data landed
+        assert(filesUnder(ckptDir) > before,
+          s"no reliable checkpoint data written under $ckptDir")
+      } finally spark.conf.unset("spark.graft.checkpointDir")
+    }
 }
