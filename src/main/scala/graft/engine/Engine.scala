@@ -131,12 +131,13 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // destination (trivial via archiveDFCancellable) must not
     // interleave staged parts or delete each other's staging on their
     // own failure path; the last-wins race is then confined to the
-    // final commit. That commit is delete(target)-then-rename — a
-    // two-step window in which a concurrent committer can recreate the
-    // target (the loser's rename then fails with IllegalStateException
-    // rather than corrupting) and a reader can briefly observe the
-    // destination missing; a single-step rename-with-overwrite (where
-    // the filesystem offers one) would close it. The
+    // final commit. That commit ([[commit]]) moves the previous object
+    // aside and then renames — a two-step window in which a concurrent
+    // committer can recreate the target (the loser's rename then fails
+    // with IllegalStateException rather than corrupting) and a reader
+    // can briefly observe the destination missing; a single-step
+    // rename-with-overwrite (where the filesystem offers one) would
+    // close it. The
     // trade-off vs a fixed name: a hard driver kill (no cleanup path
     // runs) leaks a uniquely-named `.staging-*` dir instead of being
     // overwritten by the next run — the same residual class as Spark's
@@ -155,6 +156,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       val stagedRdd = stage("download") {
         val sep = fmt.separator
         df.rdd.mapPartitionsWithIndex { (idx, it) =>
+          val sepBytes = sep.getBytes(StandardCharsets.UTF_8)
           // Task-commit protocol: write to an attempt-unique file, then
           // commit with a rename. Without it, speculative or zombie
           // attempts of the same partition interleave bytes in one
@@ -189,7 +191,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
                   case e: Exception => throw new ArchiveException("download", e)
                 }
               if (!done) {
-                if (any && sep.nonEmpty) out.write(sep.getBytes(StandardCharsets.UTF_8))
+                if (any) out.write(sepBytes)
                 out.write(bytes.getBytes(StandardCharsets.UTF_8))
                 any = true
               }
@@ -275,9 +277,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
             }
             out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
           } finally out.close()
-          fs.delete(target, false)
-          if (!fs.rename(tmp, target))
-            throw new IllegalStateException(s"rename $tmp -> $target failed")
+          commit(fs, tmp, target, new Path(staging))
         } catch {
           case e: Throwable =>
             // a driver-side failure leaves the job running: its tasks
@@ -287,6 +287,33 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         }
         fs.delete(new Path(staging), true)
       }
+    }
+  }
+
+  /** Rename `staged` onto `target`. A previous object at `target` is
+    * first moved aside into `staging` and moved back if the rename
+    * fails, so a failed commit leaves the key as it was; the caller's
+    * removal of `staging` deletes it once the new object is in place.
+    * A directory at `target` (say, a sharded archive) is refused, never
+    * moved aside and deleted.
+    */
+  private def commit(fs: FileSystem, staged: Path, target: Path, staging: Path): Unit = {
+    val aside = new Path(staging, "_previous")
+    val moved = fs.exists(target) && {
+      if (fs.getFileStatus(target).isDirectory)
+        throw new IllegalStateException(s"$target is a directory, not an object")
+      if (!fs.rename(target, aside))
+        throw new IllegalStateException(s"rename $target -> $aside failed")
+      true
+    }
+    var done = false
+    try {
+      if (!fs.rename(staged, target))
+        throw new IllegalStateException(s"rename $staged -> $target failed")
+      done = true
+    } finally {
+      if (!done && moved && !fs.rename(aside, target))
+        throw new IllegalStateException(s"restoring $target from $aside failed")
     }
   }
 
@@ -348,9 +375,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         val part = fs.listStatus(staging)
           .map(_.getPath).find(_.getName.startsWith("part-"))
           .getOrElse(throw new IllegalStateException(s"no part file under $staging"))
-        fs.delete(path, false)
-        if (!fs.rename(part, path))
-          throw new IllegalStateException(s"rename $part -> $path failed")
+        commit(fs, part, path, staging)
         fs.delete(staging, true)
       }
     }

@@ -120,17 +120,24 @@ class CancellationSpec extends SparkSpec {
     }
   }
 
-  test("a driver-side concat failure cancels the staged job: no staging residue, no active job, key untouched") {
+  /** Archives 8 slow partitions over a previous object at
+    * `faulty://<dir>/t.csv` with `fault` injected (see
+    * [[FaultyFileSystem]]): the archive fails as an upload error, the
+    * staged job has ended, no staging residue is left, and the key
+    * still holds the previous bytes.
+    */
+  private def assertFaultLeavesKeyUntouched(fault: String): Unit = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
     hconf.setBoolean("fs.faulty.impl.disable.cache", true)
+    hconf.set("fs.faulty.fault", fault)
     try {
       val out = Files.createTempDirectory("graft-faulty")
       val key = out.resolve("t.csv")
       Files.writeString(key, "previous archive\n")
       // 8 slow partitions on 4 cores: tasks are still running and
-      // queued when the driver fails to create the temp object
+      // queued when a fault hits the concat
       val slow = org.apache.spark.sql.functions.udf { (i: Long) =>
         Thread.sleep(20L); i
       }
@@ -147,7 +154,34 @@ class CancellationSpec extends SparkSpec {
     } finally {
       hconf.unset("fs.faulty.impl")
       hconf.unset("fs.faulty.impl.disable.cache")
+      hconf.unset("fs.faulty.fault")
     }
+  }
+
+  test("a driver-side concat failure cancels the staged job: no staging residue, no active job, key untouched") {
+    assertFaultLeavesKeyUntouched("create")
+  }
+
+  test("a staged part whose read fails mid-copy: upload error, no staging residue, no active job, key untouched") {
+    assertFaultLeavesKeyUntouched("read")
+  }
+
+  test("a failed commit rename restores the previous object at the key, no staging residue") {
+    assertFaultLeavesKeyUntouched("rename")
+  }
+
+  test("a single-object archive onto a directory fails and leaves the directory as it was") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-dirkey")
+    val shard = out.resolve("d.csv").resolve("part-00000.csv")
+    Files.createDirectories(shard.getParent)
+    Files.writeString(shard, "id\n1\n")
+    val e = intercept[ArchiveException] {
+      new Engine(spark).archiveDF(Seq(1L, 2L).toDF("id"), out.toString, "d")
+    }
+    assert(e.getMessage.startsWith("graft: upload: "), e.getMessage)
+    assert(Files.readString(shard) == "id\n1\n")
+    assert(out.toFile.list().toList == List("d.csv"), out.toFile.list().toList)
   }
 
   test("cancellable API completes normally when not cancelled") {

@@ -1,21 +1,64 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FSInputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 
 import java.io.IOException
 import java.net.URI
 
-/** The local filesystem under the `faulty` scheme, failing every
-  * create of a file named `_object`: the single-object concat's temp
-  * object. Register it with `fs.faulty.impl`.
+/** The local filesystem under the `faulty` scheme, with one fault,
+  * chosen by `fs.faulty.fault`, in the single-object concat:
+  *  - `create` (the default): every create of a file named `_object`,
+  *    the concat's temp object, fails;
+  *  - `rename`: every rename of `_object`, the commit onto the key,
+  *    fails;
+  *  - `read`: every read of a committed staged part (`part-NNNNN`)
+  *    fails after its first 16 bytes, mid-copy.
+  * Register it with `fs.faulty.impl`.
   */
 class FaultyFileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("faulty:///")
   override def getScheme: String = "faulty"
 
+  private def fault: String = getConf.get("fs.faulty.fault", "create")
+
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream =
-    if (f.getName == "_object") throw new IOException(s"injected create failure: $f")
+    if (fault == "create" && f.getName == "_object")
+      throw new IOException(s"injected create failure: $f")
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+
+  override def rename(src: Path, dst: Path): Boolean =
+    if (fault == "rename" && src.getName == "_object")
+      throw new IOException(s"injected rename failure: $src -> $dst")
+    else super.rename(src, dst)
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    if (fault == "read" && f.getName.matches("part-\\d{5}"))
+      new FSDataInputStream(new FailingAfter(super.open(f, bufferSize), 16, f))
+    else super.open(f, bufferSize)
+}
+
+/** Delivers the first `limit` bytes of `in`, then fails every read. */
+private class FailingAfter(in: FSDataInputStream, limit: Int, f: Path) extends FSInputStream {
+  private var left = limit
+
+  private def failIfSpent(): Unit =
+    if (left <= 0) throw new IOException(s"injected read failure after $limit bytes: $f")
+
+  override def read(): Int = {
+    failIfSpent()
+    left -= 1
+    in.read()
+  }
+  override def read(b: Array[Byte], off: Int, len: Int): Int = {
+    failIfSpent()
+    val n = in.read(b, off, math.min(len, left))
+    if (n > 0) left -= n
+    n
+  }
+  override def seek(pos: Long): Unit = in.seek(pos)
+  override def getPos: Long = in.getPos
+  override def seekToNewSource(targetPos: Long): Boolean = false
+  override def close(): Unit = in.close()
 }

@@ -16,11 +16,21 @@ class FormatterPropertySpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(StructField("a", StringType)))
 
+  /** Go's `unicode.IsSpace`: the runes Go's CSV writer quotes when
+    * they start a field.
+    */
+  private val goSpaces =
+    "\t\n\u000b\u000c\r \u0085\u00a0\u1680\u2000\u2001\u2002\u2003\u2004\u2005" +
+      "\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+
   private val fieldGen: Gen[String] =
-    Gen.listOf(Gen.frequency(
-      8 -> Gen.alphaNumChar,
-      2 -> Gen.oneOf(',', '"', '\n', '\r', ' ', '\t', '\\', '\'', '<', '&', '>'),
-      1 -> Gen.asciiPrintableChar)).map(_.mkString)
+    Gen.frequency(
+      20 -> Gen.listOf(Gen.frequency(
+        8 -> Gen.alphaNumChar,
+        2 -> Gen.oneOf(',', '"', '\n', '\r', ' ', '\t', '\\', '\'', '<', '&', '>', '.'),
+        1 -> Gen.oneOf(goSpaces.toSeq),
+        1 -> Gen.asciiPrintableChar)).map(_.mkString),
+      1 -> Gen.oneOf("\\.", "\\.x", "x\\.", "\\", "."))
 
   private def samples(n: Int): Seq[String] =
     (0 until n).flatMap(i =>
@@ -64,8 +74,9 @@ class FormatterPropertySpec extends AnyFunSuite {
   test("CSV quotes exactly when Go's encoding/csv would") {
     samples(500).foreach { s =>
       val rendered = CsvFormatter.row(schema, Row(s), None).dropRight(1)
-      val mustQuote = s.exists(c => ",\"\n\r".contains(c)) ||
-        s.startsWith(" ") || s.startsWith("\t")
+      // writer.go fieldNeedsQuotes
+      val mustQuote = s.nonEmpty && (s == "\\." || s.exists(c => ",\"\n\r".contains(c)) ||
+        goSpaces.contains(s.head))
       assert(rendered.startsWith("\"") == mustQuote, s"field: ${s.toList}")
     }
   }

@@ -79,6 +79,13 @@ class FormatterSpec extends AnyFunSuite {
     assert(one("line\nbreak") == "\"line\nbreak\"")
     assert(one(" leading") == "\" leading\"")
     assert(one("trailing ") == "trailing ")
+    // Go's fieldNeedsQuotes also quotes `\.` and a leading unicode.IsSpace
+    assert(one("\\.") == "\"\\.\"")
+    assert(one("\\.x") == "\\.x")
+    assert(one("\u00a0nbsp") == "\"\u00a0nbsp\"")
+    assert(one("\u3000wide") == "\"\u3000wide\"")
+    assert(one("mid\u00a0space") == "mid\u00a0space")
+    assert(CsvFormatter.open(StructType(Seq(StructField("\\.", StringType)))) == "\"\\.\"\n")
   }
 
   test("JSON escapes HTML characters like Go json.Marshal") {
@@ -142,5 +149,25 @@ class FormatterSpec extends AnyFunSuite {
 
   test("YAML matches mariadb happy.yaml byte-for-byte") {
     assert(render(YamlFormatter, mariaSchema, mariaRows) == golden("mariadb.yaml"))
+  }
+
+  test("YAML quoting does not depend on the JVM's default locale (tr-TR)") {
+    import java.util.Locale
+    val s = StructType(Seq(StructField("a", StringType)))
+    def one(v: String) = YamlFormatter.row(s, Row(v), None).stripPrefix("- a: ").stripSuffix("\n")
+    val saved = Seq(Locale.Category.DISPLAY, Locale.Category.FORMAT).map(c => c -> Locale.getDefault(c))
+    val savedDefault = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try {
+      // tr-TR lowercases 'I' to dotless 'ı': ".INF" would miss the
+      // typed-looking rule and come out plain
+      assert(".INF".toLowerCase == ".ınf")
+      assert(one(".INF") == "\".INF\"")
+      assert(one("-.Inf") == "\"-.Inf\"")
+      assert(one("INFO") == "INFO")
+    } finally {
+      Locale.setDefault(savedDefault)
+      saved.foreach { case (c, l) => Locale.setDefault(c, l) }
+    }
   }
 }
