@@ -21,7 +21,12 @@ import org.apache.spark.sql.types.DecimalType
   * degrades SPEED, never correctness. CacheScopeSpec pins that one
   * clearCache releases everything an entry cached.
   *
-  * @param fn     builds the result from (session, testdata dir)
+  * @param body   builds the result from (session, testdata dir); the
+  *               entry's `fn` runs it after
+  *               [[graft.functions.GraftFunctions.register]] has given
+  *               the session graft's functions and TopK rules, so an
+  *               entry works from a session built without
+  *               [[graft.functions.GraftExtensions]]
   * @param oracle equivalent ANSI SQL the driver runs in DuckDB over the
   *               same parquet tables; None → driver falls back to a
   *               rows-only check (used for ops whose results depend on
@@ -30,7 +35,12 @@ import org.apache.spark.sql.types.DecimalType
 final case class QueryDef(
     name: String,
     oracle: Option[String])(
-    val fn: (SparkSession, String) => DataFrame)
+    body: (SparkSession, String) => DataFrame) {
+  val fn: (SparkSession, String) => DataFrame = { (s, d) =>
+    graft.functions.GraftFunctions.register(s)
+    body(s, d)
+  }
+}
 
 /** Shared helpers that keep Spark results hash-comparable with DuckDB.
   *
@@ -92,7 +102,6 @@ object Vec {
 
   /** embeddings → (vec_id, label, v: array<double>, nrm: double). */
   def withNorm(embeddings: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     embeddings.select(
       col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

@@ -50,9 +50,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   def archiveDF(df: DataFrame, destDir: String, table: String = "table",
       config: ArchiveConfig => ArchiveConfig = identity): String = {
     val cfg = config(base) // option overlay: per-call copy shadows base
-    val projected = stage("columns") {
-      if (cfg.columns.nonEmpty) df.select(cfg.columns.map(df.col): _*) else df
-    }
+    val projected = project(df, cfg)
     val key = cfg.resolvedKey(table)
     val dest = s"${destDir.stripSuffix("/")}/$key"
     if (cfg.sharded) writeSharded(projected, cfg, dest)
@@ -94,18 +92,9 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       } catch {
         case e: ArchiveException => promise.failure(e)
         case e: Throwable =>
-          // preserve a stage-tagged cause if one exists anywhere in
-          // the chain (e.g. an executor-side tag inside a
-          // SparkException); "download" is only the fallback label
-          // for pre-stage plumbing failures
-          var c: Throwable = e.getCause
-          var found: ArchiveException = null
-          while (c != null && found == null) c match {
-            case ae: ArchiveException => found = ae
-            case other => c = other.getCause
-          }
-          promise.failure(
-            if (found != null) found else new ArchiveException("download", e))
+          // "download" is only the fallback label for pre-stage
+          // plumbing failures
+          promise.failure(taggedCause(e).getOrElse(new ArchiveException("download", e)))
       }
     }, group)
     runner.setDaemon(true)
@@ -445,32 +434,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       buckets: Int, config: ArchiveConfig => ArchiveConfig = identity): Unit = {
     require(buckets > 0, s"graft: buckets must be positive, got $buckets")
     val cfg = config(base)
-    val projected = stage("columns") {
-      if (cfg.columns.nonEmpty) df.select(cfg.columns.map(df.col): _*) else df
-    }
-    val fmt = cfg.format match {
-      case Format.Orc => "orc"
-      // Format.Csv is ArchiveConfig's untouched default — a caller who
-      // never chose a format gets the columnar default here, parquet
-      case Format.Parquet | Format.Csv => "parquet"
-      case other =>
-        // "format" stage: this is a format-negotiation failure, not a
-        // column-projection one
-        throw new ArchiveException("format", new IllegalArgumentException(
-          s"bucketed archive requires a columnar format (parquet/orc), got $other"))
-    }
+    val projected = project(df, cfg)
+    val fmt = tableFormat(cfg, "bucketed")
     stage("upload") {
-      // Re-archive must win over any previous state. DROP handles a
-      // live catalog entry (and deletes its managed location); the
-      // explicit location delete handles the ORPHAN case — a previous
-      // process wrote the table, the in-memory catalog forgot it at
-      // exit, and the warehouse directory survived, which makes
-      // saveAsTable fail with LOCATION_ALREADY_EXISTS.
-      spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-      val loc = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      dropTable(tableName)
       projected.write.format(fmt).mode("overwrite")
         .bucketBy(buckets, bucketCol)
         .sortBy(bucketCol)
@@ -491,22 +458,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   def archivePartitioned(df: DataFrame, tableName: String, partCol: String,
       config: ArchiveConfig => ArchiveConfig = identity): Unit = {
     val cfg = config(base)
-    val projected = stage("columns") {
-      if (cfg.columns.nonEmpty) df.select(cfg.columns.map(df.col): _*) else df
-    }
-    val fmt = cfg.format match {
-      case Format.Orc => "orc"
-      case Format.Parquet | Format.Csv => "parquet"
-      case other =>
-        throw new ArchiveException("format", new IllegalArgumentException(
-          s"partitioned archive requires a columnar format (parquet/orc), got $other"))
-    }
+    val projected = project(df, cfg)
+    val fmt = tableFormat(cfg, "partitioned")
     stage("upload") {
-      spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-      val loc = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      dropTable(tableName)
       projected.write.format(fmt).mode("overwrite")
         .partitionBy(partCol)
         .saveAsTable(tableName)
@@ -557,11 +512,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val z = Engine.zOrder(
       code(df.col(colA), aMin, aSpan), code(df.col(colB), bMin, bSpan))
     stage("upload") {
-      spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
-      val loc = new Path(spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      dropTable(tableName)
       val w = df.withColumn("z", z)
         .repartitionByRange(rangePartitions, org.apache.spark.sql.functions.col("z"))
         .sortWithinPartitions("z")
@@ -576,20 +527,67 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   private def stage[T](name: String)(body: => T): T =
     try body catch {
       case e: ArchiveException => throw e
-      case e: Exception =>
-        // a task-side ArchiveException (e.g. a formatter failure tagged
-        // "download" on the executor) reaches the driver wrapped in a
-        // SparkException — surface it with its original stage. (If the
-        // executor's exception chain failed Java serialization, Spark
-        // drops the cause and the error keeps this stage's label — a
-        // less precise stage, never a lost error.)
-        var c: Throwable = e.getCause
-        while (c != null) c match {
-          case ae: ArchiveException => throw ae
-          case other => c = other.getCause
-        }
-        throw new ArchiveException(name, e)
+      case e: Exception => throw taggedCause(e).getOrElse(new ArchiveException(name, e))
     }
+
+  /** The first [[ArchiveException]] in `e`'s cause chain. A task-side
+    * one (e.g. a formatter failure tagged "download" on the executor)
+    * reaches the driver wrapped in a SparkException and keeps its
+    * original stage. (If the executor's exception chain failed Java
+    * serialization, Spark drops the cause and the error keeps the
+    * caller's label — a less precise stage, never a lost error.)
+    */
+  private def taggedCause(e: Throwable): Option[ArchiveException] =
+    Iterator.iterate(e.getCause)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case ae: ArchiveException => ae }
+
+  /** `df` narrowed to `cfg.columns`, when set. */
+  private def project(df: DataFrame, cfg: ArchiveConfig): DataFrame = stage("columns") {
+    if (cfg.columns.nonEmpty) df.select(cfg.columns.map(df.col): _*) else df
+  }
+
+  /** The writer format of a catalog-table sink. Format.Csv is
+    * ArchiveConfig's untouched default — a caller who never chose a
+    * format gets the columnar default, parquet. A row format fails in
+    * the "format" stage (a negotiation failure, not a column-projection
+    * one), naming the archive kind `what`.
+    */
+  private def tableFormat(cfg: ArchiveConfig, what: String): String = cfg.format match {
+    case Format.Orc => "orc"
+    case Format.Parquet | Format.Csv => "parquet"
+    case other =>
+      throw new ArchiveException("format", new IllegalArgumentException(
+        s"$what archive requires a columnar format (parquet/orc), got $other"))
+  }
+
+  /** Re-archive must win over any previous state. DROP handles a live
+    * catalog entry (and deletes its managed location); the explicit
+    * location delete handles the ORPHAN case — a previous process wrote
+    * the table, the in-memory catalog forgot it at exit, and the
+    * warehouse directory survived, which makes saveAsTable fail with
+    * LOCATION_ALREADY_EXISTS.
+    */
+  private def dropTable(tableName: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
+    val loc = new Path(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(tableName)))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
+  /** Hidden names ('_'/'.'): committer metadata, the manifest itself,
+    * `_temporary` staging and `.staging-*` residue. Spark's own readers
+    * skip them, files and directories alike.
+    */
+  private def hidden(p: Path): Boolean =
+    p.getName.startsWith("_") || p.getName.startsWith(".")
+
+  private def readManifest(fs: FileSystem, path: Path): ArchiveManifest = {
+    val in = fs.open(path)
+    parseManifest(new String(
+      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close(),
+      StandardCharsets.UTF_8))
+  }
 
   /** Landing-verification MANIFEST (K1d): after a sharded archive
     * lands, record WHAT landed — every data file with its byte size,
@@ -663,11 +661,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val path = new Path(dest, Engine.ManifestName)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return Seq(s"manifest missing: $path")
-    val in = fs.open(path)
-    val recorded = parseManifest(new String(
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close(),
-      StandardCharsets.UTF_8))
+    val recorded = readManifest(fs, path)
     val rec = recorded.files.map(f => f.path -> f.bytes).toMap
     val act = listShards(dest).map(f => f.path -> f.bytes).toMap
     val missing = (rec.keySet -- act.keySet).toSeq.sorted.map(p => s"missing file: $p")
@@ -761,8 +755,6 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           "refusing to compact an archive that fails its manifest audit " +
             s"(repair the findings first): ${pre.mkString("; ")}"))
     }
-    def hidden(p: Path): Boolean =
-      p.getName.startsWith("_") || p.getName.startsWith(".")
     // leaf dirs with visible data files, depth-first
     def leaves(p: Path): Seq[(Path, Seq[org.apache.hadoop.fs.FileStatus])] = {
       val (dirs, files) = fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath))
@@ -857,10 +849,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           throw new ArchiveException("upload", new IllegalStateException(
             "refusing to expire an archive that fails its manifest audit " +
               s"(repair the findings first): ${pre.mkString("; ")}"))
-        val in = fs.open(new Path(root, Engine.ManifestName))
-        val m = parseManifest(new String(
-          try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-          finally in.close(), StandardCharsets.UTF_8))
+        val m = readManifest(fs, new Path(root, Engine.ManifestName))
         val f = formatOf(m.format)
         // a manifested archive whose format we cannot recount
         // (json/yaml/custom) could not have its manifest re-written
@@ -1033,13 +1022,9 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   private def listShards(dest: String): Seq[ShardEntry] = {
     val root = new Path(dest)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // hidden names ('_'/'.') are excluded as FILES (committer metadata,
-    // the manifest itself) AND as DIRECTORIES (_temporary staging that
-    // a straggler task can recreate, .staging-* residue): Spark's own
-    // readers skip hidden directories, so recording their contents
-    // would guarantee later false "missing file" alarms
-    def hidden(p: Path): Boolean =
-      p.getName.startsWith("_") || p.getName.startsWith(".")
+    // hidden directories are skipped too (a straggler task can
+    // recreate _temporary): recording their contents would guarantee
+    // later false "missing file" alarms
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         if (hidden(st.getPath)) Seq.empty

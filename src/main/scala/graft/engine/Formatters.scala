@@ -186,8 +186,10 @@ private[engine] abstract class Plan(val schema: StructType, val nullValue: Optio
 
 /** JSON and YAML: cells in name order (stable, so duplicate names keep
   * schema order), each after its pre-rendered key, between `open` and
-  * `close`. Booleans and numbers are written bare; any other text,
-  * including the placeholder of a NULL cell, through `text`.
+  * `close`. Each key is the field name through `text`, as Go escapes a
+  * map key like a value; `key` adds the separators. Booleans and
+  * numbers are written bare; any other text, including the
+  * placeholder of a NULL cell, through `text`.
   */
 private[engine] final class SortedPlan(schema: StructType, nullValue: Option[String],
     open: String, key: (String, Int) => String, text: (JStringBuilder, String) => Unit,
@@ -212,7 +214,7 @@ private[engine] final class SortedPlan(schema: StructType, nullValue: Option[Str
 
   private val sorted = schema.fields.zipWithIndex.sortBy(_._1.name)
   private val columns = sorted.map(_._2)
-  private val keys = sorted.zipWithIndex.map { case ((f, _), k) => key(f.name, k) }
+  private val keys = sorted.zipWithIndex.map { case ((f, _), k) => key(rendered(f.name), k) }
   private val cells = sorted.map { case (f, _) =>
     f.dataType match {
       case StringType => stringCell
@@ -220,9 +222,11 @@ private[engine] final class SortedPlan(schema: StructType, nullValue: Option[Str
       case _ => valueCell
     }
   }
-  private val nullText = nullValue.fold("null") { p =>
+  private val nullText = nullValue.fold("null")(rendered)
+
+  private def rendered(s: String): String = {
     val sb = new JStringBuilder
-    text(sb, p)
+    text(sb, s)
     sb.toString
   }
 
@@ -355,7 +359,7 @@ object JsonArrayFormatter extends RowFormatter {
 
   private val plans = new PlanMemo((schema, nullValue) =>
     new SortedPlan(schema, nullValue, "{",
-      (name, k) => (if (k == 0) "\"" else ",\"") + name + "\":", string, "}"))
+      (name, k) => (if (k == 0) "" else ",") + name + ":", string, "}"))
 
   private def string(sb: JStringBuilder, s: String): Unit = {
     sb.append('"')

@@ -574,90 +574,78 @@ object ShinglePolyHashes {
   }
 }
 
-/** Registration: both through [[GraftExtensions]] (the library way,
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) and
-  * [[GraftFunctions.register]] for sessions built without extensions.
+/** The one table of graft's SQL functions. [[GraftExtensions]] injects
+  * every entry when a session is built with
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (the library
+  * way); [[register]] adds what a session built without it lacks, and
+  * [[childSession]] is how graft opens a private session.
+  * [[graft.QueryDef]] runs `register` before every entry's body.
   */
 object GraftFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "simhash64" -> (es => SimHash64(es.head)),
-    "simhash_poly" -> (es => SimHashPoly(es.head)),
-    "vec_dot" -> (es => VecDot(es(0), es(1))),
-    "sq8_adc" -> (es => Sq8Adc(es(0), es(1), es(2), es(3))),
-    "nearest_cell" -> (es => NearestCell(es(0), es(1), es(2), es(3))),
-    "nearest_score" -> (es => NearestScore(es(0), es(1), es(2), es(3))),
-    "rolling_hash" -> (es => RollingHash(es(0), es(1), es(2))),
-    "shingle_hashes" -> (es => ShingleHashes(es(0), es(1))),
-    "shingle_polyhashes" -> (es => ShinglePolyHashes(es(0), es(1))),
-    "poly_pair" -> (es => PolyPairHash(es.head)),
-    // Spark ships these only in the internal registry (they back the
-    // runtime row-level filter rule); surface them for explicit
-    // bloom-prefilter plans (q33)
-    "bloom_filter_agg" -> (es =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(es(0), es(1), es(2))),
-    "might_contain" -> (es =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+  /** (name, the class `DESCRIBE FUNCTION` reports, builder) */
+  private[graft] val fns: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    Seq(
+      ("simhash64", classOf[SimHash64], es => SimHash64(es.head)),
+      ("simhash_poly", classOf[SimHashPoly], es => SimHashPoly(es.head)),
+      ("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1))),
+      ("sq8_adc", classOf[Sq8Adc], es => Sq8Adc(es(0), es(1), es(2), es(3))),
+      ("nearest_cell", classOf[NearestCell], es => NearestCell(es(0), es(1), es(2), es(3))),
+      ("nearest_score", classOf[NearestScore], es => NearestScore(es(0), es(1), es(2), es(3))),
+      ("rolling_hash", classOf[RollingHash], es => RollingHash(es(0), es(1), es(2))),
+      ("shingle_hashes", classOf[ShingleHashes], es => ShingleHashes(es(0), es(1))),
+      ("shingle_polyhashes", classOf[ShinglePolyHashes], es => ShinglePolyHashes(es(0), es(1))),
+      ("poly_pair", classOf[PolyPairHash], es => PolyPairHash(es.head)),
+      // Spark ships these only in the internal registry (they back the
+      // runtime row-level filter rule); surface them for explicit
+      // bloom-prefilter plans (q33)
+      ("bloom_filter_agg", classOf[BloomFilterAggregate],
+        es => new BloomFilterAggregate(es(0), es(1), es(2))),
+      ("might_contain", classOf[BloomFilterMightContain],
+        es => BloomFilterMightContain(es(0), es(1))))
+  }
 
+  private[functions] def info(name: String, cls: Class[_]): ExpressionInfo =
+    new ExpressionInfo(cls.getName, name)
+
+  /** Adds to `spark` each function of [[fns]] that does not resolve
+    * there, and both TopK rules unless its planner already holds
+    * [[graft.plans.TopKStrategy]]. On a session built with
+    * [[GraftExtensions]] it changes nothing.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    fns.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    fns.foreach { case (name, cls, build) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, info(name, cls), build)
     }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TopKRewrite
+    if (!spark.sessionState.planner.strategies.contains(graft.plans.TopKStrategy)) {
+      spark.experimental.extraStrategies :+= graft.plans.TopKStrategy
+      spark.experimental.extraOptimizations :+= graft.plans.TopKRewrite
+    }
+  }
+
+  /** `s.newSession()` prepared by [[register]]: a child of a session
+    * built without [[GraftExtensions]] loses the functions and rules
+    * `register` gave its parent. Every private session graft opens
+    * comes from here.
+    */
+  def childSession(s: SparkSession): SparkSession = {
+    val child = s.newSession()
+    GraftFunctions.register(child)
+    child
   }
 }
 
-/** `SparkSessionExtensions` hook: injects the graft native functions
-  * at session build time.
+/** `SparkSessionExtensions` hook: injects every function of
+  * [[GraftFunctions.fns]] and the two TopK rules at session build time.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("simhash64"),
-        new ExpressionInfo("graft.functions.SimHash64", "simhash64"),
-        (es: Seq[Expression]) => SimHash64(es.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("simhash_poly"),
-        new ExpressionInfo("graft.functions.SimHashPoly", "simhash_poly"),
-        (es: Seq[Expression]) => SimHashPoly(es.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("vec_dot"),
-        new ExpressionInfo("graft.functions.VecDot", "vec_dot"),
-        (es: Seq[Expression]) => VecDot(es(0), es(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("sq8_adc"),
-        new ExpressionInfo("graft.functions.Sq8Adc", "sq8_adc"),
-        (es: Seq[Expression]) => Sq8Adc(es(0), es(1), es(2), es(3))))
-    ext.injectFunction(
-      (FunctionIdentifier("nearest_cell"),
-        new ExpressionInfo("graft.functions.NearestCell", "nearest_cell"),
-        (es: Seq[Expression]) => NearestCell(es(0), es(1), es(2), es(3))))
-    ext.injectFunction(
-      (FunctionIdentifier("nearest_score"),
-        new ExpressionInfo("graft.functions.NearestScore", "nearest_score"),
-        (es: Seq[Expression]) => NearestScore(es(0), es(1), es(2), es(3))))
-    ext.injectFunction(
-      (FunctionIdentifier("rolling_hash"),
-        new ExpressionInfo("graft.functions.RollingHash", "rolling_hash"),
-        (es: Seq[Expression]) => RollingHash(es(0), es(1), es(2))))
-    ext.injectFunction(
-      (FunctionIdentifier("shingle_hashes"),
-        new ExpressionInfo("graft.functions.ShingleHashes", "shingle_hashes"),
-        (es: Seq[Expression]) => ShingleHashes(es(0), es(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("shingle_polyhashes"),
-        new ExpressionInfo("graft.functions.ShinglePolyHashes", "shingle_polyhashes"),
-        (es: Seq[Expression]) => ShinglePolyHashes(es(0), es(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("poly_pair"),
-        new ExpressionInfo("graft.functions.PolyPairHash", "poly_pair"),
-        (es: Seq[Expression]) => PolyPairHash(es.head)))
+    GraftFunctions.fns.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name, cls), build))
+    }
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
   }

@@ -258,7 +258,6 @@ object Dedup {
     * strings), then the one-pass typed MinHashAgg Aggregator (UDAF).
     */
   private[operators] def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // documentsSpread: the polyhash shingling is the CPU, and the
     // single-row-group scan would run it on one task (guide §2.5)
     Tables.documentsSpread(s, d)
@@ -361,7 +360,6 @@ object Dedup {
     }
 
   private[operators] def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // documentsSpread: one-task scan would otherwise single-thread the
     // shingle kernel that feeds the cached index (guide §2.5)
     jaccardFrom(Tables.documentsSpread(s, d)
@@ -378,7 +376,6 @@ object Dedup {
     * normalized to (least, greatest) to match the da < db convention.
     */
   private def sampledJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val g = Tables.documentsSpread(s, d)
       .select(col("doc_id"), explode(expr("shingle_hashes(text, 3)")).as("g"))
       .cache()
@@ -466,7 +463,6 @@ object Dedup {
     */
   private[graft] def simhashTiers(s: SparkSession, docs: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val member = docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("fp", expr("simhash_poly(toks)"))
@@ -631,7 +627,7 @@ object Dedup {
 
   /** The d06/d16 loop operand: the symmetric near-dup edges (a, b),
     * cached once at full parallelism, then read through a private
-    * `newSession()` whose shuffle.partitions is the [[edgeParts]]
+    * `childSession` whose shuffle.partitions is the [[edgeParts]]
     * width of the measured edge count — the caller's session never
     * sees the override, and the loop schedules no near-empty
     * default-width tasks (19.4 s → ~2.3 s at local[32], SURVEY.md
@@ -644,7 +640,7 @@ object Dedup {
     val edges = pairs.union(pairs.select(col("db"), col("da"))).toDF("a", "b")
       .repartition(nParts).cache()
     edges.count()
-    val loop = s.newSession()
+    val loop = graft.functions.GraftFunctions.childSession(s)
     loop.conf.set("spark.sql.shuffle.partitions", nParts.toString)
     (loop.createDataFrame(edges.rdd, edges.schema), edges)
   }
@@ -745,7 +741,6 @@ object Dedup {
         SELECT da, db, i::DOUBLE / (ca.n + cb.n - i) AS jaccard
         FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db)
       WHERE jaccard >= 0.1 ORDER BY da, db""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val g = Tables.documents(s, d)
       .select(col("doc_id"), explode(expr("shingle_hashes(text, 3)")).as("g"))
       .cache()
@@ -1094,7 +1089,6 @@ object Dedup {
       SELECT doc_id, count(*) AS n_test_matches,
              min(test_doc) AS min_test_doc, max(est_jaccard) AS max_est
       FROM pair GROUP BY doc_id ORDER BY doc_id""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val sp = Tables.documents(s, d)
       .select(col("doc_id"), TextAnalysis.splitFingerprint.as("m"))
     val cand = minhashCandidates(s, d)
@@ -1300,7 +1294,6 @@ object Dedup {
       FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
       WHERE i * 10 >= least(ca.n, cb.n) * 8
       ORDER BY da, db""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val g = Tables.documents(s, d)
       .select(col("doc_id"), explode(expr("shingle_hashes(text, 3)")).as("g"))
       .cache()
@@ -1367,7 +1360,6 @@ object Dedup {
         JOIN cnt cb ON cb.doc_id = c.db
         LEFT JOIN inter iv ON iv.da = c.da AND iv.db = c.db)
       ORDER BY da, db""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val cand = minhashCandidates(s, d).select("da", "db", "est_jaccard")
     val g = Tables.documents(s, d)
       .select(col("doc_id"), explode(expr("shingle_hashes(text, 3)")).as("g"))

@@ -22,13 +22,18 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object Fixpoint {
 
   /** One eager truncation of `ds`. The mode comes from the caller's
-    * session `s`, not `ds.sparkSession`: a `newSession()` loop session
-    * does not inherit runtime-set SQL conf.
+    * session `s`, not `ds.sparkSession`: a `childSession` loop session
+    * does not inherit runtime-set SQL conf. A set key must hold a
+    * Hadoop path, whether or not the context already has a dir.
     */
   def truncate[T](s: SparkSession, ds: Dataset[T]): Dataset[T] = {
     val sc = s.sparkContext
-    if (sc.getCheckpointDir.isEmpty)
-      s.conf.getOption("spark.graft.checkpointDir").foreach(sc.setCheckpointDir)
+    s.conf.getOption("spark.graft.checkpointDir").foreach { dir =>
+      try new org.apache.hadoop.fs.Path(dir)
+      catch { case e: IllegalArgumentException => throw new IllegalArgumentException(
+        s"graft: spark.graft.checkpointDir must be a path, got '$dir': ${e.getMessage}", e) }
+      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+    }
     if (sc.getCheckpointDir.isDefined) ds.checkpoint() else ds.localCheckpoint()
   }
 

@@ -45,7 +45,6 @@ object MultimodalOps {
           list_transform(range(1, length(text) + 1), i -> CAST(unicode(substr(text, i, 1)) AS BIGINT))),
         (acc, c) -> (acc + c) % 997) AS checksum
       FROM documents ORDER BY doc_id""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(
         col("doc_id"),

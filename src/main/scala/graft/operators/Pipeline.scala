@@ -112,7 +112,6 @@ object Pipeline {
         CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
         min(doc_id) AS first_doc, max(doc_id) AS last_doc
       FROM packed GROUP BY shard_id ORDER BY shard_id""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     // stage family 1 — per-document attributes: quality features,
     // split fingerprint, token count, fused into ONE corpus scan.
     // NOT documentsSpread: measured r8 (surgical interleaved A/B)
@@ -300,8 +299,7 @@ object Pipeline {
       ORDER BY b.cell""")) { (s, d) =>
     // private co-session: catalog-scoped index table + bucketed-scan
     // conf must not leak (the s05/s06/s13 discipline)
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val centroids = Similarity.trainCoarse(co, d, e)
     if (centroids.isEmpty)
@@ -584,8 +582,7 @@ object Pipeline {
         CAST(sum(CASE WHEN vec_id % 9 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_live,
         CAST(sum(CASE WHEN vec_id % 9 <> 0 THEN vec_id ELSE 0 END) AS BIGINT) AS live_checksum
       FROM all_rows GROUP BY cell ORDER BY cell""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val base = e.where(pmod(col("vec_id"), lit(37)) =!= 0)
     val arr = e.where(pmod(col("vec_id"), lit(37)) === 0)

@@ -108,7 +108,7 @@ object Relational {
     // private-session conf (the d06 pattern): disable broadcast for
     // THIS query only; the catalog is SharedState-scoped, so the
     // bucketed tables written above are visible here
-    val co = s.newSession()
+    val co = graft.functions.GraftFunctions.childSession(s)
     co.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     co.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     co.table(bktLineitem)
@@ -317,7 +317,6 @@ object Relational {
                     WHERE o_custkey = c_custkey
                       AND o_totalprice > 400000)
       ORDER BY c_custkey""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.customer(s, d).createOrReplaceTempView("customer")
     // scan orders ONCE: the selective leg (just the matching custkeys,
     // ~1% of rows) is cached lazily — the bloom-build subquery job

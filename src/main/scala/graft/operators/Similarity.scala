@@ -246,12 +246,7 @@ object Similarity {
       // PRUNING, the entire point of the probe. Forcing the bucketed
       // scan keeps the SelectedBucketsCount pruning in the plan; the
       // catalog is SharedState-scoped so the index table is visible.
-      val co = s.newSession()
-      // a new session only inherits graft's functions when the parent
-      // was built with GraftExtensions (the library way, and since
-      // round 5 also Verify/Bench); register vec_dot explicitly so
-      // the probe works from ANY parent session
-      graft.functions.GraftFunctions.register(co)
+      val co = graft.functions.GraftFunctions.childSession(s)
       co.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       co.table(ivfTable)
         .filter(col("cell").isin(probed: _*) && col("vec_id") =!= 0)
@@ -541,8 +536,7 @@ object Similarity {
     // run everything in a private session sharing the parent's
     // SharedState: the index table and build memo are catalog-scoped,
     // and the bucketed-scan conf below must not leak to other queries
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -628,8 +622,7 @@ object Similarity {
         FROM ex JOIN ap ON ap.va = ex.va AND ap.nn = ex.nn
         GROUP BY ex.va) h ON h.va = q.va
       ORDER BY q.va""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -1292,8 +1285,7 @@ object Similarity {
       WHERE rn <= 3 ORDER BY va, cos_sim DESC, nn""")) { (s, d) =>
     // private co-session: catalog-scoped index + bucketed-scan conf
     // must not leak (the s06 discipline)
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -1627,8 +1619,7 @@ object Similarity {
         WHERE a.cell = p.cell AND a.vec_id <> 0
           AND xl.label IN (${FilterLabels.mkString(", ")}))
       ORDER BY cos_sim DESC, vec_id LIMIT 10""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     val qRowOpt = e.filter(col("vec_id") === 0)
@@ -1722,8 +1713,7 @@ object Similarity {
       LEFT JOIN hits ON hits.np = lv.np
       LEFT JOIN vol ON vol.np = lv.np
       ORDER BY nprobe""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     val levels = co.range(1, 5).select(col("id").as("nprobe"))
@@ -2036,8 +2026,7 @@ object Similarity {
     Some(s"""${duckIvfPqCandN(4, labeled = true)}
       SELECT vec_id, label, cell, adc_dot, cos_sim FROM cand
       ORDER BY adc_dot DESC, vec_id LIMIT 10""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     val (coarse, books) = ensureIvfPq(co, d, e)
@@ -2112,8 +2101,7 @@ object Similarity {
       SELECT a.va, a.nn AS vb, a.c AS cos_sim
       FROM knn a JOIN knn b ON a.va = b.nn AND a.nn = b.va AND a.va < a.nn
       ORDER BY a.va, vb""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -2167,8 +2155,7 @@ object Similarity {
                row_number() OVER (PARTITION BY va ORDER BY c DESC, nn) AS rn
         FROM cand)
       WHERE rn <= 3 ORDER BY va, cos_sim DESC, nn""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -2231,8 +2218,7 @@ object Similarity {
       JOIN cells x ON x.cell = pr.cell AND x.vec_id <> qs.vec_id
       WHERE ${Vec.duckDot("qs.v", "x.v")} / (qs.nrm * x.nrm) >= $RangeTau
       ORDER BY va, cos_sim DESC, nn""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -2313,8 +2299,7 @@ object Similarity {
       FROM qs LEFT JOIN tr ON tr.va = qs.vec_id
       LEFT JOIN fo ON fo.va = qs.vec_id
       ORDER BY va""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)
@@ -2383,8 +2368,7 @@ object Similarity {
         CAST(occ.n_vectors AS DOUBLE) / tot.total AS share,
         CAST(occ.n_vectors * tot.k_live AS DOUBLE) / tot.total AS occupancy
       FROM occ, tot ORDER BY occ.cell""")) { (s, d) =>
-    val co = s.newSession()
-    graft.functions.GraftFunctions.register(co)
+    val co = graft.functions.GraftFunctions.childSession(s)
     val e = Vec.withNorm(Tables.embeddings(co, d)).cache()
     val (centroids, ivfTable) = ensureIvfIndex(co, d, e)
     if (centroids.isEmpty)

@@ -354,7 +354,6 @@ object TextAnalysis {
       FROM inter JOIN cnt c ON c.doc_id = eval_id
       WHERE i::DOUBLE / c.n >= 0.5
       ORDER BY eval_id, train_id""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val g = Tables.documents(s, d)
       .select(col("doc_id"), explode(expr("shingle_hashes(text, 5)")).as("g"))
       .cache()
@@ -390,7 +389,6 @@ object TextAnalysis {
           (h, c) -> (h * 31 + c) % 1000000007) AS fp
         FROM documents))
       GROUP BY split, lang ORDER BY split, lang""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .withColumn("m", splitFingerprint)
       .withColumn("split",
@@ -437,7 +435,6 @@ object TextAnalysis {
       FROM documents)
       WHERE bucket < CASE WHEN lang = 'en' THEN 500 ELSE 1000 END
       GROUP BY lang ORDER BY lang""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .withColumn("bucket", expr("rolling_hash(text, 31L, 1000000007L) % 1000"))
       .where(col("bucket") <
@@ -497,7 +494,6 @@ object TextAnalysis {
         CAST(coalesce(sel.first_id, -1) AS BIGINT) AS first_sampled
       FROM q LEFT JOIN sel ON q.lang = sel.lang ORDER BY lang""")) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val f = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         expr("rolling_hash(text, 31L, 1000000007L)").as("fp"))
@@ -721,7 +717,6 @@ object TextAnalysis {
           FROM kept))
       SELECT split, quality, count(*) AS n, min(doc_id) AS first_doc
       FROM sp GROUP BY split, quality ORDER BY split, quality""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val qual = qualityScored(Tables.documents(s, d))
       .where(col("quality") =!= "low")
       .select("doc_id", "quality", "text")
@@ -752,7 +747,6 @@ object TextAnalysis {
             list_transform(range(1, length(text) + 1), i -> CAST(unicode(substr(text, i, 1)) AS BIGINT))),
           (h, c) -> (h * 31 + c) % 1000000007) AS fingerprint
       FROM documents) ORDER BY doc_id""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .withColumn("fingerprint", expr("rolling_hash(text, 31L, 1000000007L)"))
       .select(col("doc_id"), col("fingerprint"),
@@ -1388,7 +1382,6 @@ object TextAnalysis {
             list_transform(range(1, length(t) + 1), i -> CAST(unicode(substr(t, i, 1)) AS BIGINT))),
           (h, c) -> (h * 31 + c) % 1000000007) AS chunk_hash
       FROM ch ORDER BY doc_id, chunk_no""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .select(col("doc_id"), col("ts"),
@@ -1601,7 +1594,6 @@ object TextAnalysis {
       SELECT doc_id, CAST(bucket AS BIGINT) AS bucket,
              count(*) AS tf
       FROM h GROUP BY doc_id, bucket ORDER BY doc_id, bucket""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .select(col("doc_id"),
@@ -2055,7 +2047,6 @@ object TextAnalysis {
       SELECT doc_id, n_grams, n_unique,
         CAST(n_unique AS DOUBLE) / n_grams AS novelty
       FROM per ORDER BY doc_id""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val g = Tables.documents(s, d)
       .select(col("doc_id"), explode(expr("shingle_hashes(text, 3)")).as("g"))
     val df = g.groupBy("g").agg(count(lit(1)).as("df"))

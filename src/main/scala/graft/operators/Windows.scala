@@ -61,7 +61,6 @@ object Windows {
                 ORDER BY o_totalprice DESC, o_orderkey) AS rn
             FROM orders)
       WHERE rn <= 3 ORDER BY o_custkey, o_orderkey""")) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val o = Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice")
     graft.plans.TopK.perKey(o,
         Seq(col("o_custkey")),

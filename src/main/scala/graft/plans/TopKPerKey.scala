@@ -22,9 +22,11 @@ import scala.collection.mutable
   * EnsureRequirements inserts the single exchange) merges heaps to
   * the exact answer. Memory per task is O(keys_in_partition · k).
   *
-  * Registered through [[graft.functions.GraftExtensions]]; the
-  * user-facing entry is [[TopK.perKey]]. Equivalence with the window
-  * formulation is oracle-checked (q34) and spec-checked (TopKSpec).
+  * Planned by [[TopKStrategy]], which [[graft.functions.GraftExtensions]]
+  * injects and [[graft.functions.GraftFunctions.register]] adds where
+  * it is missing. The user-facing entry is [[TopK.perKey]]. Equivalence
+  * with the window formulation is oracle-checked (q34) and
+  * spec-checked (TopKSpec).
   */
 case class TopKPerKey(
     k: Int,

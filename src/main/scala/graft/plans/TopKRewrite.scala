@@ -30,9 +30,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Tie semantics are unchanged: with a non-unique order, row_number
   * picks arbitrarily among tied rows, exactly like the heap does.
-  * Registered via [[graft.functions.GraftExtensions]] (optimizer rule
-  * injection) and [[graft.functions.GraftFunctions.register]]
-  * (`spark.experimental.extraOptimizations`); pinned by TopKSpec.
+  * Injected with [[TopKStrategy]] by [[graft.functions.GraftExtensions]];
+  * [[graft.functions.GraftFunctions.register]] adds both to a session
+  * built without it. Pinned by TopKSpec.
   */
 object TopKRewrite extends Rule[LogicalPlan] {
 

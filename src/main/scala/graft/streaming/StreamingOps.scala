@@ -935,8 +935,8 @@ object StreamingOps {
     arrivals.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          // the micro-batch runs in a cloned session: the native
-          // kernel must be registered THERE for the argmin call
+          // a public entry no QueryDef prepares: the micro-batch
+          // session needs graft's functions for the argmin call
           val s = batch.sparkSession
           graft.functions.GraftFunctions.register(s)
           // idempotence under foreachBatch's AT-LEAST-ONCE replay: a

@@ -8,10 +8,11 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
 
 /** The per-row formatters as they were before the per-schema plans:
   * the byte reference that `FormatterDifferentialSpec` holds the
-  * planned formatters to. Verbatim except for the two rules the plans
+  * planned formatters to. Verbatim except for the rules the plans
   * change on purpose, each marked `DELIBERATE`: CSV quotes a field Go's
-  * `encoding/csv` quotes (`\.`, a leading Unicode space), and YAML
-  * lowercases in `Locale.ROOT`, not the JVM's default locale.
+  * `encoding/csv` quotes (`\.`, a leading Unicode space), YAML
+  * lowercases in `Locale.ROOT`, not the JVM's default locale, and JSON
+  * and YAML keys are escaped and quoted like values.
   */
 object ReferenceRender {
 
@@ -82,7 +83,8 @@ object ReferenceJson extends RowFormatter {
           case dec: java.math.BigDecimal => dec.stripTrailingZeros.toPlainString
           case other => escape(ReferenceRender.scalar(other).get)
         }
-        "\"" + f.name + "\":" + v
+        // DELIBERATE: the key escaped like a value, as Go's encoding/json does
+        escape(f.name) + ":" + v
       }
     "{" + fields.mkString(",") + "}"
   }
@@ -122,7 +124,8 @@ object ReferenceYaml extends RowFormatter {
           case dec: java.math.BigDecimal => dec.stripTrailingZeros.toPlainString
           case other => scalarStyle(ReferenceRender.scalar(other).get)
         }
-        s"${f.name}: $v"
+        // DELIBERATE: the key quoted like a value, as go-yaml does
+        s"${scalarStyle(f.name)}: $v"
       }
     fields.zipWithIndex
       .map { case (line, idx) => (if (idx == 0) "- " else "  ") + line }

@@ -67,6 +67,14 @@ class FixpointSpec extends SparkSpec {
       e.getMessage)
   }
 
+  test("a spark.graft.checkpointDir that is not a path raises an error naming the key") {
+    spark.conf.set("spark.graft.checkpointDir", "")
+    try {
+      val e = intercept[IllegalArgumentException](Fixpoint.truncate(spark, start))
+      assert(e.getMessage.contains("spark.graft.checkpointDir"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
   test("only Fixpoint.scala checkpoints or localCheckpoints in src/main") {
     val pattern = """localCheckpoint|\.checkpoint\(""".r
     val root = java.nio.file.Paths.get("src/main")
