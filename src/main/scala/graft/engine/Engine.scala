@@ -1,7 +1,14 @@
 package graft.engine
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SerializableWritable
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, encoderFor}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import java.nio.charset.StandardCharsets
 
@@ -116,6 +123,12 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val fmt = RowFormatter.of(cfg.format)
     val schema = df.schema
     val nullValue = cfg.nullValue
+    // the DataFrame's own Row encoder and datetime choice, both read on
+    // the driver: tasks format the one planned query's binary rows, and
+    // a cell or a custom format that needs a Row gets it from this
+    // encoder (OPTIMIZATION_r09.md §11)
+    val encoder = encoderFor(df.encoder)
+    val java8 = SQLConf.get.datetimeJava8ApiEnabled
     // invocation-unique staging: two concurrent archives to the SAME
     // destination (trivial via archiveDFCancellable) must not
     // interleave staged parts or delete each other's staging on their
@@ -140,62 +153,11 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // partition: 34 s vs 3.6 s sharded at sf0.1, and a hard driver
     // bottleneck at scale.)
     val bcConf = spark.sparkContext.broadcast(
-      new org.apache.spark.SerializableWritable(spark.sparkContext.hadoopConfiguration))
+      new SerializableWritable(spark.sparkContext.hadoopConfiguration))
     cleaningStagingOnFailure(staging) {
       val stagedRdd = stage("download") {
-        val sep = fmt.separator
-        df.rdd.mapPartitionsWithIndex { (idx, it) =>
-          val sepBytes = sep.getBytes(StandardCharsets.UTF_8)
-          // Task-commit protocol: write to an attempt-unique file, then
-          // commit with a rename. Without it, speculative or zombie
-          // attempts of the same partition interleave bytes in one
-          // open staging file — silent corruption the collect() cannot
-          // see. A lost rename race means an identical-bytes attempt
-          // already committed (partitions format deterministically),
-          // so the loser just discards its file.
-          val attemptId = Option(org.apache.spark.TaskContext.get())
-            .map(_.taskAttemptId()).getOrElse(0L)
-          val attempt = new Path(f"$staging/part-$idx%05d.attempt-$attemptId")
-          val committed = new Path(f"$staging/part-$idx%05d")
-          val fs = attempt.getFileSystem(bcConf.value.value)
-          var any = false
-          // non-recursive: staging is made by the driver, so a task
-          // that runs after a failed archive removed it fails here
-          // instead of recreating it
-          val out = new java.io.BufferedOutputStream(
-            fs.createFile(attempt).overwrite(true).build(), 1 << 20)
-          try {
-            // row production + formatting are chiv's download leg —
-            // tag their failures at the source so the driver rethrows
-            // the right stage; writes to the staging file stay on the
-            // upload leg (destination-filesystem I/O)
-            var done = false
-            while (!done) {
-              val bytes =
-                try {
-                  if (it.hasNext) fmt.row(schema, it.next(), nullValue)
-                  else { done = true; null }
-                } catch {
-                  case e: ArchiveException => throw e
-                  case e: Exception => throw new ArchiveException("download", e)
-                }
-              if (!done) {
-                if (any) out.write(sepBytes)
-                out.write(bytes.getBytes(StandardCharsets.UTF_8))
-                any = true
-              }
-            }
-          } finally out.close()
-          // a killed task must not commit: after a job abort the driver
-          // deletes staging, and a straggler's late rename would
-          // recreate it (narrows the race; full protection against
-          // zombies is a committer-level guarantee Spark itself also
-          // only approximates)
-          val killed = Option(org.apache.spark.TaskContext.get()).exists(_.isInterrupted())
-          if (!any || killed) fs.delete(attempt, false)
-          else if (!fs.rename(attempt, committed)) fs.delete(attempt, false)
-          Iterator.single((idx, any))
-        }
+        df.queryExecution.toRdd.mapPartitionsWithIndex(
+          StagedPart.writer(staging, bcConf, fmt, schema, nullValue, java8, encoder))
       }
       // …then ONE sequential driver-side byte concatenation to the
       // exact key: pure I/O at filesystem copy speed (no row decode, no
@@ -205,7 +167,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       // The staged job runs inside the upload stage: its writes land on
       // the destination filesystem, so an unwritable destination is an
       // upload error (chiv parity) — formatter errors carry their own
-      // stage from the task, see above.
+      // stage from the task (see [[StagedPart]]).
       //
       // OVERLAPPED since r9 (guide §2.6 "overlap independent work"):
       // instead of a collect() barrier followed by the full concat, the
@@ -227,7 +189,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         val lock = new Object
         @volatile var failure: Option[Throwable] = None
         val fut = spark.sparkContext.submitJob[(Int, Boolean), (Int, Boolean), Unit](
-          stagedRdd, it => it.next(), 0 until n,
+          stagedRdd, StagedPart.result, 0 until n,
           (idx, res) => lock.synchronized {
             results(idx) = res; ready(idx) = true; lock.notifyAll()
           },
@@ -1181,4 +1143,65 @@ final case class RetentionReport(partitionsExpired: Int,
 
 final case class ArchiveManifest(format: String, files: Seq[ShardEntry], rows: Long)
 
+/** The task side of a single-object archive. Spark's closure cleaner
+  * reads the class file that defines each closure it ships, so these
+  * closures live in this small object rather than in [[Engine]]
+  * (OPTIMIZATION_r09.md §11).
+  */
+private object StagedPart {
 
+  /** Formats partition `idx`'s binary rows into `<staging>/part-<idx>`
+    * and returns (`idx`, whether the part has any row).
+    */
+  def writer(staging: String, conf: Broadcast[SerializableWritable[Configuration]],
+      fmt: RowFormatter, schema: StructType, nullValue: Option[String], java8: Boolean,
+      encoder: ExpressionEncoder[Row]): (Int, Iterator[InternalRow]) => Iterator[(Int, Boolean)] =
+    (idx, it) => {
+      val sep = fmt.separator
+      // Task-commit protocol: write to an attempt-unique file, then
+      // commit with a rename. Without it, speculative or zombie
+      // attempts of the same partition interleave bytes in one
+      // open staging file — silent corruption the collect() cannot
+      // see. A lost rename race means an identical-bytes attempt
+      // already committed (partitions format deterministically),
+      // so the loser just discards its file.
+      val attemptId = Option(org.apache.spark.TaskContext.get())
+        .map(_.taskAttemptId()).getOrElse(0L)
+      val attempt = new Path(f"$staging/part-$idx%05d.attempt-$attemptId")
+      val committed = new Path(f"$staging/part-$idx%05d")
+      val fs = attempt.getFileSystem(conf.value.value)
+      var any = false
+      // non-recursive: staging is made by the driver, so a task
+      // that runs after a failed archive removed it fails here
+      // instead of recreating it
+      val out = new RowOut(fs.createFile(attempt).overwrite(true).build(), encoder)
+      try {
+        // row production + formatting are chiv's download leg —
+        // tag their failures at the source so the driver rethrows
+        // the right stage; `out` tags its writes to the staging
+        // file as upload errors (destination-filesystem I/O)
+        try {
+          val write = RowFormatter.writer(fmt, schema, nullValue, java8)
+          while (it.hasNext) {
+            if (any) out.text.append(sep)
+            write(out, it.next())
+            any = true
+          }
+        } catch {
+          case e: ArchiveException => throw e
+          case e: Exception => throw new ArchiveException("download", e)
+        }
+      } finally out.close()
+      // a killed task must not commit: after a job abort the driver
+      // deletes staging, and a straggler's late rename would
+      // recreate it (narrows the race; full protection against
+      // zombies is a committer-level guarantee Spark itself also
+      // only approximates)
+      val killed = Option(org.apache.spark.TaskContext.get()).exists(_.isInterrupted())
+      if (!any || killed) fs.delete(attempt, false)
+      else if (!fs.rename(attempt, committed)) fs.delete(attempt, false)
+      Iterator.single((idx, any))
+    }
+
+  val result: Iterator[(Int, Boolean)] => (Int, Boolean) = _.next()
+}

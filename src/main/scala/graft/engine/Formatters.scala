@@ -1,7 +1,12 @@
 package graft.engine
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.lang.{StringBuilder => JStringBuilder}
 import java.time.format.DateTimeFormatter
@@ -20,9 +25,10 @@ import java.util.Locale
   * typed (SURVEY.md §1.4).
   *
   * Each built-in formatter renders through a [[Plan]] built once per
-  * (schema, placeholder) and memoized in a [[PlanMemo]]; the per-row
-  * work is appending cells into one `StringBuilder`
-  * (OPTIMIZATION_r09.md §10).
+  * (schema, placeholder, datetime choice) and memoized in a
+  * [[PlanMemo]]. A plan renders a `Row` into one `StringBuilder`
+  * (OPTIMIZATION_r09.md §10), and writes Spark's binary `InternalRow`
+  * straight into a task's [[RowOut]] bytes (§11).
   */
 object Render {
 
@@ -59,12 +65,8 @@ object Render {
     case s: String => sb.append(s)
     case l: Long => sb.append(l)
     case i: Int => sb.append(i)
-    case d: Double =>
-      if (d.isWhole && math.abs(d) < 1e15) sb.append(d.toLong) else sb.append(d)
-    // floats keep their own shortest form — widening to double would
-    // print binary noise (3.14f.toDouble = 3.140000104904175)
-    case f: Float =>
-      if (f.isWhole && math.abs(f) < 1e15f) sb.append(f.toLong) else sb.append(f)
+    case d: Double => appendDouble(sb, d)
+    case f: Float => appendFloat(sb, f)
     case dec: java.math.BigDecimal => sb.append(dec.stripTrailingZeros.toPlainString)
     case i: Instant => if (!appendIso(sb, i)) sb.append(ts(i))
     case t: java.sql.Timestamp => if (!appendIso(sb, t)) sb.append(ts(t.toInstant))
@@ -76,6 +78,14 @@ object Render {
     case b: Array[Byte] => sb.append(java.util.Base64.getEncoder.encodeToString(b))
     case other => sb.append(other.toString)
   }
+
+  private[engine] def appendDouble(sb: JStringBuilder, d: Double): Unit =
+    if (d.isWhole && math.abs(d) < 1e15) sb.append(d.toLong) else sb.append(d)
+
+  // floats keep their own shortest form — widening to double would
+  // print binary noise (3.14f.toDouble = 3.140000104904175)
+  private[engine] def appendFloat(sb: JStringBuilder, f: Float): Unit =
+    if (f.isWhole && math.abs(f) < 1e15f) sb.append(f.toLong) else sb.append(f)
 
   private def ts(i: Instant): String = {
     val utc = i.atZone(ZoneOffset.UTC)
@@ -110,7 +120,10 @@ object Render {
     case _ => false
   }
 
-  private def appendEpoch(sb: JStringBuilder, sec: Long, nano: Int): Boolean =
+  /** [[appendIso]] of the instant `sec` seconds and `nano` nanoseconds
+    * after the epoch.
+    */
+  private[engine] def appendEpoch(sb: JStringBuilder, sec: Long, nano: Int): Boolean =
     (sec >= IsoFromSec && sec < IsoUntilSec) && {
       val date = LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
       appendDateTime(sb, date.getYear, date.getMonthValue, date.getDayOfMonth,
@@ -118,7 +131,7 @@ object Render {
       true
     }
 
-  private def appendDate(sb: JStringBuilder, d: LocalDate): Boolean = {
+  private[engine] def appendDate(sb: JStringBuilder, d: LocalDate): Boolean = {
     val y = d.getYear
     (y >= 1 && y <= 9999) && { ymd(sb, y, d.getMonthValue, d.getDayOfMonth); true }
   }
@@ -176,92 +189,302 @@ private[engine] trait Cell {
   def append(sb: JStringBuilder, v: Any): Unit
 }
 
-/** A built-in formatter's rendering of one (schema, placeholder):
-  * everything that depends only on them is worked out when the plan
-  * is built. Immutable, so one plan is safely shared by threads.
-  */
-private[engine] abstract class Plan(val schema: StructType, val nullValue: Option[String]) {
-  def row(r: Row): String
+/** Writes the non-null cell at ordinal `c` of a binary row into `out`. */
+private[engine] trait BinaryCell {
+  def write(out: RowOut, r: InternalRow, c: Int): Unit
 }
 
-/** JSON and YAML: cells in name order (stable, so duplicate names keep
-  * schema order), each after its pre-rendered key, between `open` and
-  * `close`. Each key is the field name through `text`, as Go escapes a
-  * map key like a value; `key` adds the separators. Booleans and
-  * numbers are written bare; any other text, including the
-  * placeholder of a NULL cell, through `text`.
+/** A built-in format: the rules its [[Plan]]s follow. A row is
+  * [[rowOpen]], then each column's [[prefix]] and cell, then
+  * [[rowClose]]. Booleans and numbers are written bare, a date or
+  * timestamp with a four-digit year as ISO text between [[isoQuote]]s,
+  * and any other text, including the placeholder of a NULL cell,
+  * through [[text]].
   */
-private[engine] final class SortedPlan(schema: StructType, nullValue: Option[String],
-    open: String, key: (String, Int) => String, text: (JStringBuilder, String) => Unit,
-    close: String) extends Plan(schema, nullValue) {
+private[engine] abstract class PlannedFormatter extends RowFormatter {
+  private[engine] def rowOpen: String
+  private[engine] def rowClose: String
+  /** Columns in name order (stable, so duplicate names keep schema
+    * order), or else in schema order.
+    */
+  private[engine] def sorted: Boolean
+  /** Written before column `k`, whose name [[text]] renders as `name`. */
+  private[engine] def prefix(name: String, k: Int): String
+  /** A NULL cell without a placeholder. */
+  private[engine] def nullText: String
+  /** ISO text with a four-digit year holds nothing CSV quotes or JSON
+    * escapes, and YAML resolves it as a timestamp: it is written as is
+    * between these quotes.
+    */
+  private[engine] def isoQuote: String
+  private[engine] def text(sb: JStringBuilder, s: String): Unit
+  /** True only when [[text]] writes the ASCII text `s` as
+    * `quote + s + quote`: the binary plan then copies a string's bytes
+    * as they are.
+    */
+  private[engine] def plain(s: CharSequence): Boolean
+  private[engine] def quote: String
+
+  private[engine] val plans = new PlanMemo(new Plan(this, _, _, _))
+
+  def row(schema: StructType, r: Row, nullValue: Option[String]): String =
+    plans(schema, nullValue, java8 = false).row(r)
+}
+
+/** A built-in formatter's rendering of one (schema, placeholder,
+  * `spark.sql.datetime.java8API.enabled`): everything that depends only
+  * on them is worked out when the plan is built. Immutable, so one plan
+  * is safely shared by threads.
+  *
+  * [[write]] gives the bytes of [[row]] over the `Row` that Spark's
+  * deserializer makes of the binary row: strings, numbers, dates and
+  * timestamps are read from the binary row; every other cell is first
+  * converted as the deserializer converts it. `java8` tells which value
+  * classes that deserializer makes for dates and timestamps.
+  */
+private[engine] final class Plan(f: PlannedFormatter, val schema: StructType,
+    val nullValue: Option[String], val java8: Boolean) {
   private val valueCell: Cell = (sb, v) => v match {
     case _: Boolean | _: Int | _: Long | _: Short | _: Byte | _: Double | _: Float |
         _: java.math.BigDecimal => Render.append(sb, v)
-    case other => text(sb, Render.text(other))
+    case other => f.text(sb, Render.text(other))
   }
   private val stringCell: Cell = (sb, v) => v match {
-    case s: String => text(sb, s)
+    case s: String => f.text(sb, s)
     case other => valueCell.append(sb, other)
   }
-  // ISO text with a four-digit year holds nothing JSON escapes and
-  // resolves as a YAML timestamp: both write it double-quoted as is
   private val isoCell: Cell = (sb, v) => {
     val from = sb.length
-    sb.append('"')
-    if (Render.appendIso(sb, v)) sb.append('"')
+    sb.append(f.isoQuote)
+    if (Render.appendIso(sb, v)) sb.append(f.isoQuote)
     else { sb.setLength(from); valueCell.append(sb, v) }
   }
 
-  private val sorted = schema.fields.zipWithIndex.sortBy(_._1.name)
-  private val columns = sorted.map(_._2)
-  private val keys = sorted.zipWithIndex.map { case ((f, _), k) => key(rendered(f.name), k) }
-  private val cells = sorted.map { case (f, _) =>
-    f.dataType match {
+  private val order = {
+    val fields = schema.fields.zipWithIndex
+    if (f.sorted) fields.sortBy(_._1.name) else fields
+  }
+  private val columns = order.map(_._2)
+  private val prefixes = order.zipWithIndex.map { case ((field, _), k) => f.prefix(rendered(field.name), k) }
+  private val cells = order.map { case (field, _) =>
+    field.dataType match {
       case StringType => stringCell
       case DateType | TimestampType | TimestampNTZType => isoCell
       case _ => valueCell
     }
   }
-  private val nullText = nullValue.fold("null")(rendered)
+  private val nullCell = nullValue.fold(f.nullText)(rendered)
 
   private def rendered(s: String): String = {
     val sb = new JStringBuilder
-    text(sb, s)
+    f.text(sb, s)
     sb.toString
   }
 
   def row(r: Row): String = {
     val sb = new JStringBuilder(64 * (columns.length + 1))
-    sb.append(open)
+    sb.append(f.rowOpen)
     var k = 0
     while (k < columns.length) {
-      sb.append(keys(k))
+      sb.append(prefixes(k))
       val v = r.get(columns(k))
-      if (v == null) sb.append(nullText) else cells(k).append(sb, v)
+      if (v == null) sb.append(nullCell) else cells(k).append(sb, v)
       k += 1
     }
-    sb.append(close).toString
+    sb.append(f.rowClose).toString
+  }
+
+  private val binaryCells = order.zip(cells).map { case ((field, _), cell) => binaryCell(field.dataType, cell) }
+
+  def write(out: RowOut, r: InternalRow): Unit = {
+    out.startRow()
+    val sb = out.text
+    sb.append(f.rowOpen)
+    var k = 0
+    while (k < columns.length) {
+      sb.append(prefixes(k))
+      val c = columns(k)
+      if (r.isNullAt(c)) sb.append(nullCell) else binaryCells(k).write(out, r, c)
+      k += 1
+    }
+    sb.append(f.rowClose)
+  }
+
+  /** Dates and timestamps before the Julian/Gregorian switch reach a
+    * `Row` as `java.sql` values rebased in the JVM zone, unless `java8`:
+    * those take the deserializer's own conversion.
+    */
+  private def binaryCell(t: DataType, cell: Cell): BinaryCell = t match {
+    case BooleanType => (out, r, c) => out.text.append(r.getBoolean(c))
+    case ByteType => (out, r, c) => out.text.append(r.getByte(c).toInt)
+    case ShortType => (out, r, c) => out.text.append(r.getShort(c).toInt)
+    case IntegerType => (out, r, c) => out.text.append(r.getInt(c))
+    case LongType => (out, r, c) => out.text.append(r.getLong(c))
+    case DoubleType => (out, r, c) => Render.appendDouble(out.text, r.getDouble(c))
+    case FloatType => (out, r, c) => Render.appendFloat(out.text, r.getFloat(c))
+    case StringType => (out, r, c) => {
+      val s = r.getUTF8String(c)
+      if (!out.plain(s, f)) cell.append(out.text, s.toString)
+    }
+    case DateType =>
+      val value: Int => Any = if (java8) DateTimeUtils.daysToLocalDate else DateTimeUtils.toJavaDate
+      (out, r, c) => {
+        val days = r.getInt(c)
+        val sb = out.text
+        val from = sb.length
+        sb.append(f.isoQuote)
+        if ((java8 || days >= RebaseDateTime.lastSwitchGregorianDay) &&
+          Render.appendDate(sb, LocalDate.ofEpochDay(days))) sb.append(f.isoQuote)
+        else { sb.setLength(from); cell.append(sb, value(days)) }
+      }
+    case TimestampType | TimestampNTZType =>
+      val ntz = t == TimestampNTZType
+      val value: Long => Any =
+        if (ntz) DateTimeUtils.microsToLocalDateTime
+        else if (java8) DateTimeUtils.microsToInstant
+        else DateTimeUtils.toJavaTimestamp
+      (out, r, c) => {
+        val us = r.getLong(c)
+        val sb = out.text
+        val from = sb.length
+        sb.append(f.isoQuote)
+        if ((ntz || java8 || us >= RebaseDateTime.lastSwitchGregorianTs) &&
+          Render.appendEpoch(sb, Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L).toInt * 1000))
+          sb.append(f.isoQuote)
+        else { sb.setLength(from); cell.append(sb, value(us)) }
+      }
+    case d: DecimalType => (out, r, c) => cell.append(out.text, r.getDecimal(c, d.precision, d.scale).toJavaBigDecimal)
+    case BinaryType => (out, r, c) => cell.append(out.text, r.getBinary(c))
+    case _ => (out, r, c) => cell.append(out.text, out.row(r).get(c))
   }
 }
 
 /** The last plan a formatter built, reused while the schema (by
-  * equality) and the placeholder stay the same. The plan is published
-  * through a volatile field: threads that race on a change of schema
-  * each build a correct plan, and the last one stays.
+  * equality), the placeholder and the datetime choice stay the same.
+  * The plan is published through a volatile field: threads that race
+  * on a change of key each build a correct plan, and the last one
+  * stays.
   */
-private[engine] final class PlanMemo(build: (StructType, Option[String]) => Plan)
+private[engine] final class PlanMemo(build: (StructType, Option[String], Boolean) => Plan)
     extends Serializable {
   @transient @volatile private var last: Plan = _
 
-  def apply(schema: StructType, nullValue: Option[String]): Plan = {
+  def apply(schema: StructType, nullValue: Option[String], java8: Boolean): Plan = {
     val p = last
-    if (p != null && ((p.schema eq schema) || p.schema == schema) && p.nullValue == nullValue) p
+    if (p != null && ((p.schema eq schema) || p.schema == schema) && p.nullValue == nullValue &&
+      p.java8 == java8) p
     else {
-      val fresh = build(schema, nullValue)
+      val fresh = build(schema, nullValue, java8)
       last = fresh
       fresh
     }
   }
+}
+
+/** One task's output: text appended to [[text]], and the bytes of
+  * strings [[plain]] copies as they are, go in order into a reused
+  * buffer, which is written to `sink` when it is full and on [[close]];
+  * a failed write is an upload error. `encoder` is the DataFrame's
+  * `Row` encoder, made on the driver; it is bound and its deserializer
+  * made on first use.
+  */
+private[engine] final class RowOut(sink: java.io.OutputStream, encoder: ExpressionEncoder[Row]) {
+  private val buf = new Array[Byte](1 << 20)
+  private var pos = 0
+  private var utf16 = new Array[Char](1 << 12)
+  private val view = new AsciiView
+  private lazy val deserializer = encoder.resolveAndBind().createDeserializer()
+  private var current: Row = _
+
+  /** Text not yet encoded into the buffer. */
+  val text = new JStringBuilder(1 << 12)
+
+  /** Writes `s` between `f.quote`s, its bytes as they are, and returns
+    * true when it is ASCII that `f` writes as is; otherwise writes
+    * nothing and returns false.
+    */
+  def plain(s: UTF8String, f: PlannedFormatter): Boolean =
+    s.isFullAscii && f.plain(view.of(s)) && {
+      text.append(f.quote)
+      emit()
+      val n = s.numBytes
+      if (n > buf.length - pos) flush()
+      if (n > buf.length) upload(s.writeTo(sink))
+      else { s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos); pos += n }
+      text.append(f.quote)
+      true
+    }
+
+  /** Starts a row: forgets the row [[row]] deserialized, and writes the
+    * text of earlier rows once it has grown.
+    */
+  def startRow(): Unit = {
+    current = null
+    if (text.length >= (1 << 12)) emit()
+  }
+
+  /** `r` as Spark's deserializer makes it, once per [[startRow]]. */
+  def row(r: InternalRow): Row = {
+    if (current == null) current = deserializer(r)
+    current
+  }
+
+  def close(): Unit = try { emit(); flush() } finally sink.close()
+
+  /** Writes [[text]] as UTF-8, as `String.getBytes` encodes it (an
+    * unpaired surrogate becomes `?`), and empties it.
+    */
+  private def emit(): Unit = {
+    val n = text.length
+    if (utf16.length < n) utf16 = new Array[Char](math.max(n, 2 * utf16.length))
+    text.getChars(0, n, utf16, 0)
+    text.setLength(0)
+    val cs = utf16
+    var i = 0
+    while (i < n) {
+      if (buf.length - pos < 4) flush()
+      val c = cs(i)
+      if (c < 0x80) {
+        // the ASCII run, as far as the buffer holds it
+        val end = math.min(n, i + buf.length - pos)
+        var p = pos
+        while (i < end && cs(i) < 0x80) { buf(p) = cs(i).toByte; p += 1; i += 1 }
+        pos = p
+      } else {
+        if (c < 0x800) {
+          buf(pos) = (0xc0 | c >> 6).toByte; buf(pos + 1) = (0x80 | c & 0x3f).toByte; pos += 2
+        } else if (!Character.isSurrogate(c)) {
+          buf(pos) = (0xe0 | c >> 12).toByte; buf(pos + 1) = (0x80 | c >> 6 & 0x3f).toByte
+          buf(pos + 2) = (0x80 | c & 0x3f).toByte; pos += 3
+        } else if (Character.isHighSurrogate(c) && i + 1 < n && Character.isLowSurrogate(cs(i + 1))) {
+          val cp = Character.toCodePoint(c, cs(i + 1))
+          buf(pos) = (0xf0 | cp >> 18).toByte; buf(pos + 1) = (0x80 | cp >> 12 & 0x3f).toByte
+          buf(pos + 2) = (0x80 | cp >> 6 & 0x3f).toByte; buf(pos + 3) = (0x80 | cp & 0x3f).toByte
+          pos += 4; i += 1
+        } else { buf(pos) = '?'; pos += 1 }
+        i += 1
+      }
+    }
+  }
+
+  private def flush(): Unit = {
+    if (pos > 0) upload(sink.write(buf, 0, pos))
+    pos = 0
+  }
+
+  private def upload(io: => Unit): Unit =
+    try io catch { case e: java.io.IOException => throw new ArchiveException("upload", e) }
+}
+
+/** The bytes of an ASCII `UTF8String`, read as chars. */
+private final class AsciiView extends CharSequence {
+  private var s: UTF8String = _
+
+  def of(s: UTF8String): AsciiView = { this.s = s; this }
+  def length: Int = s.numBytes
+  def charAt(i: Int): Char = s.getByte(i).toChar
+  def subSequence(start: Int, end: Int): CharSequence = toString.substring(start, end)
+  override def toString: String = s.toString
 }
 
 /** Go encoding/csv semantics: comma delimiter, `\n` terminator,
@@ -269,45 +492,25 @@ private[engine] final class PlanMemo(build: (StructType, Option[String]) => Plan
   * or LF, the field `\.`, or a first character that is
   * `unicode.IsSpace`), `"` escaped by doubling. Header on open.
   */
-object CsvFormatter extends RowFormatter {
+object CsvFormatter extends PlannedFormatter {
   def open(schema: StructType): String = schema.fieldNames.map(field).mkString(",") + "\n"
-  def row(schema: StructType, r: Row, nullValue: Option[String]): String =
-    plans(schema, nullValue).row(r)
   val separator = ""
   val close = ""
 
-  private val plans = new PlanMemo(new CsvPlan(_, _))
+  private[engine] val rowOpen = ""
+  private[engine] val rowClose = "\n"
+  private[engine] val sorted = false
+  private[engine] def prefix(name: String, k: Int): String = if (k == 0) "" else ","
+  private[engine] val nullText = ""
+  private[engine] val isoQuote = ""
+  private[engine] val quote = ""
+  private[engine] def plain(s: CharSequence): Boolean = !needsQuotes(s)
 
-  /** Every cell of the row, in row order, after its comma. */
-  private final class CsvPlan(schema: StructType, nullValue: Option[String])
-      extends Plan(schema, nullValue) {
-    private val nullText = nullValue.fold("")(field)
-
-    def row(r: Row): String = {
-      val sb = new JStringBuilder(32 * (r.length + 1))
-      var i = 0
-      while (i < r.length) {
-        if (i > 0) sb.append(',')
-        val v = r.get(i)
-        if (v == null) sb.append(nullText)
-        else {
-          // render in place; quote only the rare cell that needs it
-          val from = sb.length
-          Render.append(sb, v)
-          if (needsQuotes(sb, from)) {
-            val s = sb.substring(from)
-            sb.setLength(from)
-            quote(sb, s)
-          }
-        }
-        i += 1
-      }
-      sb.append('\n').toString
-    }
-  }
+  private[engine] def text(sb: JStringBuilder, s: String): Unit =
+    if (!needsQuotes(s)) sb.append(s) else quote(sb, s)
 
   private def field(s: String): String =
-    if (!needsQuotes(s, 0)) s
+    if (!needsQuotes(s)) s
     else {
       val sb = new JStringBuilder(s.length + 8)
       quote(sb, s)
@@ -325,18 +528,18 @@ object CsvFormatter extends RowFormatter {
     sb.append('"')
   }
 
-  /** Go's `fieldNeedsQuotes` for the field `s.subSequence(from)`. */
-  private def needsQuotes(s: CharSequence, from: Int): Boolean = {
-    val n = s.length - from
+  /** Go's `fieldNeedsQuotes`. */
+  private def needsQuotes(s: CharSequence): Boolean = {
+    val n = s.length
     if (n == 0) return false
-    if (n == 2 && s.charAt(from) == '\\' && s.charAt(from + 1) == '.') return true
-    var i = from
-    while (i < s.length) {
+    if (n == 2 && s.charAt(0) == '\\' && s.charAt(1) == '.') return true
+    var i = 0
+    while (i < n) {
       val c = s.charAt(i)
       if (c == ',' || c == '"' || c == '\n' || c == '\r') return true
       i += 1
     }
-    goSpace(s.charAt(from))
+    goSpace(s.charAt(0))
   }
 
   /** Go's `unicode.IsSpace` (every such rune is one UTF-16 char). */
@@ -347,21 +550,35 @@ object CsvFormatter extends RowFormatter {
 }
 
 /** One JSON array of objects with alphabetically ordered keys (Go map
-  * marshaling order) and Go's HTML-escaping of `<` `>` `&`
-  * (json.Marshal default) — byte-compatible with the golden corpus.
+  * marshaling order), Go's HTML-escaping of `<` `>` `&` (json.Marshal
+  * default) and its escapes of U+2028 and U+2029 — byte-compatible
+  * with the golden corpus.
   */
-object JsonArrayFormatter extends RowFormatter {
+object JsonArrayFormatter extends PlannedFormatter {
   def open(schema: StructType): String = "["
-  def row(schema: StructType, r: Row, nullValue: Option[String]): String =
-    plans(schema, nullValue).row(r)
   val separator = ","
   val close = "]"
 
-  private val plans = new PlanMemo((schema, nullValue) =>
-    new SortedPlan(schema, nullValue, "{",
-      (name, k) => (if (k == 0) "" else ",") + name + ":", string, "}"))
+  private[engine] val rowOpen = "{"
+  private[engine] val rowClose = "}"
+  private[engine] val sorted = true
+  private[engine] def prefix(name: String, k: Int): String = (if (k == 0) "" else ",") + name + ":"
+  private[engine] val nullText = "null"
+  private[engine] val isoQuote = "\""
+  private[engine] val quote = "\""
 
-  private def string(sb: JStringBuilder, s: String): Unit = {
+  private[engine] def plain(s: CharSequence): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < ' ' || c == '"' || c == '\\' || c == '<' || c == '>' || c == '&' ||
+        c == '\u2028' || c == '\u2029') return false
+      i += 1
+    }
+    true
+  }
+
+  private[engine] def text(sb: JStringBuilder, s: String): Unit = {
     sb.append('"')
     var i = 0
     while (i < s.length) {
@@ -374,6 +591,8 @@ object JsonArrayFormatter extends RowFormatter {
         case '<' => sb.append("\\u003c")
         case '>' => sb.append("\\u003e")
         case '&' => sb.append("\\u0026")
+        case '\u2028' => sb.append("\\u2028")
+        case '\u2029' => sb.append("\\u2029")
         case c if c < ' ' => sb.append("\\u"); Render.hex(sb, c, 4)
         case c => sb.append(c)
       }
@@ -390,16 +609,20 @@ object JsonArrayFormatter extends RowFormatter {
   * punctuation (golden: ts_column double-quoted, json_column
   * single-quoted, plain strings bare).
   */
-object YamlFormatter extends RowFormatter {
+object YamlFormatter extends PlannedFormatter {
   def open(schema: StructType): String = ""
-  def row(schema: StructType, r: Row, nullValue: Option[String]): String =
-    plans(schema, nullValue).row(r)
   val separator = ""
   val close = ""
 
-  private val plans = new PlanMemo((schema, nullValue) =>
-    new SortedPlan(schema, nullValue, "",
-      (name, k) => (if (k == 0) "- " else "\n  ") + name + ": ", scalar, "\n"))
+  private[engine] val rowOpen = ""
+  private[engine] val rowClose = "\n"
+  private[engine] val sorted = true
+  private[engine] def prefix(name: String, k: Int): String = (if (k == 0) "- " else "\n  ") + name + ": "
+  private[engine] val nullText = "null"
+  private[engine] val isoQuote = "\""
+  private[engine] val quote = ""
+  private[engine] def plain(s: CharSequence): Boolean =
+    !control(s) && !mayLookTyped(s) && plainSafe(s)
 
   private val typedLike =
     ("^(true|false|yes|no|on|off|null|~|[-+]?[0-9]+|[-+]?(\\.inf)|\\.nan|" +
@@ -410,7 +633,7 @@ object YamlFormatter extends RowFormatter {
     * then need not run. A letter starts only the words, of 2–5 letters
     * (lowercasing never shortens a text); non-ASCII is left to the regex.
     */
-  private def mayLookTyped(s: String): Boolean = s.nonEmpty && {
+  private def mayLookTyped(s: CharSequence): Boolean = s.length > 0 && {
     val c = s.charAt(0)
     if (c >= 0x80) true
     else if ("tfynoTFYNO".indexOf(c) >= 0) s.length >= 2 && s.length <= 5
@@ -423,10 +646,10 @@ object YamlFormatter extends RowFormatter {
     t
   }
 
-  private def plainSafe(s: String): Boolean = {
+  private def plainSafe(s: CharSequence): Boolean = {
     val n = s.length
     if (n == 0 || s.charAt(0) == ' ' || s.charAt(n - 1) == ' ' || s.charAt(n - 1) == ':' ||
-      s.startsWith("- ")) return false
+      (n >= 2 && s.charAt(0) == '-' && s.charAt(1) == ' ')) return false
     var i = 0
     while (i < n) {
       val c = s.charAt(i)
@@ -436,15 +659,18 @@ object YamlFormatter extends RowFormatter {
     true
   }
 
-  private def scalar(sb: JStringBuilder, s: String): Unit = {
-    var control = false
+  private def control(s: CharSequence): Boolean = {
     var i = 0
-    while (!control && i < s.length) { control = s.charAt(i) < ' '; i += 1 }
-    if (control || (mayLookTyped(s) && typedLike.matches(s.toLowerCase(Locale.ROOT)))) {
+    while (i < s.length) { if (s.charAt(i) < ' ') return true; i += 1 }
+    false
+  }
+
+  private[engine] def text(sb: JStringBuilder, s: String): Unit =
+    if (control(s) || (mayLookTyped(s) && typedLike.matches(s.toLowerCase(Locale.ROOT)))) {
       // double-quoted style: the only style that represents control
       // characters faithfully (single-quoted folds raw newlines)
       sb.append('"')
-      i = 0
+      var i = 0
       while (i < s.length) {
         s.charAt(i) match {
           case '\\' => sb.append("\\\\")
@@ -460,7 +686,7 @@ object YamlFormatter extends RowFormatter {
       sb.append('"')
     } else if (!plainSafe(s)) {
       sb.append('\'')
-      i = 0
+      var i = 0
       while (i < s.length) {
         val c = s.charAt(i)
         if (c == '\'') sb.append("''") else sb.append(c)
@@ -468,7 +694,6 @@ object YamlFormatter extends RowFormatter {
       }
       sb.append('\'')
     } else sb.append(s)
-  }
 }
 
 object RowFormatter {
@@ -479,5 +704,18 @@ object RowFormatter {
     case Format.Custom(formatter, _) => formatter
     case columnar => throw new IllegalArgumentException(
       s"$columnar has no row formatter — columnar formats go through Spark's writers")
+  }
+
+  /** How a task writes `fmt`'s rows of `schema` from Spark's binary
+    * rows: a built-in format through its plan, any other through its
+    * own `row` over the `Row` that `out` deserializes.
+    */
+  private[engine] def writer(fmt: RowFormatter, schema: StructType, nullValue: Option[String],
+      java8: Boolean): (RowOut, InternalRow) => Unit = fmt match {
+    case p: PlannedFormatter => p.plans(schema, nullValue, java8).write
+    case custom => (out, r) => {
+      out.startRow()
+      out.text.append(custom.row(schema, out.row(r), nullValue))
+    }
   }
 }

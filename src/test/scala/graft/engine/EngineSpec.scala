@@ -147,16 +147,40 @@ class EngineSpec extends SparkSpec {
     assert(content.linesIterator.size == 6) // header + 5 regions
   }
 
-  test("archiving an sf0.001 table submits exactly one Spark job, single CSV and sharded Parquet") {
+  test("archiving an sf0.001 table submits exactly one Spark job: single CSV, JSON, YAML and custom objects, sharded Parquet") {
     // a new driver-side job (a schema probe, a count) fails here
     val dir = tmpDir.toString
-    val single = jobsDuring(new Engine(spark).archive(sf0001, "orders", dir))
-    assert(single._2 == 1, s"single CSV object: ${single._2} jobs")
+    // a custom format sees the value classes of the Row path's cells:
+    // a java.sql.Timestamp here, not a count of micros
+    object Classes extends RowFormatter {
+      def open(schema: org.apache.spark.sql.types.StructType): String = "#\n"
+      def row(schema: org.apache.spark.sql.types.StructType,
+          r: org.apache.spark.sql.Row, nullValue: Option[String]): String =
+        r.toSeq.map(v => s"${v.getClass.getSimpleName}:$v").mkString("|", "|", "\n")
+      val separator = ""
+      val close = "#\n"
+    }
+    for (f <- Seq(Format.Csv, Format.JsonArray, Format.Yaml, Format.Custom(Classes, "cls"))) {
+      val single = jobsDuring(new Engine(spark, ArchiveConfig(format = f)).archive(sf0001, "orders", dir))
+      assert(single._2 == 1, s"single $f object: ${single._2} jobs")
+    }
+    val src = spark.read.parquet(s"$sf0001/orders.parquet")
+    val rendered = src.rdd.collect().map(Classes.row(src.schema, _, None)).mkString
+    assert(read(s"$dir/orders.cls") == "#\n" + rendered + "#\n")
     val sharded = jobsDuring(new Engine(spark, ArchiveConfig(format = Format.Parquet, sharded = true))
       .archive(sf0001, "orders", dir))
     assert(sharded._2 == 1, s"sharded Parquet archive: ${sharded._2} jobs")
     assert(spark.read.parquet(sharded._1).count() ==
       spark.read.parquet(s"$sf0001/orders.parquet").count())
+  }
+
+  test("lint: Engine.scala formats the one planned query, never a second deserializing one") {
+    val source = new String(Files.readAllBytes(Paths.get("src/main/scala/graft/engine/Engine.scala")),
+      StandardCharsets.UTF_8)
+    val offenders = source.linesIterator.zipWithIndex.collect {
+      case (line, i) if """\.rdd\b""".r.findFirstIn(line).isDefined => s"${i + 1}: ${line.trim}"
+    }.toList
+    assert(offenders.isEmpty, s".rdd in Engine.scala:\n  ${offenders.mkString("\n  ")}")
   }
 
   test("columnar formats: exact-key parquet object round-trips") {

@@ -1,19 +1,26 @@
 package graft.engine
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+import java.util.TimeZone
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 /** The planned formatters against the per-row reference
   * ([[ReferenceCsv]], [[ReferenceJson]], [[ReferenceYaml]]): byte
   * equality on generated rows of every cell type, on awkward schemas,
   * with and without a placeholder, and from threads that share the
-  * memoized plans.
+  * memoized plans. The plans' binary leg is held to their own `row`
+  * over the `Row` Spark deserializes from the same binary row.
   */
 class FormatterDifferentialSpec extends AnyFunSuite {
 
@@ -36,7 +43,7 @@ class FormatterDifferentialSpec extends AnyFunSuite {
     "\u0000nul", "\u001fus", "- dash", "-", "key: value", "trail:", "a:b", "#hash", "@at",
     "`tick`", "{\"k\":1}", "[1]", "%pct", "* star", "!bang", "|pipe", ">gt", "<lt", "&amp",
     "back\\slash", "\\.", "\\.x", "trail ", "\u00a0nbsp", "\u2005en", "\u3000wide",
-    "\u000bvt", "\u0085nel", "\u2028ls", "\u00fcn\u00efc\u00f8d\u00e9", "\u65e5\u672c\u8a9e",
+    "\u000bvt", "\u0085nel", "\u2028ls", "\u2029ps", "\tlead", "\u00fcn\u00efc\u00f8d\u00e9", "\u65e5\u672c\u8a9e",
     "emoji \ud83d\ude80", "\ud83d\ude80", "\u0130stanbul", "\u212aelvin", "\u03a9mega", "\u0131nf")
 
   private val stringGen: Gen[String] = Gen.frequency(
@@ -194,6 +201,100 @@ class FormatterDifferentialSpec extends AnyFunSuite {
     assert(csv(Instant.parse("9999-12-31T23:59:59.000000500Z")) == "9999-12-31T23:59:59.000000Z\n")
     assert(csv(Instant.parse("2024-02-29T01:02:03.456Z")) == "2024-02-29T01:02:03.456000Z\n")
     assert(csv(Instant.parse("+10000-01-01T00:00:00Z")) == "+10000-01-01T00:00:00Z\n")
+  }
+
+  // -- the binary leg ---------------------------------------------------
+
+  /** The rows of `rs` in Spark's binary form, written by every built-in
+    * plan and each placeholder, against that formatter's `row` over the
+    * `Row` that Spark's deserializer makes of the same binary row: with
+    * `spark.sql.datetime.java8API.enabled` off and on, each under two
+    * JVM default zones that are not UTC.
+    */
+  private def assertBinarySame(schema: StructType, rs: Seq[Row], what: String): Unit =
+    for (zone <- Seq("America/Los_Angeles", "Asia/Kolkata"); java8 <- Seq(false, true)) {
+      val saved = TimeZone.getDefault
+      TimeZone.setDefault(TimeZone.getTimeZone(zone))
+      try {
+        val conf = new SQLConf
+        conf.setConf(SQLConf.DATETIME_JAVA8API_ENABLED, java8)
+        val encoder = SQLConf.withExistingConf(conf) {
+          ExpressionEncoder(RowEncoder.encoderFor(schema, lenient = true))
+        }
+        val serialize = encoder.createSerializer()
+        assertBinaryRows(schema, rs.map(r => serialize(storable(schema, r)).copy()), encoder, java8,
+          s"$what, $zone, java8API $java8")
+      } finally TimeZone.setDefault(saved)
+    }
+
+  /** A row whose `Row` path throws (a `java.sql.Date` of a year before
+    * 1 has no `LocalDate`) must throw on the binary path too.
+    */
+  private def assertBinaryRows(schema: StructType, irs: Seq[InternalRow],
+      encoder: ExpressionEncoder[Row], java8: Boolean, what: String): Unit = {
+    val deserialize = encoder.resolveAndBind().createDeserializer()
+    for ((name, planned, _) <- pairs; nul <- placeholders) {
+      val write = RowFormatter.writer(planned, schema, nul, java8)
+      val (fine, failing) = irs.partition(ir => scala.util.Try(planned.row(schema, deserialize(ir), nul)).isSuccess)
+      failing.foreach { ir =>
+        intercept[Exception](write(new RowOut(new java.io.ByteArrayOutputStream, encoder), ir))
+      }
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new RowOut(bytes, encoder)
+      fine.foreach(write(out, _))
+      out.close()
+      val want = fine.map(ir => planned.row(schema, deserialize(ir), nul).getBytes(StandardCharsets.UTF_8))
+      val got = bytes.toByteArray
+      if (!(got sameElements want.flatten)) {
+        val ends = want.scanLeft(0)(_ + _.length).tail
+        val k = want.indices.find(k => !got.slice(ends(k) - want(k).length, ends(k)).sameElements(want(k)))
+          .getOrElse(want.length - 1)
+        fail(s"$name, $what, placeholder $nul, row ${deserialize(fine(k)).toSeq.map(String.valueOf)}: got " +
+          new String(got.slice(ends(k) - want(k).length, ends(k)), StandardCharsets.UTF_8) +
+          " want " + new String(want(k), StandardCharsets.UTF_8))
+      }
+    }
+  }
+
+  /** `r` without the decimals a `DecimalType(38, 10)` cannot hold. */
+  private def storable(schema: StructType, r: Row): Row =
+    Row.fromSeq(schema.fields.toSeq.zip(r.toSeq).map {
+      case (StructField(_, t: DecimalType, _, _), d: java.math.BigDecimal)
+          if d.precision - d.scale > t.precision - t.scale => null
+      case (_, v) => v
+    })
+
+  test("binary rows: every cell type and duplicate names write the bytes of the Row path") {
+    assertBinarySame(wide, rows(wide, 400, 30000L), "wide schema")
+    assertBinarySame(duplicates, rows(duplicates, 300, 40000L), "duplicate names")
+    assertBinarySame(empty, Seq(Row(), Row()), "empty schema")
+  }
+
+  test("binary rows: dates and timestamps around the calendar switch and the four-digit years") {
+    val ts = schemaOf("i" -> TimestampType, "n" -> TimestampNTZType, "d" -> DateType)
+    val edges = for {
+      y <- Seq(-5, 0, 1, 1000, 1500, 1582, 1583, 1900, 1969, 9999, 10000)
+      (mo, d, h, mi, s) <- Seq((1, 1, 0, 0, 0), (10, 4, 23, 59, 59), (10, 15, 0, 0, 0),
+        (12, 31, 23, 59, 59), (2, 29, 12, 30, 5))
+      if !(mo == 2 && !java.time.Year.isLeap(y.toLong))
+      nano <- Seq(0, 1000, 123456000)
+    } yield {
+      val ldt = LocalDateTime.of(y, mo, d, h, mi, s, nano)
+      Row(ldt.toInstant(ZoneOffset.UTC), ldt, ldt.toLocalDate)
+    }
+    assertBinarySame(ts, edges, "temporal edges")
+  }
+
+  test("binary rows: strings that are not valid UTF-8") {
+    val s = schemaOf("s" -> StringType, "t" -> StringType)
+    val encoder = ExpressionEncoder(RowEncoder.encoderFor(s))
+    def utf8(bytes: Int*) = UTF8String.fromBytes(bytes.map(_.toByte).toArray)
+    val irs = Seq(
+      InternalRow(utf8(0xff), utf8('a', 0xc3)),
+      InternalRow(utf8(0xc3, 0x28), utf8(0xed, 0xa0, 0x80)),
+      InternalRow(utf8(' ', 0xf0, 0x9f, 0x9a), utf8('<', 0x80, '>')),
+      InternalRow(utf8('t', 'r', 'u', 0xe9), utf8(0xe2, 0x80, 0xa8)))
+    assertBinaryRows(s, irs, encoder, java8 = false, "invalid UTF-8")
   }
 
   test("4 threads alternating between 2 schemas and placeholders share the memoized plans") {

@@ -94,6 +94,13 @@ class FormatterSpec extends AnyFunSuite {
       "{\"a\":\"\\u003ca\\u0026b\\u003e\"}")
   }
 
+  test("JSON escapes U+2028 and U+2029 in values and keys like Go json.Marshal") {
+    val s = StructType(Seq(StructField("k\u2029", StringType)))
+    assert(JsonArrayFormatter.row(s, Row("a\u2028b\u2029"), None) ==
+      "{\"k\\u2029\":\"a\\u2028b\\u2029\"}")
+    assert(JsonArrayFormatter.row(s, Row(null), Some("\u2028")) == "{\"k\\u2029\":\"\\u2028\"}")
+  }
+
   test("YAML represents control characters faithfully (double-quoted escapes)") {
     val s = StructType(Seq(StructField("a", StringType)))
     def one(v: String) = YamlFormatter.row(s, Row(v), None).stripPrefix("- a: ").stripSuffix("\n")

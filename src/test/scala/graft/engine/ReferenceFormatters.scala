@@ -11,8 +11,9 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
   * planned formatters to. Verbatim except for the rules the plans
   * change on purpose, each marked `DELIBERATE`: CSV quotes a field Go's
   * `encoding/csv` quotes (`\.`, a leading Unicode space), YAML
-  * lowercases in `Locale.ROOT`, not the JVM's default locale, and JSON
-  * and YAML keys are escaped and quoted like values.
+  * lowercases in `Locale.ROOT`, not the JVM's default locale, JSON
+  * and YAML keys are escaped and quoted like values, and JSON escapes
+  * U+2028 and U+2029.
   */
 object ReferenceRender {
 
@@ -102,6 +103,9 @@ object ReferenceJson extends RowFormatter {
       case '<' => sb.append("\\u003c")
       case '>' => sb.append("\\u003e")
       case '&' => sb.append("\\u0026")
+      // DELIBERATE: Go's encoding/json always escapes U+2028 and U+2029
+      case '\u2028' => sb.append("\\u2028")
+      case '\u2029' => sb.append("\\u2029")
       case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
       case c => sb.append(c)
     }
