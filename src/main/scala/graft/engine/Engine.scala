@@ -6,7 +6,6 @@ import org.apache.spark.SerializableWritable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, encoderFor}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -123,12 +122,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val fmt = RowFormatter.of(cfg.format)
     val schema = df.schema
     val nullValue = cfg.nullValue
-    // the DataFrame's own Row encoder and datetime choice, both read on
-    // the driver: tasks format the one planned query's binary rows, and
-    // a cell or a custom format that needs a Row gets it from this
-    // encoder (OPTIMIZATION_r09.md §11)
+    // the DataFrame's own Row encoder, made on the driver: tasks format
+    // the one planned query's binary rows, and a cell or a custom format
+    // that needs a Row gets it from this encoder (OPTIMIZATION_r09.md §11)
     val encoder = encoderFor(df.encoder)
-    val java8 = SQLConf.get.datetimeJava8ApiEnabled
     // invocation-unique staging: two concurrent archives to the SAME
     // destination (trivial via archiveDFCancellable) must not
     // interleave staged parts or delete each other's staging on their
@@ -146,18 +143,17 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // own `_temporary` attempt dirs; [[vacuumStaging]] is the periodic
     // reap policy (see docs/S3A.md for the object-store variant).
     val staging = dest + ".staging-" + java.util.UUID.randomUUID()
-    // Format on executors (the expensive part), every partition IN
-    // PARALLEL in one Spark job, each streaming its rows — joined by
-    // the in-part separators — to one staged byte file. (The previous
-    // toLocalIterator implementation ran one sequential job per
-    // partition: 34 s vs 3.6 s sharded at sf0.1, and a hard driver
-    // bottleneck at scale.)
+    // every partition formats in parallel in one Spark job, streaming
+    // its rows, joined by the in-part separators, to one staged file.
+    // The conf is broadcast, not captured in the task closure: each task
+    // deserializes its closure, which on 4 vCPUs in local mode cost every
+    // archive about 15 ms more than the broadcast
     val bcConf = spark.sparkContext.broadcast(
       new SerializableWritable(spark.sparkContext.hadoopConfiguration))
     cleaningStagingOnFailure(staging) {
       val stagedRdd = stage("download") {
         df.queryExecution.toRdd.mapPartitionsWithIndex(
-          StagedPart.writer(staging, bcConf, fmt, schema, nullValue, java8, encoder))
+          StagedPart.writer(staging, bcConf, fmt, schema, nullValue, encoder))
       }
       // …then ONE sequential driver-side byte concatenation to the
       // exact key: pure I/O at filesystem copy speed (no row decode, no
@@ -363,11 +359,12 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
             throw new IllegalArgumentException(
               s"partitionBy is not supported for row-formatted $other shards " +
                 "(partition values live in the path, not the rows) — use parquet/orc/csv")
-          val fmt = RowFormatter.of(other)
-          val body = df.mapPartitions(
-            _.map(r => fmt.row(schema, r, nullValue).stripSuffix("\n")))(
-            org.apache.spark.sql.Encoders.STRING)
-          body.write.mode("overwrite").text(dest)
+          // one line per binary row, written as the single-object path
+          // writes it, so a date or timestamp prints its stored value
+          val lines = df.queryExecution.toRdd.mapPartitions(
+            StagedPart.lines(RowFormatter.of(other), schema, nullValue, encoderFor(df.encoder)))
+          spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING)
+            .write.mode("overwrite").text(dest)
       }
     }
   }
@@ -444,7 +441,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * groups and the pruning arithmetic is identical. The reference's
     * only layout lever is the S3 object key (chiv.go:224–233); this is
     * the columnar-era equivalent. Pruning is evidenced by scan-metric
-    * A/B in ZorderSpec and docs/PLANS.md.
+    * A/B in ZorderSpec.
     */
   def archiveClustered(df: DataFrame, tableName: String, colA: String,
       colB: String, rangePartitions: Int = 8,
@@ -1143,7 +1140,7 @@ final case class RetentionReport(partitionsExpired: Int,
 
 final case class ArchiveManifest(format: String, files: Seq[ShardEntry], rows: Long)
 
-/** The task side of a single-object archive. Spark's closure cleaner
+/** The task side of a row-formatted archive. Spark's closure cleaner
   * reads the class file that defines each closure it ships, so these
   * closures live in this small object rather than in [[Engine]]
   * (OPTIMIZATION_r09.md §11).
@@ -1154,7 +1151,7 @@ private object StagedPart {
     * and returns (`idx`, whether the part has any row).
     */
   def writer(staging: String, conf: Broadcast[SerializableWritable[Configuration]],
-      fmt: RowFormatter, schema: StructType, nullValue: Option[String], java8: Boolean,
+      fmt: RowFormatter, schema: StructType, nullValue: Option[String],
       encoder: ExpressionEncoder[Row]): (Int, Iterator[InternalRow]) => Iterator[(Int, Boolean)] =
     (idx, it) => {
       val sep = fmt.separator
@@ -1181,7 +1178,7 @@ private object StagedPart {
         // the right stage; `out` tags its writes to the staging
         // file as upload errors (destination-filesystem I/O)
         try {
-          val write = RowFormatter.writer(fmt, schema, nullValue, java8)
+          val write = RowFormatter.writer(fmt, schema, nullValue)
           while (it.hasNext) {
             if (any) out.text.append(sep)
             write(out, it.next())
@@ -1204,4 +1201,22 @@ private object StagedPart {
     }
 
   val result: Iterator[(Int, Boolean)] => (Int, Boolean) = _.next()
+
+  /** Each binary row's text without its trailing newline: one line of a
+    * sharded part.
+    */
+  def lines(fmt: RowFormatter, schema: StructType, nullValue: Option[String],
+      encoder: ExpressionEncoder[Row]): Iterator[InternalRow] => Iterator[String] =
+    it => {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new RowOut(bytes, encoder)
+      val write = RowFormatter.writer(fmt, schema, nullValue)
+      it.map { r =>
+        write(out, r)
+        out.flush()
+        val line = bytes.toString(StandardCharsets.UTF_8).stripSuffix("\n")
+        bytes.reset()
+        line
+      }
+    }
 }

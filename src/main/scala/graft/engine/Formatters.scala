@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,16 +24,21 @@ import java.util.Locale
   * re-parsing (chiv_formatters.go:244–276): Spark rows are already
   * typed (SURVEY.md §1.4).
   *
+  * A date renders from its day count and a timestamp from its micros
+  * since the epoch, as Spark stores them, whichever class carries the
+  * value: a `java.sql` value is read back into Spark's storage first.
+  *
   * Each built-in formatter renders through a [[Plan]] built once per
-  * (schema, placeholder, datetime choice) and memoized in a
+  * (schema, placeholder) and memoized in a
   * [[PlanMemo]]. A plan renders a `Row` into one `StringBuilder`
   * (OPTIMIZATION_r09.md §10), and writes Spark's binary `InternalRow`
   * straight into a task's [[RowOut]] bytes (§11).
   */
 object Render {
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-  private val tsFracFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+  // `uuuu`: the proleptic year, signed as `LocalDate` prints it
+  private val tsFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss'Z'")
+  private val tsFracFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
 
   /** Scalar → text; None = SQL NULL. Numeric rendering matches Go's
     * strconv/json.Marshal shortest forms (42, 3.14, integral doubles
@@ -69,12 +74,11 @@ object Render {
     case f: Float => appendFloat(sb, f)
     case dec: java.math.BigDecimal => sb.append(dec.stripTrailingZeros.toPlainString)
     case i: Instant => if (!appendIso(sb, i)) sb.append(ts(i))
-    case t: java.sql.Timestamp => if (!appendIso(sb, t)) sb.append(ts(t.toInstant))
+    case t: java.sql.Timestamp =>
+      if (!appendIso(sb, t)) sb.append(ts(Instant.ofEpochSecond(seconds(t), t.getNanos)))
     case ldt: LocalDateTime => if (!appendIso(sb, ldt)) sb.append(ts(ldt.toInstant(ZoneOffset.UTC)))
     case d: LocalDate => if (!appendDate(sb, d)) sb.append(d.toString)
-    case d: java.sql.Date =>
-      val ld = d.toLocalDate
-      if (!appendDate(sb, ld)) sb.append(ld.toString)
+    case d: java.sql.Date => append(sb, localDate(d))
     case b: Array[Byte] => sb.append(java.util.Base64.getEncoder.encodeToString(b))
     case other => sb.append(other.toString)
   }
@@ -92,8 +96,17 @@ object Render {
     if (i.getNano == 0) tsFmt.format(utc) else tsFracFmt.format(utc)
   }
 
-  // 0001-01-01T00:00:00Z and 10000-01-01T00:00:00Z in epoch seconds:
-  // the years whose `yyyy` (year-of-era) text is four plain digits
+  // A `java.sql` value is read as Spark stores it: `fromJavaTimestamp`
+  // and `fromJavaDate` undo the Julian-calendar rebase its deserializer
+  // applies before 1582-10-15. That rebase moves whole seconds, so a
+  // Timestamp keeps its own nanos as the fraction.
+  private def seconds(t: java.sql.Timestamp): Long =
+    Math.floorDiv(DateTimeUtils.fromJavaTimestamp(t), 1000000L)
+
+  private def localDate(d: java.sql.Date): LocalDate =
+    LocalDate.ofEpochDay(DateTimeUtils.fromJavaDate(d))
+
+  // 0001-01-01T00:00:00Z and 10000-01-01T00:00:00Z in epoch seconds
   private val IsoFromSec = -62135596800L
   private val IsoUntilSec = 253402300800L
 
@@ -105,9 +118,7 @@ object Render {
     */
   private[engine] def appendIso(sb: JStringBuilder, v: Any): Boolean = v match {
     case i: Instant => appendEpoch(sb, i.getEpochSecond, i.getNano)
-    // Timestamp.getTime includes the millis of getNanos: its floor in
-    // seconds is toInstant's epoch second
-    case t: java.sql.Timestamp => appendEpoch(sb, Math.floorDiv(t.getTime, 1000L), t.getNanos)
+    case t: java.sql.Timestamp => appendEpoch(sb, seconds(t), t.getNanos)
     case ldt: LocalDateTime =>
       val y = ldt.getYear
       (y >= 1 && y <= 9999) && {
@@ -116,14 +127,14 @@ object Render {
         true
       }
     case d: LocalDate => appendDate(sb, d)
-    case d: java.sql.Date => appendDate(sb, d.toLocalDate)
+    case d: java.sql.Date => appendDate(sb, localDate(d))
     case _ => false
   }
 
   /** [[appendIso]] of the instant `sec` seconds and `nano` nanoseconds
     * after the epoch.
     */
-  private[engine] def appendEpoch(sb: JStringBuilder, sec: Long, nano: Int): Boolean =
+  private def appendEpoch(sb: JStringBuilder, sec: Long, nano: Int): Boolean =
     (sec >= IsoFromSec && sec < IsoUntilSec) && {
       val date = LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
       appendDateTime(sb, date.getYear, date.getMonthValue, date.getDayOfMonth,
@@ -131,7 +142,7 @@ object Render {
       true
     }
 
-  private[engine] def appendDate(sb: JStringBuilder, d: LocalDate): Boolean = {
+  private def appendDate(sb: JStringBuilder, d: LocalDate): Boolean = {
     val y = d.getYear
     (y >= 1 && y <= 9999) && { ymd(sb, y, d.getMonthValue, d.getDayOfMonth); true }
   }
@@ -225,25 +236,23 @@ private[engine] abstract class PlannedFormatter extends RowFormatter {
   private[engine] def plain(s: CharSequence): Boolean
   private[engine] def quote: String
 
-  private[engine] val plans = new PlanMemo(new Plan(this, _, _, _))
+  private[engine] val plans = new PlanMemo(new Plan(this, _, _))
 
   def row(schema: StructType, r: Row, nullValue: Option[String]): String =
-    plans(schema, nullValue, java8 = false).row(r)
+    plans(schema, nullValue).row(r)
 }
 
-/** A built-in formatter's rendering of one (schema, placeholder,
-  * `spark.sql.datetime.java8API.enabled`): everything that depends only
-  * on them is worked out when the plan is built. Immutable, so one plan
-  * is safely shared by threads.
+/** A built-in formatter's rendering of one (schema, placeholder):
+  * everything that depends only on them is worked out when the plan is
+  * built. Immutable, so one plan is safely shared by threads.
   *
-  * [[write]] gives the bytes of [[row]] over the `Row` that Spark's
-  * deserializer makes of the binary row: strings, numbers, dates and
-  * timestamps are read from the binary row; every other cell is first
-  * converted as the deserializer converts it. `java8` tells which value
-  * classes that deserializer makes for dates and timestamps.
+  * [[write]] gives the bytes of [[row]] over a `Row` that holds the
+  * binary row's values: strings, numbers, dates and timestamps are read
+  * from the binary row; every other cell is first converted as Spark's
+  * deserializer converts it.
   */
 private[engine] final class Plan(f: PlannedFormatter, val schema: StructType,
-    val nullValue: Option[String], val java8: Boolean) {
+    val nullValue: Option[String]) {
   private val valueCell: Cell = (sb, v) => v match {
     case _: Boolean | _: Int | _: Long | _: Short | _: Byte | _: Double | _: Float |
         _: java.math.BigDecimal => Render.append(sb, v)
@@ -310,10 +319,6 @@ private[engine] final class Plan(f: PlannedFormatter, val schema: StructType,
     sb.append(f.rowClose)
   }
 
-  /** Dates and timestamps before the Julian/Gregorian switch reach a
-    * `Row` as `java.sql` values rebased in the JVM zone, unless `java8`:
-    * those take the deserializer's own conversion.
-    */
   private def binaryCell(t: DataType, cell: Cell): BinaryCell = t match {
     case BooleanType => (out, r, c) => out.text.append(r.getBoolean(c))
     case ByteType => (out, r, c) => out.text.append(r.getByte(c).toInt)
@@ -326,33 +331,10 @@ private[engine] final class Plan(f: PlannedFormatter, val schema: StructType,
       val s = r.getUTF8String(c)
       if (!out.plain(s, f)) cell.append(out.text, s.toString)
     }
-    case DateType =>
-      val value: Int => Any = if (java8) DateTimeUtils.daysToLocalDate else DateTimeUtils.toJavaDate
-      (out, r, c) => {
-        val days = r.getInt(c)
-        val sb = out.text
-        val from = sb.length
-        sb.append(f.isoQuote)
-        if ((java8 || days >= RebaseDateTime.lastSwitchGregorianDay) &&
-          Render.appendDate(sb, LocalDate.ofEpochDay(days))) sb.append(f.isoQuote)
-        else { sb.setLength(from); cell.append(sb, value(days)) }
-      }
+    case DateType => (out, r, c) => cell.append(out.text, LocalDate.ofEpochDay(r.getInt(c)))
+    // an Instant has the text of the LocalDateTime at UTC of the same micros
     case TimestampType | TimestampNTZType =>
-      val ntz = t == TimestampNTZType
-      val value: Long => Any =
-        if (ntz) DateTimeUtils.microsToLocalDateTime
-        else if (java8) DateTimeUtils.microsToInstant
-        else DateTimeUtils.toJavaTimestamp
-      (out, r, c) => {
-        val us = r.getLong(c)
-        val sb = out.text
-        val from = sb.length
-        sb.append(f.isoQuote)
-        if ((ntz || java8 || us >= RebaseDateTime.lastSwitchGregorianTs) &&
-          Render.appendEpoch(sb, Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L).toInt * 1000))
-          sb.append(f.isoQuote)
-        else { sb.setLength(from); cell.append(sb, value(us)) }
-      }
+      (out, r, c) => cell.append(out.text, DateTimeUtils.microsToInstant(r.getLong(c)))
     case d: DecimalType => (out, r, c) => cell.append(out.text, r.getDecimal(c, d.precision, d.scale).toJavaBigDecimal)
     case BinaryType => (out, r, c) => cell.append(out.text, r.getBinary(c))
     case _ => (out, r, c) => cell.append(out.text, out.row(r).get(c))
@@ -360,21 +342,20 @@ private[engine] final class Plan(f: PlannedFormatter, val schema: StructType,
 }
 
 /** The last plan a formatter built, reused while the schema (by
-  * equality), the placeholder and the datetime choice stay the same.
+  * equality) and the placeholder stay the same.
   * The plan is published through a volatile field: threads that race
   * on a change of key each build a correct plan, and the last one
   * stays.
   */
-private[engine] final class PlanMemo(build: (StructType, Option[String], Boolean) => Plan)
+private[engine] final class PlanMemo(build: (StructType, Option[String]) => Plan)
     extends Serializable {
   @transient @volatile private var last: Plan = _
 
-  def apply(schema: StructType, nullValue: Option[String], java8: Boolean): Plan = {
+  def apply(schema: StructType, nullValue: Option[String]): Plan = {
     val p = last
-    if (p != null && ((p.schema eq schema) || p.schema == schema) && p.nullValue == nullValue &&
-      p.java8 == java8) p
+    if (p != null && ((p.schema eq schema) || p.schema == schema) && p.nullValue == nullValue) p
     else {
-      val fresh = build(schema, nullValue, java8)
+      val fresh = build(schema, nullValue)
       last = fresh
       fresh
     }
@@ -383,7 +364,8 @@ private[engine] final class PlanMemo(build: (StructType, Option[String], Boolean
 
 /** One task's output: text appended to [[text]], and the bytes of
   * strings [[plain]] copies as they are, go in order into a reused
-  * buffer, which is written to `sink` when it is full and on [[close]];
+  * buffer, which is written to `sink` when it is full, on [[flush]] and
+  * on [[close]];
   * a failed write is an upload error. `encoder` is the DataFrame's
   * `Row` encoder, made on the driver; it is bound and its deserializer
   * made on first use.
@@ -408,7 +390,7 @@ private[engine] final class RowOut(sink: java.io.OutputStream, encoder: Expressi
       text.append(f.quote)
       emit()
       val n = s.numBytes
-      if (n > buf.length - pos) flush()
+      if (n > buf.length - pos) write()
       if (n > buf.length) upload(s.writeTo(sink))
       else { s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos); pos += n }
       text.append(f.quote)
@@ -429,7 +411,10 @@ private[engine] final class RowOut(sink: java.io.OutputStream, encoder: Expressi
     current
   }
 
-  def close(): Unit = try { emit(); flush() } finally sink.close()
+  /** Writes everything so far to `sink`. */
+  def flush(): Unit = { emit(); write() }
+
+  def close(): Unit = try flush() finally sink.close()
 
   /** Writes [[text]] as UTF-8, as `String.getBytes` encodes it (an
     * unpaired surrogate becomes `?`), and empties it.
@@ -442,7 +427,7 @@ private[engine] final class RowOut(sink: java.io.OutputStream, encoder: Expressi
     val cs = utf16
     var i = 0
     while (i < n) {
-      if (buf.length - pos < 4) flush()
+      if (buf.length - pos < 4) write()
       val c = cs(i)
       if (c < 0x80) {
         // the ASCII run, as far as the buffer holds it
@@ -467,7 +452,7 @@ private[engine] final class RowOut(sink: java.io.OutputStream, encoder: Expressi
     }
   }
 
-  private def flush(): Unit = {
+  private def write(): Unit = {
     if (pos > 0) upload(sink.write(buf, 0, pos))
     pos = 0
   }
@@ -710,9 +695,9 @@ object RowFormatter {
     * rows: a built-in format through its plan, any other through its
     * own `row` over the `Row` that `out` deserializes.
     */
-  private[engine] def writer(fmt: RowFormatter, schema: StructType, nullValue: Option[String],
-      java8: Boolean): (RowOut, InternalRow) => Unit = fmt match {
-    case p: PlannedFormatter => p.plans(schema, nullValue, java8).write
+  private[engine] def writer(fmt: RowFormatter, schema: StructType,
+      nullValue: Option[String]): (RowOut, InternalRow) => Unit = fmt match {
+    case p: PlannedFormatter => p.plans(schema, nullValue).write
     case custom => (out, r) => {
       out.startRow()
       out.text.append(custom.row(schema, out.row(r), nullValue))

@@ -479,9 +479,9 @@ object Aggregates {
     * registers and the estimate bit-for-bit. The exact count rides
     * along to show the estimator lands within its ~3% band — note the
     * PLAN cost of that ride-along: count(DISTINCT) forces the per-key
-    * distinct expansion (docs/PLANS.md), which is exactly what the
-    * sketch alone avoids; a production query keeps only the hll column
-    * and its plan is a plain two-phase ObjectHashAggregate.
+    * distinct expansion (its aggregates are in PlanDriftSpec's lock),
+    * which is exactly what the sketch alone avoids; a production query
+    * keeps only the hll column and plans one two-phase ObjectHashAggregate.
     */
   val q35 = QueryDef(
     "q35_custom_hll",

@@ -425,8 +425,7 @@ object Dedup {
     // estimate would see the explode-inflated scan and guess wrong in
     // exactly the cases that matter; a hand-rolled count() would spend
     // a job to learn what AQE learns free). DedupSpec pins both paths
-    // to identical rows; PLANS.md shows the bench-scale plan landing
-    // on BroadcastHashJoin.
+    // to identical rows and the plan landing on BroadcastHashJoin.
     inter
       .join(n.as("na"), col("da") === col("na.doc_id"))
       .join(n.as("nb"), col("db") === col("nb.doc_id"))

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * banding (its band self-join reuses the signature shuffle, not the
   * scan). Every drop stage then joins the BOUNDED pair table or the
   * cached per-doc frame — the corpus is never rescanned or re-paired.
-  * PipelineSpec pins the scan count; docs/PLANS.md shows the plan.
+  * PipelineSpec pins the scan count; PlanDriftSpec locks the plan.
   */
 object Pipeline {
 

@@ -130,7 +130,7 @@ object Relational {
     * group covers a small rectangle of the key space, so its footer
     * min/max prunes the scan — at sf0.1 the scan reads ~3% of rows vs
     * ~100% from the identical data laid out unsorted (scan-metric A/B
-    * in ZorderSpec; docs/PLANS.md). At 100 TB the same layout skips
+    * in ZorderSpec). At 100 TB the same layout skips
     * the same fraction of ~128 MB row groups — the pruning arithmetic
     * is scale-free. Layout cost is paid ONCE (content-keyed memo, the
     * q37 discipline); the oracle runs the same predicate over the raw
@@ -850,8 +850,7 @@ object Relational {
     * so static pruning is impossible and Catalyst inserts a
     * `dynamicpruning` subquery: the dim's broadcast result filters
     * the partitioned scan's directory list before any fact bytes are
-    * read (plan-asserted in PartitioningSpec; PLANS.md carries the
-    * subquery evidence). At 100 TB this is THE scan lever for
+    * read (plan-asserted in PartitioningSpec). At 100 TB this is THE scan lever for
     * date/tenant-partitioned lakes — a selective dim join reads only
     * the matching partitions, no code change.
     *

@@ -197,8 +197,8 @@ object Similarity {
     * murmur-hash(cell) mod max(8, k), so distinct cells CAN share a bucket —
     * pruning is a best-effort I/O reduction while the cell filter
     * stays exact; on this data the 2 probed cells land in 2 distinct
-    * buckets (`SelectedBucketsCount` strictly below the total in docs/PLANS.md;
-    * SimilaritySpec asserts a strict subset is selected). At 100 TB
+    * buckets (SimilaritySpec asserts `SelectedBucketsCount` selects a
+    * strict subset). At 100 TB
     * the probe cost scales with the probed cells' share of the corpus,
     * not with the corpus, and the probe plan has no shuffle and no
     * join: filter + narrow cosine + global top-k

@@ -11,8 +11,8 @@ package graft
   * The survey's conclusion (SURVEY.md §4.2) held through the whole
   * round-1 build: every operator the reference computes or delegates
   * (SURVEY.md §2) is expressible as a declarative DataFrame program
-  * that Catalyst already plans well — verified by the pinned physical
-  * plans in docs/PLANS.md and PlanSpec (broadcast placement, pushdown,
+  * that Catalyst already plans well — verified by PlanSpec and
+  * PlanDriftSpec's plan lock (broadcast placement, pushdown,
   * partial aggregation, TakeOrderedAndProject fusion, bucketed
   * no-shuffle joins). Where built-ins genuinely fell short, the
   * cheaper extension points sufficed, in the build plan's preference

@@ -7,6 +7,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.time.Instant
+import scala.jdk.CollectionConverters._
 
 /** End-to-end archive tests: DataFrame → format → exact-key object,
   * mirroring the reference's integration flow (archive → download →
@@ -181,6 +182,19 @@ class EngineSpec extends SparkSpec {
       case (line, i) if """\.rdd\b""".r.findFirstIn(line).isDefined => s"${i + 1}: ${line.trim}"
     }.toList
     assert(offenders.isEmpty, s".rdd in Engine.scala:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("lint: the engine renders dates and timestamps from their stored values") {
+    // no datetime-API switch or calendar rebase to choose a rendering
+    val banned = """java8|RebaseDateTime|datetimeJava8ApiEnabled""".r
+    val sources = Files.list(Paths.get("src/main/scala/graft/engine")).iterator().asScala.toList.sortBy(_.toString)
+    assert(sources.exists(_.getFileName.toString == "Formatters.scala"))
+    val offenders = sources.flatMap { p =>
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).linesIterator.zipWithIndex.collect {
+        case (line, i) if banned.findFirstIn(line).isDefined => s"${p.getFileName}:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n  "))
   }
 
   test("columnar formats: exact-key parquet object round-trips") {

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,7 +12,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
-import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+import java.time.{Instant, LocalDate, LocalDateTime, ZoneId, ZoneOffset}
 import java.util.TimeZone
 import java.util.concurrent.{Callable, Executors, TimeUnit}
 
@@ -222,38 +223,66 @@ class FormatterDifferentialSpec extends AnyFunSuite {
           ExpressionEncoder(RowEncoder.encoderFor(schema, lenient = true))
         }
         val serialize = encoder.createSerializer()
-        assertBinaryRows(schema, rs.map(r => serialize(storable(schema, r)).copy()), encoder, java8,
+        assertBinaryRows(schema, rs.map(r => serialize(storable(schema, r)).copy()), encoder,
           s"$what, $zone, java8API $java8")
       } finally TimeZone.setDefault(saved)
     }
 
-  /** A row whose `Row` path throws (a `java.sql.Date` of a year before
-    * 1 has no `LocalDate`) must throw on the binary path too.
+  /** Every row renders on the `Row` path, whichever classes the
+    * deserializer makes of its dates and timestamps (a `java.sql.Date`
+    * of a year before 1 once threw there), and its binary row writes
+    * the bytes of that `Row` as [[held]] mends it.
     */
   private def assertBinaryRows(schema: StructType, irs: Seq[InternalRow],
-      encoder: ExpressionEncoder[Row], java8: Boolean, what: String): Unit = {
+      encoder: ExpressionEncoder[Row], what: String): Unit = {
     val deserialize = encoder.resolveAndBind().createDeserializer()
+    val rows = irs.map(deserialize(_).copy())
+    val stored = irs.zip(rows).map { case (ir, r) => held(schema, ir, r) }
     for ((name, planned, _) <- pairs; nul <- placeholders) {
-      val write = RowFormatter.writer(planned, schema, nul, java8)
-      val (fine, failing) = irs.partition(ir => scala.util.Try(planned.row(schema, deserialize(ir), nul)).isSuccess)
-      failing.foreach { ir =>
-        intercept[Exception](write(new RowOut(new java.io.ByteArrayOutputStream, encoder), ir))
-      }
+      val write = RowFormatter.writer(planned, schema, nul)
+      val failing = rows.filter(r => scala.util.Try(planned.row(schema, r, nul)).isFailure)
+      assert(failing.isEmpty, s"$name, $what, placeholder $nul: the Row path throws on " +
+        failing.take(3).map(_.toSeq.map(String.valueOf)).mkString("; "))
       val bytes = new java.io.ByteArrayOutputStream
       val out = new RowOut(bytes, encoder)
-      fine.foreach(write(out, _))
+      irs.foreach(write(out, _))
       out.close()
-      val want = fine.map(ir => planned.row(schema, deserialize(ir), nul).getBytes(StandardCharsets.UTF_8))
+      val want = stored.map(r => planned.row(schema, r, nul).getBytes(StandardCharsets.UTF_8))
       val got = bytes.toByteArray
       if (!(got sameElements want.flatten)) {
         val ends = want.scanLeft(0)(_ + _.length).tail
         val k = want.indices.find(k => !got.slice(ends(k) - want(k).length, ends(k)).sameElements(want(k)))
           .getOrElse(want.length - 1)
-        fail(s"$name, $what, placeholder $nul, row ${deserialize(fine(k)).toSeq.map(String.valueOf)}: got " +
+        fail(s"$name, $what, placeholder $nul, row ${stored(k).toSeq.map(String.valueOf)}: got " +
           new String(got.slice(ends(k) - want(k).length, ends(k)), StandardCharsets.UTF_8) +
           " want " + new String(want(k), StandardCharsets.UTF_8))
       }
     }
+  }
+
+  /** `r`, the `Row` Spark's deserializer made of `ir`, with each
+    * `java.sql` date or timestamp that does not read back as the value
+    * `ir` stores replaced by that value's `java.time` form. Only a value
+    * whose date in the JVM zone falls in the days the 1582 switch skips
+    * (10-05 to 10-14) may be replaced: the hybrid calendar of `java.sql`
+    * has no such day, so no `java.sql` value holds it.
+    */
+  private def held(schema: StructType, ir: InternalRow, r: Row): Row = {
+    def skipped(d: LocalDate) =
+      !d.isBefore(LocalDate.of(1582, 10, 5)) && !d.isAfter(LocalDate.of(1582, 10, 14))
+    Row.fromSeq(schema.fields.indices.map { c =>
+      r.get(c) match {
+        case t: java.sql.Timestamp if DateTimeUtils.fromJavaTimestamp(t) != ir.getLong(c) =>
+          val instant = DateTimeUtils.microsToInstant(ir.getLong(c))
+          assert(skipped(instant.atZone(ZoneId.systemDefault).toLocalDate), s"$t does not hold $instant")
+          instant
+        case d: java.sql.Date if DateTimeUtils.fromJavaDate(d) != ir.getInt(c) =>
+          val date = LocalDate.ofEpochDay(ir.getInt(c))
+          assert(skipped(date), s"$d does not hold $date")
+          date
+        case v => v
+      }
+    })
   }
 
   /** `r` without the decimals a `DecimalType(38, 10)` cannot hold. */
@@ -294,7 +323,7 @@ class FormatterDifferentialSpec extends AnyFunSuite {
       InternalRow(utf8(0xc3, 0x28), utf8(0xed, 0xa0, 0x80)),
       InternalRow(utf8(' ', 0xf0, 0x9f, 0x9a), utf8('<', 0x80, '>')),
       InternalRow(utf8('t', 'r', 'u', 0xe9), utf8(0xe2, 0x80, 0xa8)))
-    assertBinaryRows(s, irs, encoder, java8 = false, "invalid UTF-8")
+    assertBinaryRows(s, irs, encoder, "invalid UTF-8")
   }
 
   test("4 threads alternating between 2 schemas and placeholders share the memoized plans") {

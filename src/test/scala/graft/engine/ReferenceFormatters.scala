@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 import java.time.format.DateTimeFormatter
@@ -12,13 +13,16 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
   * change on purpose, each marked `DELIBERATE`: CSV quotes a field Go's
   * `encoding/csv` quotes (`\.`, a leading Unicode space), YAML
   * lowercases in `Locale.ROOT`, not the JVM's default locale, JSON
-  * and YAML keys are escaped and quoted like values, and JSON escapes
-  * U+2028 and U+2029.
+  * and YAML keys are escaped and quoted like values, JSON escapes
+  * U+2028 and U+2029, a `java.sql` date or timestamp is read as Spark
+  * stores it, and a timestamp prints its proleptic year.
   */
 object ReferenceRender {
 
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-  private val tsFracFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+  // DELIBERATE: `uuuu`, the proleptic year, not `yyyy` (year-of-era),
+  // which printed year 0 as 0001 and year -5 as 0006
+  private val tsFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss'Z'")
+  private val tsFracFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
 
   def scalar(v: Any): Option[String] = v match {
     case null => None
@@ -27,10 +31,16 @@ object ReferenceRender {
       Some(if (f.isWhole && math.abs(f) < 1e15f) f.toLong.toString else f.toString)
     case dec: java.math.BigDecimal => Some(dec.stripTrailingZeros.toPlainString)
     case i: Instant => Some(ts(i))
-    case t: java.sql.Timestamp => Some(ts(t.toInstant))
+    // DELIBERATE: a java.sql.Timestamp is the micros Spark stores for
+    // it (undoing the Julian rebase before 1582-10-15), not its own
+    // instant, with its own nanos as the fraction
+    case t: java.sql.Timestamp =>
+      Some(ts(Instant.ofEpochSecond(Math.floorDiv(DateTimeUtils.fromJavaTimestamp(t), 1000000L), t.getNanos)))
     case ldt: LocalDateTime => Some(ts(ldt.toInstant(ZoneOffset.UTC)))
     case d: java.time.LocalDate => Some(d.toString)
-    case d: java.sql.Date => Some(d.toLocalDate.toString)
+    // DELIBERATE: a java.sql.Date is the day count Spark stores for it,
+    // not `toLocalDate`, which threw before year 1
+    case d: java.sql.Date => Some(java.time.LocalDate.ofEpochDay(DateTimeUtils.fromJavaDate(d)).toString)
     case b: Array[Byte] => Some(java.util.Base64.getEncoder.encodeToString(b))
     case other => Some(other.toString)
   }
