@@ -1,7 +1,8 @@
 package graft.engine
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.SerializableWritable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,6 +11,9 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import java.nio.charset.StandardCharsets
+import scala.concurrent.duration.Duration
+import scala.concurrent.{Await, ExecutionContext, Promise}
+import scala.jdk.CollectionConverters._
 
 /** The archiver: read → project → null-overlay → format → sink, the
   * reference's whole pipeline (chiv.go:87–198) re-expressed on Spark.
@@ -126,23 +130,6 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // the one planned query's binary rows, and a cell or a custom format
     // that needs a Row gets it from this encoder (OPTIMIZATION_r09.md §11)
     val encoder = encoderFor(df.encoder)
-    // invocation-unique staging: two concurrent archives to the SAME
-    // destination (trivial via archiveDFCancellable) must not
-    // interleave staged parts or delete each other's staging on their
-    // own failure path; the last-wins race is then confined to the
-    // final commit. That commit ([[commit]]) moves the previous object
-    // aside and then renames — a two-step window in which a concurrent
-    // committer can recreate the target (the loser's rename then fails
-    // with IllegalStateException rather than corrupting) and a reader
-    // can briefly observe the destination missing; a single-step
-    // rename-with-overwrite (where the filesystem offers one) would
-    // close it. The
-    // trade-off vs a fixed name: a hard driver kill (no cleanup path
-    // runs) leaks a uniquely-named `.staging-*` dir instead of being
-    // overwritten by the next run — the same residual class as Spark's
-    // own `_temporary` attempt dirs; [[vacuumStaging]] is the periodic
-    // reap policy (see docs/S3A.md for the object-store variant).
-    val staging = dest + ".staging-" + java.util.UUID.randomUUID()
     // every partition formats in parallel in one Spark job, streaming
     // its rows, joined by the in-part separators, to one staged file.
     // The conf is broadcast, not captured in the task closure: each task
@@ -150,11 +137,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // archive about 15 ms more than the broadcast
     val bcConf = spark.sparkContext.broadcast(
       new SerializableWritable(spark.sparkContext.hadoopConfiguration))
-    cleaningStagingOnFailure(staging) {
-      val stagedRdd = stage("download") {
-        df.queryExecution.toRdd.mapPartitionsWithIndex(
-          StagedPart.writer(staging, bcConf, fmt, schema, nullValue, encoder))
-      }
+    landObject(dest) { (fs, staging) =>
+      val rows = stage("download")(df.queryExecution.toRdd)
       // …then ONE sequential driver-side byte concatenation to the
       // exact key: pure I/O at filesystem copy speed (no row decode, no
       // per-partition job scheduling), preserving header / array
@@ -165,74 +149,85 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       // upload error (chiv parity) — formatter errors carry their own
       // stage from the task (see [[StagedPart]]).
       //
-      // OVERLAPPED since r9 (guide §2.6 "overlap independent work"):
-      // instead of a collect() barrier followed by the full concat, the
-      // job is submitted with a per-partition result handler, and the
-      // concat loop copies part i the moment task i has committed it
-      // (the task-side rename happens before the task result is
-      // produced, so a delivered result means the part file is
-      // complete). Driver concat I/O thus runs WHILE later partitions
-      // are still formatting; byte order is unchanged — the loop
-      // appends strictly in partition order.
+      // The concat overlaps the job: each task's result completes its
+      // partition's promise, and the loop copies part i as soon as that
+      // promise holds (the task-side rename happens before the task
+      // result is produced, so a delivered result means the part file
+      // is complete). Bytes follow partition order: the loop appends
+      // strictly in partition order.
+      if (!fs.mkdirs(staging))
+        throw new java.io.IOException(s"cannot create $staging")
+      val n = rows.getNumPartitions
+      val hasRows = Array.fill(n)(Promise[Boolean]())
+      val fut = spark.sparkContext.submitJob[InternalRow, Boolean, Unit](
+        rows, StagedPart.writer(staging.toString, bcConf, fmt, schema, nullValue, encoder),
+        0 until n, (i, any) => hasRows(i).success(any), ())
+      fut.onComplete(_.failed.foreach(e => hasRows.foreach(_.tryFailure(e))))(ExecutionContext.global)
+      // concatenate into a temp object INSIDE staging: a failure
+      // mid-copy can never leave a truncated-but-plausible object at
+      // the exact key
+      val tmp = new Path(staging, "_object")
+      try {
+        val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
+        try {
+          out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
+          var first = true
+          // a failed job fails the awaited promise; stage() unwraps the
+          // task's ArchiveException
+          for (i <- 0 until n if Await.result(hasRows(i).future, Duration.Inf)) {
+            if (!first && fmt.separator.nonEmpty)
+              out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
+            val in = fs.open(new Path(f"$staging/part-$i%05d"))
+            try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
+            finally in.close()
+            first = false
+          }
+          out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
+        } finally out.close()
+      } catch {
+        case e: Throwable =>
+          // a driver-side failure leaves the job running: its tasks
+          // would write into staging while the cleanup deletes it
+          cancelAndDrain(fut)
+          throw e
+      }
+      // every partition's result has arrived, so the job is over before
+      // landObject commits: a failed commit has no job to drain
+      tmp
+    }
+  }
+
+  /** Lands one exact-named object at `dest`. `write` puts the object in
+    * a fresh staging directory and returns its path; the object is then
+    * committed onto the key ([[commit]]) and staging removed. Any
+    * failure removes staging and surfaces as an upload error, unless it
+    * already carries its own stage.
+    *
+    * Staging is invocation-unique, `<dest>.staging-<uuid>`: two
+    * concurrent archives to the SAME destination (trivial via
+    * archiveDFCancellable) must not interleave staged parts or delete
+    * each other's staging on their own failure path; the last-wins race
+    * is then confined to the final commit. That commit moves the
+    * previous object aside and then renames — a two-step window in
+    * which a concurrent committer can recreate the target (the loser's
+    * rename then fails with IllegalStateException rather than
+    * corrupting) and a reader can briefly observe the destination
+    * missing; a single-step rename-with-overwrite (where the filesystem
+    * offers one) would close it. The trade-off vs a fixed name: a hard
+    * driver kill (no cleanup path runs) leaks a uniquely-named staging
+    * dir instead of being overwritten by the next run — the same
+    * residual class as Spark's own `_temporary` attempt dirs;
+    * [[vacuumStaging]] is the periodic reap policy (see docs/S3A.md for
+    * the object-store variant).
+    */
+  private def landObject(dest: String)(write: (FileSystem, Path) => Path): Unit = {
+    val staging = new Path(dest + Engine.StagingInfix + java.util.UUID.randomUUID())
+    cleaningStagingOnFailure(staging) {
       stage("upload") {
         val target = new Path(dest)
         val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.mkdirs(new Path(staging)))
-          throw new java.io.IOException(s"cannot create $staging")
-        val n = stagedRdd.getNumPartitions
-        val results = new Array[(Int, Boolean)](n)
-        val ready = new Array[Boolean](n)
-        val lock = new Object
-        @volatile var failure: Option[Throwable] = None
-        val fut = spark.sparkContext.submitJob[(Int, Boolean), (Int, Boolean), Unit](
-          stagedRdd, StagedPart.result, 0 until n,
-          (idx, res) => lock.synchronized {
-            results(idx) = res; ready(idx) = true; lock.notifyAll()
-          },
-          ())
-        fut.onComplete {
-          case scala.util.Failure(e) =>
-            lock.synchronized { failure = Some(e); lock.notifyAll() }
-          case _ => ()
-        }(scala.concurrent.ExecutionContext.global)
-        // concatenate into a temp object INSIDE staging, then commit
-        // with one rename: a failure mid-copy can never leave a
-        // truncated-but-plausible object at the exact key (the
-        // enclosing cleanup removes staging, temp object included)
-        val tmp = new Path(s"$staging/_object")
-        try {
-          val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
-          try {
-            out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
-            var first = true
-            var i = 0
-            while (i < n) {
-              lock.synchronized {
-                while (!ready(i) && failure.isEmpty) lock.wait()
-              }
-              failure.foreach(throw _) // stage() unwraps the task's ArchiveException
-              val any = results(i)._2
-              if (any) {
-                if (!first && fmt.separator.nonEmpty)
-                  out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
-                val in = fs.open(new Path(f"$staging/part-$i%05d"))
-                try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
-                finally in.close()
-                first = false
-              }
-              i += 1
-            }
-            out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
-          } finally out.close()
-          commit(fs, tmp, target, new Path(staging))
-        } catch {
-          case e: Throwable =>
-            // a driver-side failure leaves the job running: its tasks
-            // would recreate staging after the cleanup deleted it
-            cancelAndDrain(fut)
-            throw e
-        }
-        fs.delete(new Path(staging), true)
+        commit(fs, write(fs, staging), target, staging)
+        fs.delete(staging, true)
       }
     }
   }
@@ -292,41 +287,28 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * (failed or cancelled archives must not leak staged bytes), then
     * rethrow.
     */
-  private def cleaningStagingOnFailure[T](staging: String)(body: => T): T =
+  private def cleaningStagingOnFailure[T](staging: Path)(body: => T): T =
     try body catch {
       case e: Throwable =>
-        try {
-          val p = new Path(staging)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        } catch { case _: Exception => () }
+        try staging.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(staging, true)
+        catch { case _: Exception => () }
         throw e
     }
 
-  /** Columnar single object: one part file written to a staging dir,
-    * then committed to the exact key with a rename (the classic
+  /** Columnar single object: one part file written by Spark's writer
+    * into staging, then committed to the exact key (the classic
     * exact-name pattern; on S3A the rename is a server-side copy).
     */
-  private def writeColumnarSingle(df: DataFrame, cfg: ArchiveConfig, dest: String): Unit = {
-    // invocation-unique for the same reason as the row path above
-    val stagingDir = dest + ".staging-" + java.util.UUID.randomUUID()
-    cleaningStagingOnFailure(stagingDir) {
-      stage("upload") {
-        val path = new Path(dest)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val staging = new Path(stagingDir)
-        val one = df.coalesce(1).write.mode("overwrite")
-        cfg.format match {
-          case Format.Orc => one.orc(staging.toString)
-          case _ => one.parquet(staging.toString)
-        }
-        val part = fs.listStatus(staging)
-          .map(_.getPath).find(_.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $staging"))
-        commit(fs, part, path, staging)
-        fs.delete(staging, true)
+  private def writeColumnarSingle(df: DataFrame, cfg: ArchiveConfig, dest: String): Unit =
+    landObject(dest) { (fs, staging) =>
+      val one = df.coalesce(1).write.mode("overwrite")
+      cfg.format match {
+        case Format.Orc => one.orc(staging.toString)
+        case _ => one.parquet(staging.toString)
       }
+      fs.listStatus(staging).map(_.getPath).find(_.getName.startsWith("part-"))
+        .getOrElse(throw new IllegalStateException(s"no part file under $staging"))
     }
-  }
 
   private def writeSharded(df: DataFrame, cfg: ArchiveConfig, dest: String): Unit = {
     val schema = df.schema
@@ -534,19 +516,49 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Hidden names ('_'/'.'): committer metadata, the manifest itself,
-    * `_temporary` staging and `.staging-*` residue. Spark's own readers
-    * skip them, files and directories alike.
+  /** Every file under `root`, at any depth, with its path relative to
+    * `root`: one recursive listing, which an object store serves flat
+    * instead of one request per directory.
     */
-  private def hidden(p: Path): Boolean =
-    p.getName.startsWith("_") || p.getName.startsWith(".")
-
-  private def readManifest(fs: FileSystem, path: Path): ArchiveManifest = {
-    val in = fs.open(path)
-    parseManifest(new String(
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in) finally in.close(),
-      StandardCharsets.UTF_8))
+  private def filesUnder(fs: FileSystem, root: Path): Seq[(String, FileStatus)] = {
+    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    val it = fs.listFiles(root, true)
+    val files = Seq.newBuilder[(String, FileStatus)]
+    while (it.hasNext) {
+      val st = it.next()
+      files += st.getPath.toUri.getPath.stripPrefix(prefix) -> st
+    }
+    files.result()
   }
+
+  /** The files under `root` whose relative path has no hidden name
+    * ('_'/'.') at any level: not committer metadata, the manifest
+    * itself, `_temporary` staging or staging residue. Spark's own
+    * readers skip them, files and directories alike; a straggler task
+    * can recreate `_temporary`, so recording its contents would
+    * guarantee later false "missing file" alarms.
+    */
+  private def dataFiles(fs: FileSystem, root: Path): Seq[(String, FileStatus)] =
+    filesUnder(fs, root).filterNot(_._1.split('/').exists(n => n.startsWith("_") || n.startsWith(".")))
+
+  /** The manifest at `path`, or the finding that it cannot be read: not
+    * JSON, or without `files`, `format` or `rows`.
+    */
+  private def readManifest(fs: FileSystem, path: Path): Either[String, ArchiveManifest] =
+    try {
+      val in = fs.open(path)
+      val json = try Engine.Json.readTree(in) finally in.close()
+      def field(node: JsonNode, name: String, ok: JsonNode => Boolean): JsonNode =
+        Option(node.get(name)).filter(ok)
+          .getOrElse(throw new IllegalArgumentException(s"no valid '$name'"))
+      val files = field(json, "files", _.isArray).elements().asScala.map(f => ShardEntry(
+        field(f, "path", _.isTextual).textValue, field(f, "bytes", _.isIntegralNumber).longValue))
+      Right(ArchiveManifest(field(json, "format", _.isTextual).textValue, files.toSeq,
+        field(json, "rows", _.isIntegralNumber).longValue))
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        Left(s"manifest unreadable: ${String.valueOf(e.getMessage).take(160)}")
+    }
 
   /** Landing-verification MANIFEST (K1d): after a sharded archive
     * lands, record WHAT landed — every data file with its byte size,
@@ -566,17 +578,27 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * Supported for the formats Spark can re-read structurally
     * (parquet/orc/csv); row-formatted custom shards record bytes
     * only (rows = -1), because their row framing is format-private.
-    * The JSON is hand-rendered with sorted keys and sorted file
-    * paths, so identical landings produce byte-identical manifests.
+    * The JSON is written with Jackson, keys sorted and file paths
+    * sorted, so identical landings produce byte-identical manifests.
+    * The audit parses it as JSON, so a rewrite that keeps its content
+    * (compact whitespace, say) still audits clean, and a manifest that
+    * is not JSON or lacks `files`, `format` or `rows` is itself a
+    * finding, which [[repairArchive]] refuses.
     */
   def writeManifest(dest: String, format: Format = base.format): ArchiveManifest = {
-    val m = computeManifest(dest, format)
-    val json = renderManifest(m)
     val path = new Path(dest, Engine.ManifestName)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = dataFiles(fs, new Path(dest)).map { case (rel, st) => ShardEntry(rel, st.getLen) }
+      .sortBy(_.path)
+    val m = ArchiveManifest(format.extension, files, recountable.get(format).fold(-1L)(_(dest)))
+    val json = Engine.Json.createObjectNode()
+    val listed = json.putArray("files")
+    m.files.foreach(f => listed.addObject().put("bytes", f.bytes).put("path", f.path))
+    json.put("format", m.format).put("n_files", m.files.size).put("rows", m.rows)
+      .put("total_bytes", m.files.map(_.bytes).sum)
     val tmp = new Path(dest, s".${Engine.ManifestName}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(Engine.Json.writeValueAsBytes(json)) finally out.close()
     // delete-then-rename is NOT an atomic replace on object stores: a
     // concurrent reader can observe the manifest briefly missing
     // between the two calls (HDFS rename-over-existing would close the
@@ -616,13 +638,23 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * consumer doesn't know how the archive was written, the manifest
     * records it.
     */
-  def verifyManifest(dest: String): Seq[String] = {
-    val path = new Path(dest, Engine.ManifestName)
+  def verifyManifest(dest: String): Seq[String] = audit(dest).swap.getOrElse(Seq.empty)
+
+  /** `dest`'s manifest when the archive matches it, else the
+    * [[verifyManifest]] findings. An unreadable manifest is one
+    * finding: nothing else can be checked against it.
+    */
+  private def audit(dest: String): Either[Seq[String], ArchiveManifest] = {
+    val root = new Path(dest)
+    val path = new Path(root, Engine.ManifestName)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Seq(s"manifest missing: $path")
-    val recorded = readManifest(fs, path)
+    if (!fs.exists(path)) return Left(Seq(s"manifest missing: $path"))
+    val recorded = readManifest(fs, path) match {
+      case Left(unreadable) => return Left(Seq(unreadable))
+      case Right(m) => m
+    }
     val rec = recorded.files.map(f => f.path -> f.bytes).toMap
-    val act = listShards(dest).map(f => f.path -> f.bytes).toMap
+    val act = dataFiles(fs, root).map { case (rel, st) => rel -> st.getLen }.toMap
     val missing = (rec.keySet -- act.keySet).toSeq.sorted.map(p => s"missing file: $p")
     val extra = (act.keySet -- rec.keySet).toSeq.sorted.map(p => s"unexpected file: $p")
     val resized = rec.keySet.intersect(act.keySet).toSeq.sorted
@@ -636,12 +668,12 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     // formatters) — nothing to recount.
     val rows =
       if (recorded.rows == -1L) Seq.empty
-      else formatOf(recorded.format) match {
+      else recountable.collectFirst { case (f, count) if f.extension == recorded.format => count } match {
         case None =>
           Seq(s"row drift: manifest format '${recorded.format}' is not recountable here")
-        case Some(fmt) =>
+        case Some(count) =>
           try {
-            val n = countRows(dest, fmt)
+            val n = count(dest)
             if (recorded.rows != n)
               Seq(s"row drift: recorded ${recorded.rows}, found $n")
             else Seq.empty
@@ -654,7 +686,26 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
               Seq(s"row drift: recount failed: ${String.valueOf(e.getMessage).take(160)}")
           }
       }
-    missing ++ extra ++ resized ++ rows
+    val findings = missing ++ extra ++ resized ++ rows
+    Either.cond(findings.isEmpty, recorded, findings)
+  }
+
+  /** The gate in front of a step that rewrites a landed archive: the
+    * archive's manifest when it passes its audit, None when it has no
+    * manifest. One that fails its audit is refused, the step named by
+    * `verb`: re-running a step over crash residue would certify it, so
+    * the findings must be repaired first.
+    */
+  private def auditGate(dest: String, verb: String): Option[ArchiveManifest] = {
+    val path = new Path(dest, Engine.ManifestName)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
+    else audit(dest) match {
+      case Right(m) => Some(m)
+      case Left(findings) =>
+        throw new ArchiveException("upload", new IllegalStateException(
+          s"refusing to $verb an archive that fails its manifest audit " +
+            s"(repair the findings first): ${findings.mkString("; ")}"))
+    }
   }
 
   /** COMPACT a landed sharded archive's small data files (K1e) — the
@@ -685,7 +736,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * the flagged extras) before compaction will touch the directory. Only columnar formats (parquet/orc) are
     * compactable — they re-write losslessly from their own typed
     * schema; row formats' framing is format-private (the
-    * [[countRows]] contract). A directory already at or below its
+    * [[recountable]] contract). A directory already at or below its
     * target file count is left byte-untouched. If the archive
     * carries a manifest, it is re-written and re-audited after the
     * swap — a compaction that fails its own audit throws rather than
@@ -707,27 +758,17 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // refuse crash residue (see scaladoc): compacting a directory that
     // fails its own audit would certify doubled rows as clean
-    if (fs.exists(new Path(root, Engine.ManifestName))) {
-      val pre = verifyManifest(dest)
-      if (pre.nonEmpty)
-        throw new ArchiveException("upload", new IllegalStateException(
-          "refusing to compact an archive that fails its manifest audit " +
-            s"(repair the findings first): ${pre.mkString("; ")}"))
-    }
-    // leaf dirs with visible data files, depth-first
-    def leaves(p: Path): Seq[(Path, Seq[org.apache.hadoop.fs.FileStatus])] = {
-      val (dirs, files) = fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath))
-        .partition(_.isDirectory)
-      dirs.flatMap(d => leaves(d.getPath)) ++
-        (if (files.nonEmpty) Seq(p -> files) else Seq.empty)
-    }
+    val manifested = auditGate(dest, "compact").isDefined
+    // leaf dirs with visible data files
+    val leaves = dataFiles(fs, root).map(_._2).groupBy(_.getPath.getParent).toSeq
+      .sortBy(_._1.toString)
     var before = 0
     var after = 0
     var parts = 0
     var bytes = 0L
     var rows = 0L
     stage("upload") {
-      for ((dir, files) <- leaves(root)) {
+      for ((dir, files) <- leaves) {
         val dirBytes = files.map(_.getLen).sum
         val nOut = math.max(1L, (dirBytes + targetBytes - 1) / targetBytes).toInt
         before += files.size
@@ -736,13 +777,12 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         else {
           val srcPaths = files.map(_.getPath)
           val srcRows = read(srcPaths).count()
-          val staging = new Path(dir, s".compact-${java.util.UUID.randomUUID}")
-          cleaningStagingOnFailure(staging.toString) {
+          val staging = new Path(dir, Engine.CompactPrefix + java.util.UUID.randomUUID())
+          cleaningStagingOnFailure(staging) {
             read(srcPaths).coalesce(nOut)
               .write.format(fmt).save(staging.toString)
-            val staged = fs.listStatus(staging)
-              .filter(st => st.isFile && !hidden(st.getPath)).map(_.getPath)
-            val stagedRows = read(staged.toSeq).count()
+            val staged = dataFiles(fs, staging).map(_._2.getPath)
+            val stagedRows = read(staged).count()
             if (stagedRows != srcRows)
               throw new IllegalStateException(
                 s"compaction row drift in $dir: source $srcRows, staged $stagedRows")
@@ -764,8 +804,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         }
       }
     }
-    if (fs.exists(new Path(root, Engine.ManifestName)))
-      writeManifestAudited(dest, format, "compaction")
+    if (manifested) writeManifestAudited(dest, format, "compaction")
     CompactionReport(parts, before, after, bytes, rows)
   }
 
@@ -799,30 +838,19 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       keep: String => Boolean): RetentionReport = {
     val root = new Path(dest)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifested = fs.exists(new Path(root, Engine.ManifestName))
-    val oldFormat: Option[Format] =
-      if (!manifested) None
-      else {
-        val pre = verifyManifest(dest)
-        if (pre.nonEmpty)
-          throw new ArchiveException("upload", new IllegalStateException(
-            "refusing to expire an archive that fails its manifest audit " +
-              s"(repair the findings first): ${pre.mkString("; ")}"))
-        val m = readManifest(fs, new Path(root, Engine.ManifestName))
-        val f = formatOf(m.format)
-        // a manifested archive whose format we cannot recount
-        // (json/yaml/custom) could not have its manifest re-written
-        // after the deletes — silently leaving a stale manifest that
-        // still lists the expired shards. Refuse up front, the
-        // compactArchive philosophy: never certify what can't be
-        // re-audited.
-        if (f.isEmpty)
-          throw new ArchiveException("format", new IllegalArgumentException(
-            s"cannot expire a manifested '${m.format}' archive — the " +
-              "manifest could not be re-written for the surviving layout; " +
-              "remove or re-manifest it in a recountable format first"))
-        f
-      }
+    val oldFormat: Option[Format] = auditGate(dest, "expire").map { m =>
+      // a manifested archive whose format we cannot recount
+      // (json/yaml/custom) could not have its manifest re-written
+      // after the deletes — silently leaving a stale manifest that
+      // still lists the expired shards. Refuse up front, the
+      // compactArchive philosophy: never certify what can't be
+      // re-audited.
+      recountable.keys.find(_.extension == m.format).getOrElse(
+        throw new ArchiveException("format", new IllegalArgumentException(
+          s"cannot expire a manifested '${m.format}' archive — the " +
+            "manifest could not be re-written for the surviving layout; " +
+            "remove or re-manifest it in a recountable format first")))
+    }
     val prefix = partCol + "="
     // listing inside stage(): a missing/unreadable dest must surface
     // as the stage-prefixed ArchiveException every Engine entry point
@@ -840,23 +868,17 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     var files = 0
     var bytes = 0L
     stage("upload") {
-      def walkBytes(p: Path): (Int, Long) = {
-        val sts = fs.listStatus(p).toSeq
-        val (dirs, fls) = sts.partition(_.isDirectory)
-        val sub = dirs.map(d => walkBytes(d.getPath))
-        (fls.size + sub.map(_._1).sum, fls.map(_.getLen).sum + sub.map(_._2).sum)
-      }
       for (st <- parts) {
         val value = st.getPath.getName.stripPrefix(prefix)
         if (keep(value)) kept += 1
         else {
-          val (nf, nb) = walkBytes(st.getPath)
+          val gone = filesUnder(fs, st.getPath).map(_._2.getLen)
           if (!fs.delete(st.getPath, true))
             throw new ArchiveException("upload", new IllegalStateException(
               s"expired partition could not be removed: ${st.getPath}"))
           expired += 1
-          files += nf
-          bytes += nb
+          files += gone.size
+          bytes += gone.sum
         }
       }
     }
@@ -937,12 +959,12 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val now = System.currentTimeMillis()
     def isStaging(name: String): Boolean =
-      name.contains(".staging-") || name.startsWith(".compact-")
-    def newestTouch(st: org.apache.hadoop.fs.FileStatus): Long =
+      name.contains(Engine.StagingInfix) || name.startsWith(Engine.CompactPrefix)
+    def newestTouch(st: FileStatus): Long =
       if (!st.isDirectory) st.getModificationTime
       else (st.getModificationTime +:
         fs.listStatus(st.getPath).toSeq.map(newestTouch)).max
-    def sweep(st: org.apache.hadoop.fs.FileStatus): Seq[String] =
+    def sweep(st: FileStatus): Seq[String] =
       if (isStaging(st.getPath.getName)) {
         val age = now - newestTouch(st)
         if (age < graceMs)
@@ -968,93 +990,19 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
       cutoff: String): RetentionReport =
     expireArchive(dest, partCol, _ >= cutoff)
 
-  /** Extension string (as the manifest records it) → recountable
-    * format. Custom extensions → None.
+  /** The formats Spark re-reads structurally, each with its row count
+    * of an archive: the only formats whose manifest records rows and
+    * whose audit recounts them. A custom row format's framing is
+    * format-private, so its manifest records rows = -1.
     */
-  private def formatOf(ext: String): Option[Format] = ext match {
-    case "parquet" => Some(Format.Parquet)
-    case "orc" => Some(Format.Orc)
-    case "csv" => Some(Format.Csv)
-    case _ => None
-  }
-
-  private def listShards(dest: String): Seq[ShardEntry] = {
-    val root = new Path(dest)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // hidden directories are skipped too (a straggler task can
-    // recreate _temporary): recording their contents would guarantee
-    // later false "missing file" alarms
-    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (hidden(st.getPath)) Seq.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st)
-      }
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    walk(root)
-      .map(st => ShardEntry(
-        st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"), st.getLen))
-      .sortBy(_.path)
-  }
-
-  private def countRows(dest: String, format: Format): Long = format match {
-    case Format.Parquet => spark.read.parquet(dest).count()
-    case Format.Orc => spark.read.orc(dest).count()
-    case Format.Csv =>
-      // multiLine: quoted embedded newlines (which the sharded CSV
-      // writer emits) must count as ONE row, not one per physical
-      // line; the audit pays the non-splittable read for an exact
-      // count
-      spark.read.option("header", "true").option("multiLine", "true")
-        .csv(dest).count()
-    case _ => -1L // row-formatted shards: framing is format-private
-  }
-
-  private def computeManifest(dest: String, format: Format): ArchiveManifest =
-    ArchiveManifest(format.extension, listShards(dest), countRows(dest, format))
-
-  private def renderManifest(m: ArchiveManifest): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val fileJson = m.files.map(f =>
-      s"""{"bytes": ${f.bytes}, "path": "${esc(f.path)}"}""")
-    s"""{"files": [${fileJson.mkString(", ")}], "format": "${esc(m.format)}", "n_files": ${m.files.size}, "rows": ${m.rows}, "total_bytes": ${m.files.map(_.bytes).sum}}"""
-  }
-
-  /** Inverse of renderManifest's `esc` — all three escape forms, in
-    * one left-to-right scan (a replace() chain would mis-handle
-    * sequences like `\\u0041`, un-escaping the backslash first and
-    * then fabricating a unicode escape).
-    */
-  private def unescape(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) s(i + 1) match {
-        case 'u' if i + 5 < s.length =>
-          out += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-          i += 6
-        case c => out += c; i += 2
-      } else { out += s(i); i += 1 }
-    }
-    out.toString
-  }
-
-  private def parseManifest(json: String): ArchiveManifest = {
-    // the manifest is machine-written by renderManifest with a fixed
-    // shape — a targeted parse keeps the engine dependency-free
-    val file = """\{"bytes": (\d+), "path": "((?:[^"\\]|\\.)*)"\}""".r
-    val files = file.findAllMatchIn(json).map { m =>
-      ShardEntry(unescape(m.group(2)), m.group(1).toLong)
-    }.toSeq
-    val rows = """"rows": (-?\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(-1L)
-    val fmt = """"format": "([^"]*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    ArchiveManifest(fmt, files, rows)
-  }
+  private val recountable: Map[Format, String => Long] = Map(
+    Format.Parquet -> ((dest: String) => spark.read.parquet(dest).count()),
+    Format.Orc -> ((dest: String) => spark.read.orc(dest).count()),
+    // multiLine: quoted embedded newlines (which the sharded CSV
+    // writer emits) must count as ONE row, not one per physical line;
+    // the audit pays the non-splittable read for an exact count
+    Format.Csv -> ((dest: String) =>
+      spark.read.option("header", "true").option("multiLine", "true").csv(dest).count()))
 }
 
 /** Handle on a cancellable in-flight archive (A2). `cancel()` is the
@@ -1086,6 +1034,17 @@ final class ArchiveJob private[engine] (
 
 object Engine {
   val ManifestName = "_MANIFEST.json"
+
+  /** The two staging name shapes [[Engine.vacuumStaging]] reaps:
+    * `<dest>.staging-<uuid>` next to a single object's key, and
+    * `.compact-<uuid>` inside a directory [[Engine.compactArchive]]
+    * rewrites.
+    */
+  private val StagingInfix = ".staging-"
+  private val CompactPrefix = ".compact-"
+
+  /** Reads and writes `_MANIFEST.json`. */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper
 
   /** [[Engine.vacuumStaging]]'s default grace window: comfortably
     * longer than any plausible in-flight archive, short enough that a
@@ -1147,24 +1106,25 @@ final case class ArchiveManifest(format: String, files: Seq[ShardEntry], rows: L
   */
 private object StagedPart {
 
-  /** Formats partition `idx`'s binary rows into `<staging>/part-<idx>`
-    * and returns (`idx`, whether the part has any row).
+  /** Formats the task's partition of binary rows into
+    * `<staging>/part-<partition>` and returns whether the part has any
+    * row.
     */
   def writer(staging: String, conf: Broadcast[SerializableWritable[Configuration]],
       fmt: RowFormatter, schema: StructType, nullValue: Option[String],
-      encoder: ExpressionEncoder[Row]): (Int, Iterator[InternalRow]) => Iterator[(Int, Boolean)] =
-    (idx, it) => {
+      encoder: ExpressionEncoder[Row]): Iterator[InternalRow] => Boolean =
+    it => {
       val sep = fmt.separator
+      val task = org.apache.spark.TaskContext.get()
+      val idx = task.partitionId()
       // Task-commit protocol: write to an attempt-unique file, then
       // commit with a rename. Without it, speculative or zombie
       // attempts of the same partition interleave bytes in one
-      // open staging file — silent corruption the collect() cannot
+      // open staging file — silent corruption the driver cannot
       // see. A lost rename race means an identical-bytes attempt
       // already committed (partitions format deterministically),
       // so the loser just discards its file.
-      val attemptId = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val attempt = new Path(f"$staging/part-$idx%05d.attempt-$attemptId")
+      val attempt = new Path(f"$staging/part-$idx%05d.attempt-${task.taskAttemptId()}")
       val committed = new Path(f"$staging/part-$idx%05d")
       val fs = attempt.getFileSystem(conf.value.value)
       var any = false
@@ -1194,13 +1154,10 @@ private object StagedPart {
       // recreate it (narrows the race; full protection against
       // zombies is a committer-level guarantee Spark itself also
       // only approximates)
-      val killed = Option(org.apache.spark.TaskContext.get()).exists(_.isInterrupted())
-      if (!any || killed) fs.delete(attempt, false)
+      if (!any || task.isInterrupted()) fs.delete(attempt, false)
       else if (!fs.rename(attempt, committed)) fs.delete(attempt, false)
-      Iterator.single((idx, any))
+      any
     }
-
-  val result: Iterator[(Int, Boolean)] => (Int, Boolean) = _.next()
 
   /** Each binary row's text without its trailing newline: one line of a
     * sharded part.

@@ -120,13 +120,13 @@ class CancellationSpec extends SparkSpec {
     }
   }
 
-  /** Archives 8 slow partitions over a previous object at
-    * `faulty://<dir>/t.csv` with `fault` injected (see
-    * [[FaultyFileSystem]]): the archive fails as an upload error, the
-    * staged job has ended, no staging residue is left, and the key
-    * still holds the previous bytes.
+  /** Archives 8 slow partitions as a `format` single object over a
+    * previous object at `faulty://<dir>/t.<extension>` with `fault`
+    * injected (see [[FaultyFileSystem]]): the archive fails as an upload
+    * error, the staged job has ended, no staging residue is left, and
+    * the key still holds the previous bytes.
     */
-  private def assertFaultLeavesKeyUntouched(fault: String): Unit = {
+  private def assertFaultLeavesKeyUntouched(fault: String, format: Format = Format.Csv): Unit = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
@@ -134,7 +134,7 @@ class CancellationSpec extends SparkSpec {
     hconf.set("fs.faulty.fault", fault)
     try {
       val out = Files.createTempDirectory("graft-faulty")
-      val key = out.resolve("t.csv")
+      val key = out.resolve(s"t.${format.extension}")
       Files.writeString(key, "previous archive\n")
       // 8 slow partitions on 4 cores: tasks are still running and
       // queued when a fault hits the concat
@@ -143,13 +143,13 @@ class CancellationSpec extends SparkSpec {
       }
       val df = spark.range(0, 160, 1, 8).toDF("id").withColumn("id", slow($"id"))
       val e = intercept[ArchiveException] {
-        new Engine(spark).archiveDF(df, s"faulty://$out", "t")
+        new Engine(spark, ArchiveConfig(format = format)).archiveDF(df, s"faulty://$out", "t")
       }
       assert(e.getMessage.startsWith("graft: upload: "), e.getMessage)
       assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
       Thread.sleep(1000) // time for a surviving task to recreate staging
       val names = out.toFile.list().toList
-      assert(names == List("t.csv"), s"residue: $names")
+      assert(names == List(s"t.${format.extension}"), s"residue: $names")
       assert(Files.readString(key) == "previous archive\n")
     } finally {
       hconf.unset("fs.faulty.impl")
@@ -168,6 +168,7 @@ class CancellationSpec extends SparkSpec {
 
   test("a failed commit rename restores the previous object at the key, no staging residue") {
     assertFaultLeavesKeyUntouched("rename")
+    assertFaultLeavesKeyUntouched("rename", Format.Parquet)
   }
 
   test("a single-object archive onto a directory fails and leaves the directory as it was") {

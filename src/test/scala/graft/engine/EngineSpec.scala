@@ -161,7 +161,9 @@ class EngineSpec extends SparkSpec {
       val separator = ""
       val close = "#\n"
     }
-    for (f <- Seq(Format.Csv, Format.JsonArray, Format.Yaml, Format.Custom(Classes, "cls"))) {
+    // single Parquet and ORC objects land through the row formats'
+    // staging and commit routine too, so they are pinned here as well
+    for (f <- Seq(Format.Csv, Format.JsonArray, Format.Yaml, Format.Custom(Classes, "cls"), Format.Parquet, Format.Orc)) {
       val single = jobsDuring(new Engine(spark, ArchiveConfig(format = f)).archive(sf0001, "orders", dir))
       assert(single._2 == 1, s"single $f object: ${single._2} jobs")
     }
@@ -182,6 +184,23 @@ class EngineSpec extends SparkSpec {
       case (line, i) if """\.rdd\b""".r.findFirstIn(line).isDefined => s"${i + 1}: ${line.trim}"
     }.toList
     assert(offenders.isEmpty, s".rdd in Engine.scala:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("lint: the engine spells each staging name shape once and parses no manifest with a regex") {
+    // code lines only: whole-line comments and trailing // comments are skipped
+    def code(p: Path): Seq[String] =
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8).linesIterator
+        .filterNot(l => Seq("//", "*", "/*").exists(l.trim.startsWith))
+        .map(_.replaceAll("""\s//.*$""", "")).toSeq
+    val engine = Files.list(Paths.get("src/main/scala/graft/engine")).iterator().asScala.toList
+    assert(engine.exists(_.getFileName.toString == "Engine.scala"))
+    val all = engine.flatMap(code)
+    for (shape <- Seq(".staging-", ".compact-"))
+      assert(all.map(java.util.regex.Pattern.quote(shape).r.findAllIn(_).size).sum == 1,
+        s"$shape in:\n  ${all.filter(_.contains(shape)).mkString("\n  ")}")
+    val manifestRegex = code(Paths.get("src/main/scala/graft/engine/Engine.scala"))
+      .filter(l => l.contains("\"bytes\": (") || l.contains("\"rows\": ("))
+    assert(manifestRegex.isEmpty, manifestRegex.mkString("\n  "))
   }
 
   test("lint: the engine renders dates and timestamps from their stored values") {

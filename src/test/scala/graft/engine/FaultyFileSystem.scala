@@ -7,11 +7,13 @@ import java.io.IOException
 import java.net.URI
 
 /** The local filesystem under the `faulty` scheme, with one fault,
-  * chosen by `fs.faulty.fault`, in the single-object concat:
+  * chosen by `fs.faulty.fault`, in a single-object landing:
   *  - `create` (the default): every create of a file named `_object`,
   *    the concat's temp object, fails;
-  *  - `rename`: every rename of `_object`, the commit onto the key,
-  *    fails;
+  *  - `rename`: every commit rename, of a staged object out of its
+  *    `.staging-` directory onto the key, fails (the row formats' temp
+  *    object and the columnar writers' part file alike); moving the
+  *    previous object aside and restoring it still work;
   *  - `read`: every read of a committed staged part (`part-NNNNN`)
   *    fails after its first 16 bytes, mid-copy.
   * Register it with `fs.faulty.impl`.
@@ -29,7 +31,7 @@ class FaultyFileSystem extends RawLocalFileSystem {
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 
   override def rename(src: Path, dst: Path): Boolean =
-    if (fault == "rename" && src.getName == "_object")
+    if (fault == "rename" && src.getParent.getName.contains(".staging-") && src.getName != "_previous")
       throw new IOException(s"injected rename failure: $src -> $dst")
     else super.rename(src, dst)
 

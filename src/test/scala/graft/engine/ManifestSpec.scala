@@ -77,6 +77,82 @@ class ManifestSpec extends SparkSpec {
     assert(new Engine(spark).verifyManifest(dest).isEmpty)
   }
 
+  /** A sharded CSV landing of sf0.001 orders with its manifest, and the
+    * manifest's path.
+    */
+  private def landManifested(engine: Engine): (String, java.nio.file.Path) = {
+    val src = spark.read.parquet(s"$sf0001/orders.parquet").repartition(4)
+    val dest = engine.archiveDF(src, freshDir(), "orders")
+    engine.writeManifest(dest)
+    (dest, java.nio.file.Paths.get(dest, Engine.ManifestName))
+  }
+
+  private def dataFiles(dest: String): Seq[String] =
+    new java.io.File(dest).list().toSeq.filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
+
+  /** Replaces the manifest's text as a tool outside Hadoop would: the
+    * local filesystem's checksum sidecar goes too.
+    */
+  private def overwrite(manifest: java.nio.file.Path, text: String): Unit = {
+    java.nio.file.Files.writeString(manifest, text)
+    java.nio.file.Files.deleteIfExists(manifest.resolveSibling(s".${manifest.getFileName}.crc"))
+  }
+
+  /** The manifest's JSON re-serialized compactly, as any JSON tool
+    * may rewrite it, after `edit`.
+    */
+  private def rewriteCompact(manifest: java.nio.file.Path)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit = _ => ()): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val tree = mapper.readTree(manifest.toFile).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(tree)
+    overwrite(manifest, mapper.writeValueAsString(tree))
+  }
+
+  test("a manifest re-serialized as compact JSON audits clean, and repair deletes nothing") {
+    val engine = new Engine(spark, ArchiveConfig(format = Format.Csv, sharded = true))
+    val (dest, manifest) = landManifested(engine)
+    val shards = dataFiles(dest)
+    assert(shards.size >= 2, "fixture degenerate: need >= 2 shards")
+    rewriteCompact(manifest)()
+    assert(!java.nio.file.Files.readString(manifest).contains(": "), "fixture: manifest not compact")
+    assert(engine.verifyManifest(dest).isEmpty)
+    assert(engine.repairArchive(dest).isEmpty)
+    assert(dataFiles(dest) == shards)
+  }
+
+  test("a compact manifest whose row count is off by one gives exactly one row-drift finding") {
+    val engine = new Engine(spark, ArchiveConfig(format = Format.Csv, sharded = true))
+    val (dest, manifest) = landManifested(engine)
+    rewriteCompact(manifest)(m => m.put("rows", m.get("rows").asLong + 1))
+    val findings = engine.verifyManifest(dest)
+    assert(findings.size == 1 && findings.head.startsWith("row drift: recorded "), findings)
+  }
+
+  test("a truncated manifest is one 'manifest unreadable' finding, and repair refuses it") {
+    val engine = new Engine(spark, ArchiveConfig(format = Format.Csv, sharded = true))
+    val (dest, manifest) = landManifested(engine)
+    val shards = dataFiles(dest)
+    val json = java.nio.file.Files.readString(manifest)
+    overwrite(manifest, json.take(json.length / 2))
+    val findings = engine.verifyManifest(dest)
+    assert(findings.size == 1 && findings.head.startsWith("manifest unreadable: "), findings)
+    val e = intercept[ArchiveException] { engine.repairArchive(dest) }
+    assert(e.getMessage.contains("refusing to repair"))
+    assert(dataFiles(dest) == shards)
+  }
+
+  test("a manifest in the original hand-rendered byte format still verifies clean") {
+    val engine = new Engine(spark, ArchiveConfig(format = Format.Csv, sharded = true))
+    val (dest, manifest) = landManifested(engine)
+    val m = engine.writeManifest(dest)
+    val files = m.files.map(f => s"""{"bytes": ${f.bytes}, "path": "${f.path}"}""").mkString(", ")
+    overwrite(manifest,
+      s"""{"files": [$files], "format": "csv", "n_files": ${m.files.size}, "rows": ${m.rows}, """ +
+        s""""total_bytes": ${m.files.map(_.bytes).sum}}""")
+    assert(engine.verifyManifest(dest).isEmpty)
+  }
+
   test("a directory without a manifest reports exactly that") {
     val engine = new Engine(spark, ArchiveConfig(
       format = Format.Csv, sharded = true))
