@@ -2,7 +2,7 @@ package graft.engine
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.SerializableWritable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
@@ -30,9 +30,12 @@ import scala.jdk.CollectionConverters._
   *     them byte-for-byte to the exact key (bounded memory, pure I/O
   *     on the sequential leg).
   *   - sharded mode (`sharded = true`): the 100 TB path — executors
-  *     write part objects under `<key>/` in parallel via the
-  *     committer; CSV gets a header per part, JSON degrades to
-  *     JSON-lines (array framing has no parallel equivalent).
+  *     write part files in parallel into a staged directory, which is
+  *     then committed onto `<key>/` as a whole; CSV gets a header per
+  *     part, JSON degrades to JSON-lines (array framing has no
+  *     parallel equivalent).
+  * Both modes land through one staged commit ([[landObject]]): a
+  * failed archive leaves the previous one at the key.
   * Any `hadoop fs` scheme works as destination (file://, hdfs://,
   * s3a://); writes go through the Hadoop FileSystem API.
   */
@@ -80,12 +83,11 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * truncated but "successful" object (SURVEY §3.1 note (a)). At
     * 100 TB a truncated-but-green archive is data corruption, so here
     * cancellation surfaces as a stage-prefixed [[ArchiveException]]
-    * and the destination object is never committed — the final object
-    * appears only via a rename after a complete write, and staged
-    * parts are discarded with the job (the row path waits, bounded,
-    * for the job's tasks to end before it removes staging; the
-    * columnar path carries the residual-garbage caveat of Spark's own
-    * file committers).
+    * and the destination archive is never committed — the final object
+    * or directory appears only via a rename after a complete write, and
+    * staged parts are discarded with the job (the archive's jobs are
+    * waited for, bounded, until their tasks end before staging is
+    * removed; see [[cancelAndDrain]]).
     */
   def archiveDFCancellable(df: DataFrame, destDir: String, table: String = "table",
       config: ArchiveConfig => ArchiveConfig = identity): ArchiveJob = {
@@ -124,57 +126,25 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         "partitionBy requires sharded mode: one exact-named object cannot carry a directory layout"))
     if (columnar(cfg.format)) return writeColumnarSingle(df, cfg, dest)
     val fmt = RowFormatter.of(cfg.format)
-    val schema = df.schema
-    val nullValue = cfg.nullValue
-    // the DataFrame's own Row encoder, made on the driver: tasks format
-    // the one planned query's binary rows, and a cell or a custom format
-    // that needs a Row gets it from this encoder (OPTIMIZATION_r09.md §11)
-    val encoder = encoderFor(df.encoder)
-    // every partition formats in parallel in one Spark job, streaming
-    // its rows, joined by the in-part separators, to one staged file.
-    // The conf is broadcast, not captured in the task closure: each task
-    // deserializes its closure, which on 4 vCPUs in local mode cost every
-    // archive about 15 ms more than the broadcast
-    val bcConf = spark.sparkContext.broadcast(
-      new SerializableWritable(spark.sparkContext.hadoopConfiguration))
     landObject(dest) { (fs, staging) =>
-      val rows = stage("download")(df.queryExecution.toRdd)
-      // …then ONE sequential driver-side byte concatenation to the
-      // exact key: pure I/O at filesystem copy speed (no row decode, no
-      // per-partition job scheduling), preserving header / array
-      // framing at the seams. Single-object output is driver-bound by
-      // contract (one named object); sharded mode is the scale path.
-      // The staged job runs inside the upload stage: its writes land on
-      // the destination filesystem, so an unwritable destination is an
-      // upload error (chiv parity) — formatter errors carry their own
-      // stage from the task (see [[StagedPart]]).
+      // the job stages one part per partition; ONE sequential driver-side
+      // byte concatenation then joins them into the object: pure I/O at
+      // filesystem copy speed (no row decode, no per-partition job
+      // scheduling), preserving header / array framing at the seams.
+      // Single-object output is driver-bound by contract (one named
+      // object); sharded mode is the scale path.
       //
-      // The concat overlaps the job: each task's result completes its
-      // partition's promise, and the loop copies part i as soon as that
-      // promise holds (the task-side rename happens before the task
-      // result is produced, so a delivered result means the part file
-      // is complete). Bytes follow partition order: the loop appends
-      // strictly in partition order.
-      if (!fs.mkdirs(staging))
-        throw new java.io.IOException(s"cannot create $staging")
-      val n = rows.getNumPartitions
-      val hasRows = Array.fill(n)(Promise[Boolean]())
-      val fut = spark.sparkContext.submitJob[InternalRow, Boolean, Unit](
-        rows, StagedPart.writer(staging.toString, bcConf, fmt, schema, nullValue, encoder),
-        0 until n, (i, any) => hasRows(i).success(any), ())
-      fut.onComplete(_.failed.foreach(e => hasRows.foreach(_.tryFailure(e))))(ExecutionContext.global)
-      // concatenate into a temp object INSIDE staging: a failure
-      // mid-copy can never leave a truncated-but-plausible object at
-      // the exact key
+      // The concat overlaps the job: it copies part i as soon as part i
+      // is committed, strictly in partition order. It writes a temp
+      // object INSIDE staging: a failure mid-copy can never leave a
+      // truncated-but-plausible object at the exact key
       val tmp = new Path(staging, "_object")
-      try {
+      formatParts(df, cfg, fs, staging, lines = false) { parts =>
         val out = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20)
         try {
-          out.write(fmt.open(schema).getBytes(StandardCharsets.UTF_8))
+          out.write(fmt.open(df.schema).getBytes(StandardCharsets.UTF_8))
           var first = true
-          // a failed job fails the awaited promise; stage() unwraps the
-          // task's ArchiveException
-          for (i <- 0 until n if Await.result(hasRows(i).future, Duration.Inf)) {
+          for ((hasRows, i) <- parts.zipWithIndex if hasRows()) {
             if (!first && fmt.separator.nonEmpty)
               out.write(fmt.separator.getBytes(StandardCharsets.UTF_8))
             val in = fs.open(new Path(f"$staging/part-$i%05d"))
@@ -184,33 +154,77 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
           }
           out.write(fmt.close.getBytes(StandardCharsets.UTF_8))
         } finally out.close()
-      } catch {
-        case e: Throwable =>
-          // a driver-side failure leaves the job running: its tasks
-          // would write into staging while the cleanup deletes it
-          cancelAndDrain(fut)
-          throw e
       }
-      // every partition's result has arrived, so the job is over before
-      // landObject commits: a failed commit has no job to drain
       tmp
     }
   }
 
-  /** Lands one exact-named object at `dest`. `write` puts the object in
-    * a fresh staging directory and returns its path; the object is then
-    * committed onto the key ([[commit]]) and staging removed. Any
-    * failure removes staging and surfaces as an upload error, unless it
-    * already carries its own stage.
+  /** Formats `df`'s rows in `cfg`'s row format in one Spark job over the
+    * one planned query's binary rows: partition i goes to
+    * `<dir>/part-NNNNN` ([[StagedPart.writer]]), its rows joined by the
+    * format's separator or, with `lines`, one line per row. `consume`
+    * runs on the driver while the job does; it gets one call per
+    * partition, in partition order, that waits for that partition's
+    * part to be committed and says whether it has rows. The job is
+    * left to the landing's failure handling ([[cleaningStagingOnFailure]]),
+    * which cancels it and waits for its tasks on any failure, its own or
+    * `consume`'s.
+    *
+    * As in Spark's own file writers, an input of no partitions runs as
+    * one empty partition, and partition 0 always leaves a part: a sharded
+    * archive of no rows is one empty shard.
+    */
+  private def formatParts(df: DataFrame, cfg: ArchiveConfig, fs: FileSystem, dir: Path,
+      lines: Boolean)(consume: Seq[() => Boolean] => Unit): Unit = {
+    // the DataFrame's own Row encoder, made on the driver: tasks format
+    // the one planned query's binary rows, and a cell or a custom format
+    // that needs a Row gets it from this encoder (OPTIMIZATION_r09.md §11)
+    val encoder = encoderFor(df.encoder)
+    // the conf is broadcast, not captured in the task closure: each task
+    // deserializes its closure, which on 4 vCPUs in local mode cost every
+    // archive about 15 ms more than the broadcast
+    val bcConf = spark.sparkContext.broadcast(
+      new SerializableWritable(spark.sparkContext.hadoopConfiguration))
+    val rows = stage("download") {
+      val planned = df.queryExecution.toRdd
+      if (planned.getNumPartitions > 0) planned
+      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    }
+    if (!fs.mkdirs(dir))
+      throw new java.io.IOException(s"cannot create $dir")
+    // The job runs inside the caller's upload stage: its writes land on
+    // the destination filesystem, so an unwritable destination is an
+    // upload error (chiv parity); row-production and formatter errors
+    // carry their own stage from the task. A task commits its part
+    // before it delivers its result, so a delivered result means the
+    // part is complete.
+    val n = rows.getNumPartitions
+    val hasRows = Array.fill(n)(Promise[Boolean]())
+    val fut = spark.sparkContext.submitJob[InternalRow, Boolean, Unit](rows,
+      StagedPart.writer(dir.toString, bcConf, RowFormatter.of(cfg.format), df.schema,
+        cfg.nullValue, encoder, lines),
+      0 until n, (i, any) => hasRows(i).success(any), ())
+    fut.onComplete(_.failed.foreach(e => hasRows.foreach(_.tryFailure(e))))(ExecutionContext.global)
+    // a failed job fails the awaited promise; stage() unwraps the task's
+    // ArchiveException
+    consume(hasRows.toSeq.map(p => () => Await.result(p.future, Duration.Inf)))
+  }
+
+  /** Lands one archive at `dest`, a single object or a sharded
+    * directory. `write` puts the archive in a fresh staging directory
+    * and returns its path, a file or a directory; the archive is then
+    * committed onto the key ([[commit]]) and staging removed, the
+    * previous archive with it. Any failure removes staging and surfaces
+    * as an upload error, unless it already carries its own stage.
     *
     * Staging is invocation-unique, `<dest>.staging-<uuid>`: two
     * concurrent archives to the SAME destination (trivial via
     * archiveDFCancellable) must not interleave staged parts or delete
     * each other's staging on their own failure path; the last-wins race
     * is then confined to the final commit. That commit moves the
-    * previous object aside and then renames — a two-step window in
+    * previous archive aside and then renames — a two-step window in
     * which a concurrent committer can recreate the target (the loser's
-    * rename then fails with IllegalStateException rather than
+    * commit then fails with IllegalStateException rather than
     * corrupting) and a reader can briefly observe the destination
     * missing; a single-step rename-with-overwrite (where the filesystem
     * offers one) would close it. The trade-off vs a fixed name: a hard
@@ -218,7 +232,8 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * dir instead of being overwritten by the next run — the same
     * residual class as Spark's own `_temporary` attempt dirs;
     * [[vacuumStaging]] is the periodic reap policy (see docs/S3A.md for
-    * the object-store variant).
+    * the object-store variant, where committing a sharded archive
+    * copies each of its files once).
     */
   private def landObject(dest: String)(write: (FileSystem, Path) => Path): Unit = {
     val staging = new Path(dest + Engine.StagingInfix + java.util.UUID.randomUUID())
@@ -232,17 +247,27 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     }
   }
 
-  /** Rename `staged` onto `target`. A previous object at `target` is
+  /** Rename `staged` onto `target`. A previous archive at `target` is
     * first moved aside into `staging` and moved back if the rename
     * fails, so a failed commit leaves the key as it was; the caller's
-    * removal of `staging` deletes it once the new object is in place.
-    * A directory at `target` (say, a sharded archive) is refused, never
-    * moved aside and deleted.
+    * removal of `staging` deletes it once the new archive is in place.
+    * A staged directory (a sharded archive) replaces an object or a
+    * directory; a staged file (a single object) over a directory is
+    * refused, never moved aside and deleted.
+    *
+    * Hadoop's `rename` moves its source INTO a destination that is an
+    * existing directory. A concurrent archive that recreates the key
+    * between the move aside and the rename would so get this archive
+    * nested inside its own; a check after the rename finds it there,
+    * moves it back into staging and fails the commit, leaving the other
+    * archive at the key. (`FileContext.rename` with `Rename.NONE` refuses
+    * up front instead, but needs an `AbstractFileSystem` binding for the
+    * scheme; the check works on every `FileSystem`.)
     */
   private def commit(fs: FileSystem, staged: Path, target: Path, staging: Path): Unit = {
     val aside = new Path(staging, "_previous")
     val moved = fs.exists(target) && {
-      if (fs.getFileStatus(target).isDirectory)
+      if (fs.getFileStatus(target).isDirectory && fs.getFileStatus(staged).isFile)
         throw new IllegalStateException(s"$target is a directory, not an object")
       if (!fs.rename(target, aside))
         throw new IllegalStateException(s"rename $target -> $aside failed")
@@ -252,48 +277,63 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     try {
       if (!fs.rename(staged, target))
         throw new IllegalStateException(s"rename $staged -> $target failed")
+      val nested = new Path(target, staged.getName)
+      if (fs.exists(nested)) {
+        fs.rename(nested, staged)
+        throw new IllegalStateException(s"$target was recreated during the commit")
+      }
       done = true
     } finally {
-      if (!done && moved && !fs.rename(aside, target))
+      if (!done && moved && !fs.exists(target) && !fs.rename(aside, target))
         throw new IllegalStateException(s"restoring $target from $aside failed")
     }
   }
 
-  /** Cancel `fut`'s job and wait until it has ended: the status
-    * tracker shows it finished and none of its tasks still running, so
-    * staging is not removed under a task's writes. Bounded at 30 s,
-    * since the tracker is fed asynchronously; a job the tracker has
-    * not reported within 1 s counts as never started (Spark skips a
-    * job of an already cancelled group without reporting it). A task
-    * whose start reaches the tracker only after the job's end is not
-    * waited for; the tasks' non-recursive create keeps it from
-    * recreating staging.
+  /** Cancel the jobs tagged `tag` and wait until each has ended: the
+    * status tracker shows it finished and none of its tasks still
+    * running, so staging is not removed under a task's writes (a task of
+    * Spark's own writers can still be creating its file after its job
+    * has failed). Bounded at 30 s, since the tracker is fed
+    * asynchronously; while the tracker has reported no job for the tag,
+    * none counts as started after 1 s (Spark skips a job of an already
+    * cancelled group without reporting it). A task whose start reaches
+    * the tracker only after the job's end is not waited for; the
+    * row-format tasks' non-recursive create keeps it from recreating
+    * staging.
     */
-  private def cancelAndDrain(fut: org.apache.spark.FutureAction[_]): Unit = {
-    fut.cancel()
+  private def cancelAndDrain(tag: String): Unit = {
+    spark.sparkContext.cancelJobsWithTag(tag)
     val tracker = spark.sparkContext.statusTracker
     val t0 = System.nanoTime()
     def elapsedS = (System.nanoTime() - t0) / 1e9
-    def running(id: Int) = tracker.getJobInfo(id) match {
-      case Some(job) =>
-        job.status == org.apache.spark.JobExecutionStatus.RUNNING ||
-          job.stageIds.exists(st => tracker.getStageInfo(st).exists(_.numActiveTasks > 0))
-      case None => elapsedS < 1.0
+    def running(id: Int) = tracker.getJobInfo(id).exists { job =>
+      job.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+        job.stageIds.exists(st => tracker.getStageInfo(st).exists(_.numActiveTasks > 0))
     }
-    while ((!fut.isCompleted || fut.jobIds.exists(running)) && elapsedS < 30.0) Thread.sleep(10)
+    def busy = {
+      val ids = tracker.getJobIdsForTag(tag)
+      if (ids.isEmpty) elapsedS < 1.0 else ids.exists(running)
+    }
+    while (busy && elapsedS < 30.0) Thread.sleep(10)
   }
 
-  /** Run `body`; on ANY failure best-effort delete the staging path
-    * (failed or cancelled archives must not leak staged bytes), then
-    * rethrow.
+  /** Run `body`, tagging every Spark job it submits; on ANY failure
+    * cancel those jobs and wait for them to end ([[cancelAndDrain]]),
+    * best-effort delete the staging path (failed or cancelled archives
+    * must not leak staged bytes), then rethrow.
     */
-  private def cleaningStagingOnFailure[T](staging: Path)(body: => T): T =
+  private def cleaningStagingOnFailure[T](staging: Path)(body: => T): T = {
+    val sc = spark.sparkContext
+    val jobs = s"graft-staging-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(jobs)
     try body catch {
       case e: Throwable =>
-        try staging.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(staging, true)
+        cancelAndDrain(jobs)
+        try staging.getFileSystem(sc.hadoopConfiguration).delete(staging, true)
         catch { case _: Exception => () }
         throw e
-    }
+    } finally sc.removeJobTag(jobs)
+  }
 
   /** Columnar single object: one part file written by Spark's writer
     * into staging, then committed to the exact key (the classic
@@ -310,24 +350,31 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         .getOrElse(throw new IllegalStateException(s"no part file under $staging"))
     }
 
+  /** A sharded archive: a directory of part files, landed at `dest` by
+    * the same staged commit as a single object ([[landObject]]), so a
+    * failed archive leaves the previous one at the key. Spark's writers
+    * write Parquet, ORC and CSV shards, with a hive-style
+    * `cfg.partitionBy` layout when set (partition values move into the
+    * directory path and downstream scans prune on them). The row
+    * formats write `part-NNNNN` shards, one line per row
+    * ([[formatParts]]).
+    */
   private def writeSharded(df: DataFrame, cfg: ArchiveConfig, dest: String): Unit = {
-    val schema = df.schema
-    val nullValue = cfg.nullValue
-    // hive-style partition layout (cfg.partitionBy): supported for the
-    // Spark codegen writers (parquet/orc/csv), where partition values
-    // move into the directory path and downstream scans prune on them
-    def laidOut(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) =
-      if (cfg.partitionBy.nonEmpty) w.partitionBy(cfg.partitionBy: _*) else w
-    stage("upload") {
+    if (cfg.partitionBy.nonEmpty && !columnar(cfg.format) && cfg.format != Format.Csv)
+      throw new ArchiveException("upload", new IllegalArgumentException(
+        s"partitionBy is not supported for row-formatted ${cfg.format} shards " +
+          "(partition values live in the path, not the rows) — use parquet/orc/csv"))
+    landObject(dest) { (fs, staging) =>
+      val obj = new Path(staging, "_object")
+      def laidOut(w: org.apache.spark.sql.DataFrameWriter[Row]) =
+        if (cfg.partitionBy.nonEmpty) w.partitionBy(cfg.partitionBy: _*) else w
       cfg.format match {
-        case Format.Parquet =>
-          laidOut(df.write.mode("overwrite")).parquet(dest)
-        case Format.Orc =>
-          laidOut(df.write.mode("overwrite")).orc(dest)
+        case Format.Parquet => laidOut(df.write).parquet(obj.toString)
+        case Format.Orc => laidOut(df.write).orc(obj.toString)
         case Format.Csv =>
           // Spark's codegen'd CSV writer: header per part, Go-style
           // minimal quoting, placeholder via nullValue option.
-          laidOut(df.write.mode("overwrite")
+          laidOut(df.write
             .option("header", "true")
             .option("nullValue", cfg.nullValue.getOrElse(""))
             .option("emptyValue", "")
@@ -335,19 +382,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
             // (single-object parity mode omits a zero fraction; the
             // writer option cannot express that conditionality)
             .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"))
-            .csv(dest)
-        case other =>
-          if (cfg.partitionBy.nonEmpty)
-            throw new IllegalArgumentException(
-              s"partitionBy is not supported for row-formatted $other shards " +
-                "(partition values live in the path, not the rows) — use parquet/orc/csv")
-          // one line per binary row, written as the single-object path
-          // writes it, so a date or timestamp prints its stored value
-          val lines = df.queryExecution.toRdd.mapPartitions(
-            StagedPart.lines(RowFormatter.of(other), schema, nullValue, encoderFor(df.encoder)))
-          spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING)
-            .write.mode("overwrite").text(dest)
+            .csv(obj.toString)
+        case _ => formatParts(df, cfg, fs, obj, lines = true)(_.foreach(_()))
       }
+      obj
     }
   }
 
@@ -546,7 +584,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     */
   private def readManifest(fs: FileSystem, path: Path): Either[String, ArchiveManifest] =
     try {
-      val in = fs.open(path)
+      val in = Engine.unchecked(fs).open(path)
       val json = try Engine.Json.readTree(in) finally in.close()
       def field(node: JsonNode, name: String, ok: JsonNode => Boolean): JsonNode =
         Option(node.get(name)).filter(ok)
@@ -597,7 +635,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     json.put("format", m.format).put("n_files", m.files.size).put("rows", m.rows)
       .put("total_bytes", m.files.map(_.bytes).sum)
     val tmp = new Path(dest, s".${Engine.ManifestName}.tmp")
-    val out = fs.create(tmp, true)
+    val out = Engine.unchecked(fs).create(tmp, true)
     try out.write(Engine.Json.writeValueAsBytes(json)) finally out.close()
     // delete-then-rename is NOT an atomic replace on object stores: a
     // concurrent reader can observe the manifest briefly missing
@@ -935,9 +973,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   }
 
   /** Reap crash-leaked staging residue under `root` — the periodic
-    * policy [[writeSingleObject]]'s scaladoc promises: a hard driver
+    * policy [[landObject]]'s scaladoc promises: a hard driver
     * kill (no cleanup path runs) leaks a uniquely-named
-    * `<dest>.staging-<uuid>` dir (single-object writes) or
+    * `<dest>.staging-<uuid>` dir (any archive, single-object or
+    * sharded, with the previous archive inside once its commit began) or
     * `.compact-<uuid>` dir ([[compactArchive]]), the same residual
     * class as Spark's own `_temporary` attempt dirs. Sweep rules:
     *   - only paths matching those two graft-owned staging name
@@ -1036,7 +1075,7 @@ object Engine {
   val ManifestName = "_MANIFEST.json"
 
   /** The two staging name shapes [[Engine.vacuumStaging]] reaps:
-    * `<dest>.staging-<uuid>` next to a single object's key, and
+    * `<dest>.staging-<uuid>` next to an archive's key, and
     * `.compact-<uuid>` inside a directory [[Engine.compactArchive]]
     * rewrites.
     */
@@ -1045,6 +1084,17 @@ object Engine {
 
   /** Reads and writes `_MANIFEST.json`. */
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper
+
+  /** The filesystem `_MANIFEST.json` is read and written through: under
+    * a checksummed one (Hadoop's local filesystem), its raw filesystem,
+    * so the manifest gets no `.crc` sidecar and one rewritten by a tool
+    * outside Hadoop still reads. `setVerifyChecksum`/`setWriteChecksum`
+    * would change the cached `FileSystem` every caller shares.
+    */
+  private def unchecked(fs: FileSystem): FileSystem = fs match {
+    case checked: ChecksumFileSystem => checked.getRawFileSystem
+    case other => other
+  }
 
   /** [[Engine.vacuumStaging]]'s default grace window: comfortably
     * longer than any plausible in-flight archive, short enough that a
@@ -1107,14 +1157,16 @@ final case class ArchiveManifest(format: String, files: Seq[ShardEntry], rows: L
 private object StagedPart {
 
   /** Formats the task's partition of binary rows into
-    * `<staging>/part-<partition>` and returns whether the part has any
-    * row.
+    * `<staging>/part-<partition>`, joined by `fmt`'s separator or, with
+    * `lines`, one line per row ([[RowFormatter.writer]]), and returns
+    * whether the part has any row. A part without rows is dropped,
+    * except partition 0's.
     */
   def writer(staging: String, conf: Broadcast[SerializableWritable[Configuration]],
       fmt: RowFormatter, schema: StructType, nullValue: Option[String],
-      encoder: ExpressionEncoder[Row]): Iterator[InternalRow] => Boolean =
+      encoder: ExpressionEncoder[Row], lines: Boolean): Iterator[InternalRow] => Boolean =
     it => {
-      val sep = fmt.separator
+      val sep = if (lines) "" else fmt.separator
       val task = org.apache.spark.TaskContext.get()
       val idx = task.partitionId()
       // Task-commit protocol: write to an attempt-unique file, then
@@ -1138,7 +1190,7 @@ private object StagedPart {
         // the right stage; `out` tags its writes to the staging
         // file as upload errors (destination-filesystem I/O)
         try {
-          val write = RowFormatter.writer(fmt, schema, nullValue)
+          val write = RowFormatter.writer(fmt, schema, nullValue, lines)
           while (it.hasNext) {
             if (any) out.text.append(sep)
             write(out, it.next())
@@ -1154,26 +1206,8 @@ private object StagedPart {
       // recreate it (narrows the race; full protection against
       // zombies is a committer-level guarantee Spark itself also
       // only approximates)
-      if (!any || task.isInterrupted()) fs.delete(attempt, false)
+      if ((!any && idx != 0) || task.isInterrupted()) fs.delete(attempt, false)
       else if (!fs.rename(attempt, committed)) fs.delete(attempt, false)
       any
-    }
-
-  /** Each binary row's text without its trailing newline: one line of a
-    * sharded part.
-    */
-  def lines(fmt: RowFormatter, schema: StructType, nullValue: Option[String],
-      encoder: ExpressionEncoder[Row]): Iterator[InternalRow] => Iterator[String] =
-    it => {
-      val bytes = new java.io.ByteArrayOutputStream
-      val out = new RowOut(bytes, encoder)
-      val write = RowFormatter.writer(fmt, schema, nullValue)
-      it.map { r =>
-        write(out, r)
-        out.flush()
-        val line = bytes.toString(StandardCharsets.UTF_8).stripSuffix("\n")
-        bytes.reset()
-        line
-      }
     }
 }

@@ -693,14 +693,23 @@ object RowFormatter {
 
   /** How a task writes `fmt`'s rows of `schema` from Spark's binary
     * rows: a built-in format through its plan, any other through its
-    * own `row` over the `Row` that `out` deserializes.
+    * own `row` over the `Row` that `out` deserializes. With `lines`, each
+    * row's text ends in exactly one newline: one is added unless the
+    * text already ends in one. A built-in row's text ends in its
+    * non-empty `rowClose` (a YAML entry's is a newline); a custom row's
+    * is its `row` string.
     */
   private[engine] def writer(fmt: RowFormatter, schema: StructType,
-      nullValue: Option[String]): (RowOut, InternalRow) => Unit = fmt match {
-    case p: PlannedFormatter => p.plans(schema, nullValue).write
+      nullValue: Option[String], lines: Boolean = false): (RowOut, InternalRow) => Unit = fmt match {
+    case p: PlannedFormatter =>
+      val plan = p.plans(schema, nullValue)
+      if (!lines || p.rowClose.endsWith("\n")) plan.write
+      else (out, r) => { plan.write(out, r); out.text.append('\n') }
     case custom => (out, r) => {
       out.startRow()
-      out.text.append(custom.row(schema, out.row(r), nullValue))
+      val text = custom.row(schema, out.row(r), nullValue)
+      out.text.append(text)
+      if (lines && !text.endsWith("\n")) out.text.append('\n')
     }
   }
 }

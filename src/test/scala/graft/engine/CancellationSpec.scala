@@ -4,6 +4,7 @@ import graft.SparkSpec
 
 import java.nio.file.Files
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** A2 `ArchiveWithContext` semantics (chiv.go:32–34): a running
   * archive can be cancelled mid-flight; cancellation surfaces as the
@@ -120,13 +121,16 @@ class CancellationSpec extends SparkSpec {
     }
   }
 
-  /** Archives 8 slow partitions as a `format` single object over a
-    * previous object at `faulty://<dir>/t.<extension>` with `fault`
-    * injected (see [[FaultyFileSystem]]): the archive fails as an upload
-    * error, the staged job has ended, no staging residue is left, and
-    * the key still holds the previous bytes.
+  /** Archives 8 slow partitions as a `format` single object, or a
+    * sharded archive, over a previous archive at
+    * `faulty://<dir>/t.<extension>` (an object, or a directory of one
+    * shard) with `fault` injected (see [[FaultyFileSystem]]): the
+    * archive fails as an upload error, the staged job has ended, no
+    * staging residue is left, and the key still holds the previous
+    * bytes.
     */
-  private def assertFaultLeavesKeyUntouched(fault: String, format: Format = Format.Csv): Unit = {
+  private def assertFaultLeavesKeyUntouched(fault: String, format: Format = Format.Csv,
+      sharded: Boolean = false): Unit = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
@@ -135,7 +139,8 @@ class CancellationSpec extends SparkSpec {
     try {
       val out = Files.createTempDirectory("graft-faulty")
       val key = out.resolve(s"t.${format.extension}")
-      Files.writeString(key, "previous archive\n")
+      val previous = if (sharded) Files.createDirectories(key).resolve("part-00000") else key
+      Files.writeString(previous, "previous archive\n")
       // 8 slow partitions on 4 cores: tasks are still running and
       // queued when a fault hits the concat
       val slow = org.apache.spark.sql.functions.udf { (i: Long) =>
@@ -143,14 +148,16 @@ class CancellationSpec extends SparkSpec {
       }
       val df = spark.range(0, 160, 1, 8).toDF("id").withColumn("id", slow($"id"))
       val e = intercept[ArchiveException] {
-        new Engine(spark, ArchiveConfig(format = format)).archiveDF(df, s"faulty://$out", "t")
+        new Engine(spark, ArchiveConfig(format = format, sharded = sharded))
+          .archiveDF(df, s"faulty://$out", "t")
       }
       assert(e.getMessage.startsWith("graft: upload: "), e.getMessage)
       assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
       Thread.sleep(1000) // time for a surviving task to recreate staging
       val names = out.toFile.list().toList
       assert(names == List(s"t.${format.extension}"), s"residue: $names")
-      assert(Files.readString(key) == "previous archive\n")
+      assert(Files.readString(previous) == "previous archive\n")
+      if (sharded) assert(key.toFile.list().toList == List("part-00000"), key.toFile.list().toList)
     } finally {
       hconf.unset("fs.faulty.impl")
       hconf.unset("fs.faulty.impl.disable.cache")
@@ -169,6 +176,66 @@ class CancellationSpec extends SparkSpec {
   test("a failed commit rename restores the previous object at the key, no staging residue") {
     assertFaultLeavesKeyUntouched("rename")
     assertFaultLeavesKeyUntouched("rename", Format.Parquet)
+  }
+
+  test("a failed commit rename of a sharded re-archive restores the previous archive, no staging residue") {
+    for (format <- Seq(Format.Csv, Format.JsonArray, Format.Parquet))
+      assertFaultLeavesKeyUntouched("rename", format, sharded = true)
+  }
+
+  /** Every file under `dir`, by its path relative to `dir`, with its bytes. */
+  private def snapshot(dir: java.nio.file.Path): Map[String, Seq[Byte]] =
+    Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => dir.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+
+  test("a sharded re-archive whose row fails leaves the previous archive byte-identical, no staging residue, no active job") {
+    import spark.implicits._
+    val boom = org.apache.spark.sql.functions.udf { (i: Long) =>
+      if (i == 7L) throw new IllegalStateException("bad row") else i
+    }
+    for (format <- Seq(Format.Csv, Format.JsonArray, Format.Parquet)) {
+      val out = Files.createTempDirectory("graft-reshard")
+      val engine = new Engine(spark, ArchiveConfig(format = format, sharded = true))
+      val key = java.nio.file.Paths.get(engine.archiveDF(spark.range(0, 16, 1, 4).toDF("id"), out.toString, "t"))
+      val before = snapshot(key)
+      assert(before.keys.count(_.startsWith("part-")) >= 2, s"$format fixture degenerate: $before")
+      val e = intercept[ArchiveException] {
+        engine.archiveDF(spark.range(0, 16, 1, 4).toDF("id").withColumn("id", boom($"id")), out.toString, "t")
+      }
+      if (format == Format.JsonArray) assert(e.getMessage.startsWith("graft: download:"), e.getMessage)
+      else assert(e.getMessage.startsWith("graft: "), e.getMessage)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty, s"$format: job still active")
+      Thread.sleep(1000) // time for a surviving task to recreate staging
+      assert(out.toFile.list().toList == List(key.getFileName.toString),
+        s"$format residue: ${out.toFile.list().toList}")
+      assert(snapshot(key) == before, s"$format: the previous archive changed")
+    }
+  }
+
+  test("a sharded commit onto a key recreated mid-commit fails, never nesting the archive in the key") {
+    import spark.implicits._
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    hconf.setBoolean("fs.faulty.impl.disable.cache", true)
+    hconf.set("fs.faulty.fault", "race")
+    try {
+      val out = Files.createTempDirectory("graft-race")
+      val key = out.resolve("t.json")
+      Files.writeString(Files.createDirectories(key).resolve("part-00000"), "previous archive\n")
+      val e = intercept[ArchiveException] {
+        new Engine(spark, ArchiveConfig(format = Format.JsonArray, sharded = true))
+          .archiveDF(Seq(1L, 2L).toDF("id"), s"faulty://$out", "t")
+      }
+      assert(e.getMessage.startsWith("graft: upload: ") && e.getMessage.contains("recreated"), e.getMessage)
+      // the concurrent archive holds the key, and nothing of this one is left
+      assert(out.toFile.list().toList == List("t.json"), out.toFile.list().toList)
+      assert(key.toFile.list().toList == List("concurrent"), key.toFile.list().toList)
+    } finally {
+      hconf.unset("fs.faulty.impl")
+      hconf.unset("fs.faulty.impl.disable.cache")
+      hconf.unset("fs.faulty.fault")
+    }
   }
 
   test("a single-object archive onto a directory fails and leaves the directory as it was") {

@@ -170,6 +170,12 @@ class EngineSpec extends SparkSpec {
     val src = spark.read.parquet(s"$sf0001/orders.parquet")
     val rendered = src.rdd.collect().map(Classes.row(src.schema, _, None)).mkString
     assert(read(s"$dir/orders.cls") == "#\n" + rendered + "#\n")
+    // sharded JSON and YAML run the single objects' task into a staged directory
+    for (f <- Seq(Format.JsonArray, Format.Yaml)) {
+      val sharded = jobsDuring(new Engine(spark, ArchiveConfig(format = f, sharded = true))
+        .archive(sf0001, "orders", dir))
+      assert(sharded._2 == 1, s"sharded $f archive: ${sharded._2} jobs")
+    }
     val sharded = jobsDuring(new Engine(spark, ArchiveConfig(format = Format.Parquet, sharded = true))
       .archive(sf0001, "orders", dir))
     assert(sharded._2 == 1, s"sharded Parquet archive: ${sharded._2} jobs")
@@ -240,6 +246,22 @@ class EngineSpec extends SparkSpec {
       == "id,text_column,char_column,int_column,float_column,bool_column,ts_column,json_column\n")
     assert(read(e.archiveDF(none, dir.toString, "t", _.copy(format = Format.JsonArray))) == "[]")
     assert(read(e.archiveDF(none, dir.toString, "t", _.copy(format = Format.Yaml))) == "")
+  }
+
+  test("empty input, sharded: JSON lands one empty shard, CSV one header-only shard") {
+    val dir = tmpDir
+    val none = df.where("1 = 0")
+    def shards(dest: String): List[String] = {
+      assert(Files.isDirectory(Paths.get(dest)), dest)
+      Files.list(Paths.get(dest)).iterator().asScala.map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toList
+        .map(n => read(s"$dest/$n"))
+    }
+    val json = new Engine(spark, ArchiveConfig(format = Format.JsonArray, sharded = true))
+    assert(shards(json.archiveDF(none, dir.toString, "t")) == List(""))
+    val csv = new Engine(spark, ArchiveConfig(format = Format.Csv, sharded = true))
+    assert(shards(csv.archiveDF(none, dir.toString, "t")) ==
+      List("id,text_column,char_column,int_column,float_column,bool_column,ts_column,json_column\n"))
   }
 
   test("sharded mode writes a part directory with headers") {

@@ -7,13 +7,18 @@ import java.io.IOException
 import java.net.URI
 
 /** The local filesystem under the `faulty` scheme, with one fault,
-  * chosen by `fs.faulty.fault`, in a single-object landing:
+  * chosen by `fs.faulty.fault`, in a landing:
   *  - `create` (the default): every create of a file named `_object`,
-  *    the concat's temp object, fails;
-  *  - `rename`: every commit rename, of a staged object out of its
-  *    `.staging-` directory onto the key, fails (the row formats' temp
-  *    object and the columnar writers' part file alike); moving the
-  *    previous object aside and restoring it still work;
+  *    a single object's concat temp object, fails;
+  *  - `rename`: every rename out of a `.staging-` directory, but for
+  *    the previous archive's `_previous`, fails: the commit of a staged
+  *    archive onto the key (a single object's temp object or part file,
+  *    a sharded archive's `_object` directory), and a single object's
+  *    part commits; moving the previous archive aside and restoring it
+  *    still work;
+  *  - `race`: before the commit rename of a staged `_object` onto the
+  *    key, the key is recreated as a directory holding one file named
+  *    `concurrent`, as a concurrent archive would;
   *  - `read`: every read of a committed staged part (`part-NNNNN`)
   *    fails after its first 16 bytes, mid-copy.
   * Register it with `fs.faulty.impl`.
@@ -30,10 +35,16 @@ class FaultyFileSystem extends RawLocalFileSystem {
       throw new IOException(s"injected create failure: $f")
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 
-  override def rename(src: Path, dst: Path): Boolean =
-    if (fault == "rename" && src.getParent.getName.contains(".staging-") && src.getName != "_previous")
+  override def rename(src: Path, dst: Path): Boolean = {
+    val outOfStaging = src.getParent.getName.contains(".staging-") && src.getName != "_previous"
+    if (fault == "rename" && outOfStaging)
       throw new IOException(s"injected rename failure: $src -> $dst")
-    else super.rename(src, dst)
+    if (fault == "race" && outOfStaging && src.getName == "_object") {
+      mkdirs(dst)
+      super.create(new Path(dst, "concurrent"), true, 4096, 1.toShort, 1L << 20, null).close()
+    }
+    super.rename(src, dst)
+  }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     if (fault == "read" && f.getName.matches("part-\\d{5}"))

@@ -90,13 +90,11 @@ class ManifestSpec extends SparkSpec {
   private def dataFiles(dest: String): Seq[String] =
     new java.io.File(dest).list().toSeq.filter(n => !n.startsWith("_") && !n.startsWith(".")).sorted
 
-  /** Replaces the manifest's text as a tool outside Hadoop would: the
-    * local filesystem's checksum sidecar goes too.
+  /** Replaces the manifest's text as a tool outside Hadoop would,
+    * leaving any checksum sidecar of the local filesystem in place.
     */
-  private def overwrite(manifest: java.nio.file.Path, text: String): Unit = {
+  private def overwrite(manifest: java.nio.file.Path, text: String): Unit =
     java.nio.file.Files.writeString(manifest, text)
-    java.nio.file.Files.deleteIfExists(manifest.resolveSibling(s".${manifest.getFileName}.crc"))
-  }
 
   /** The manifest's JSON re-serialized compactly, as any JSON tool
     * may rewrite it, after `edit`.
