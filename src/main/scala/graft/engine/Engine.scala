@@ -265,7 +265,7 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     * scheme; the check works on every `FileSystem`.)
     */
   private def commit(fs: FileSystem, staged: Path, target: Path, staging: Path): Unit = {
-    val aside = new Path(staging, "_previous")
+    val aside = new Path(staging, Engine.Previous)
     val moved = fs.exists(target) && {
       if (fs.getFileStatus(target).isDirectory && fs.getFileStatus(staged).isFile)
         throw new IllegalStateException(s"$target is a directory, not an object")
@@ -320,7 +320,10 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
   /** Run `body`, tagging every Spark job it submits; on ANY failure
     * cancel those jobs and wait for them to end ([[cancelAndDrain]]),
     * best-effort delete the staging path (failed or cancelled archives
-    * must not leak staged bytes), then rethrow.
+    * must not leak staged bytes), then rethrow. A staging path that
+    * holds the only copy of the previous archive ([[orphanedKey]]: the
+    * commit moved it aside and could not restore it) is kept instead,
+    * and the error names it.
     */
   private def cleaningStagingOnFailure[T](staging: Path)(body: => T): T = {
     val sc = spark.sparkContext
@@ -329,10 +332,25 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     try body catch {
       case e: Throwable =>
         cancelAndDrain(jobs)
-        try staging.getFileSystem(sc.hadoopConfiguration).delete(staging, true)
-        catch { case _: Exception => () }
+        val kept = try {
+          val fs = staging.getFileSystem(sc.hadoopConfiguration)
+          orphanedKey(fs, staging).isDefined || { fs.delete(staging, true); false }
+        } catch { case _: Exception => false }
+        if (kept) throw new ArchiveException("upload", new IllegalStateException(
+          s"$staging kept: it holds the only copy of the previous archive (${e.getMessage})", e))
         throw e
     } finally sc.removeJobTag(jobs)
+  }
+
+  /** The key of the staging path `<key>.staging-<uuid>` when that path
+    * holds the previous archive [[commit]] moved aside and the key is
+    * absent: `_previous` is then the archive's only copy, to be
+    * restored, never deleted.
+    */
+  private def orphanedKey(fs: FileSystem, staging: Path): Option[Path] = {
+    val at = staging.getName.indexOf(Engine.StagingInfix)
+    Option.when(at > 0)(new Path(staging.getParent, staging.getName.take(at)))
+      .filter(key => fs.exists(new Path(staging, Engine.Previous)) && !fs.exists(key))
   }
 
   /** Columnar single object: one part file written by Spark's writer
@@ -988,8 +1006,13 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
     *     is actively creating part files, so its newest touch is
     *     always recent — mtime is the only signal a concurrent
     *     writer leaves on a filesystem);
-    *   - findings are returned like [[verifyManifest]] (reaped/spared
-    *     per path, surfaced to the caller, never just logged).
+    *   - a reaped `<key>.staging-<uuid>` that holds `_previous` while
+    *     the key is absent holds the only copy of the previous archive
+    *     (a kill between the commit's move aside and its rename):
+    *     `_previous` is first renamed back onto the key;
+    *   - findings are returned like [[verifyManifest]] (restored/
+    *     reaped/spared per path, surfaced to the caller, never just
+    *     logged).
     */
   def vacuumStaging(root: String,
       graceMs: Long = Engine.DefaultVacuumGraceMs): Seq[String] = {
@@ -1009,10 +1032,15 @@ final class Engine(spark: SparkSession, base: ArchiveConfig = ArchiveConfig()) {
         if (age < graceMs)
           Seq(s"spared (within grace): ${st.getPath} — newest touch ${age} ms ago")
         else {
+          val restored = orphanedKey(fs, st.getPath).toSeq.map { key =>
+            if (!fs.rename(new Path(st.getPath, Engine.Previous), key))
+              throw new IllegalStateException(s"previous archive could not be restored: $key")
+            s"restored: $key"
+          }
           if (!fs.delete(st.getPath, true))
             throw new ArchiveException("upload", new IllegalStateException(
               s"staging residue could not be removed: ${st.getPath}"))
-          Seq(s"reaped: ${st.getPath}")
+          restored :+ s"reaped: ${st.getPath}"
         }
       } else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(sweep)
       else Seq.empty
@@ -1081,6 +1109,11 @@ object Engine {
     */
   private val StagingInfix = ".staging-"
   private val CompactPrefix = ".compact-"
+
+  /** Where [[Engine.commit]] moves the previous archive aside, inside
+    * the staging path.
+    */
+  private val Previous = "_previous"
 
   /** Reads and writes `_MANIFEST.json`. */
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper

@@ -4,10 +4,8 @@ import graft.{QueryDef, Qdsl, Tables}
 import Qdsl._
 import org.apache.spark.sql.functions._
 
-/** Time-window operators over the `events` stream table, run in batch
-  * mode with semantics identical to Structured Streaming's (the same
-  * `window`/`session_window` expressions drive `readStream` pipelines
-  * — see [[graft.streaming.StreamingOps]]).
+/** Time-window operators over the `events` table, run in batch mode
+  * with Spark's `window`/`session_window` expressions.
   *
   * The reference has no streaming operators at all (SURVEY.md §2.6 —
   * its "streaming" is an io.Pipe, chiv.go:127–143), so this surface
@@ -265,9 +263,7 @@ object EventWindows {
     * rows). Order-independence makes the composition oracle-replayable
     * — the q38 CTE chain re-grouped by (win, type); at these SFs each
     * window holds < K rows so values are per-window EXACT order
-    * statistics (the sketch path itself is exercised by q38; the
-    * streaming face of this composition is
-    * [[graft.streaming.StreamingOps.streamingQuantiles]]).
+    * statistics (the sketch path itself is exercised by q38).
     */
   val e09 = QueryDef(
     "e09_windowed_quantiles",
@@ -373,10 +369,8 @@ object EventWindows {
   /** Interval (time-bounded) stream-stream join, batch twin: click →
     * purchase by the same user within 10 minutes. This is THE
     * stream-stream join shape — Structured Streaming requires exactly
-    * this time-bound condition to garbage-collect join state (the
-    * streaming variant with watermarks is
-    * [[graft.streaming.StreamingOps.intervalJoin]]; StreamingSpec pins
-    * batch/stream parity). In batch it plans as one shuffle on
+    * this time-bound condition to garbage-collect join state. In
+    * batch it plans as one shuffle on
     * user_id with the time predicate evaluated inside the join — at
     * 100 TB the equi-key carries the join; the interval is a free
     * post-filter, never a range-join blowup.
@@ -624,8 +618,8 @@ object EventWindows {
     * bit-identical by construction.
     *
     * Scale shape: one shuffle on (type, window), fixed-size state per
-    * group; the streaming twin is the same aggregate under a
-    * watermark. Downsampling 100 TB of raw ticks to hourly bars is
+    * group; a streaming version would be the same aggregate under
+    * a watermark. Downsampling 100 TB of raw ticks to hourly bars is
     * exactly this plan.
     */
   val e15 = QueryDef(
@@ -1263,10 +1257,9 @@ object EventWindows {
     */
   private[graft] val HourUs = 3600000000L
 
-  /** The e25 readout over ANY (user_id, hour_us, cnt) hour-count table
-    * — factored so the streaming face ([[graft.streaming.StreamingOps
-    * .burstLedger]]) provably applies the SHIPPED predicate to its
-    * merged ledger, never a twin. Output: flagged hours only,
+  /** The e25 readout over ANY (user_id, hour_us, cnt) hour-count table,
+    * shared by e25 and BurstSpec, which pins the predicate on
+    * hand-built counts. Output: flagged hours only,
     * (user_id, hour_us, cnt, n_hours, mean_cnt), unsorted.
     */
   private[graft] def burstFlags(hc: org.apache.spark.sql.DataFrame)

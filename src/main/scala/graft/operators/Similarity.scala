@@ -377,9 +377,9 @@ object Similarity {
 
   /** THE index bucket-count rule — one definition for every writer
     * that must stay append-compatible with the batch-built layout
-    * (ensureIvfIndex, c02's survivor landing, maintainIndex's
-    * streaming appends): a formula drift between writers surfaces as
-    * a bucket-spec mismatch on append, or a divergent fresh table.
+    * (ensureIvfIndex, c02's survivor landing, c06's index): a formula
+    * drift between writers surfaces as a bucket-spec mismatch on
+    * append, or a divergent fresh table.
     */
   private[graft] def ivfBuckets(cents: Seq[(Long, Array[Double], Double)]): Int =
     math.max(8, cents.size)
@@ -2123,7 +2123,7 @@ object Similarity {
   }
 
   /** s23: TOMBSTONED ANN — the DELETE face completing the index
-    * lifecycle (s05 build, s06 probe, s14/maintainIndex append, s23
+    * lifecycle (s05 build, s06 probe, s14 append, s23
     * delete): a deterministic deletion feed (vec_id ≡ 0 mod 9, ~11%)
     * is anti-joined against the PERSISTENT bucketed index at probe
     * time, so deleted vectors neither answer queries nor issue them —

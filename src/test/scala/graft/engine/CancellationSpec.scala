@@ -132,11 +132,7 @@ class CancellationSpec extends SparkSpec {
   private def assertFaultLeavesKeyUntouched(fault: String, format: Format = Format.Csv,
       sharded: Boolean = false): Unit = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
-    hconf.setBoolean("fs.faulty.impl.disable.cache", true)
-    hconf.set("fs.faulty.fault", fault)
-    try {
+    withFault(fault) {
       val out = Files.createTempDirectory("graft-faulty")
       val key = out.resolve(s"t.${format.extension}")
       val previous = if (sharded) Files.createDirectories(key).resolve("part-00000") else key
@@ -158,7 +154,17 @@ class CancellationSpec extends SparkSpec {
       assert(names == List(s"t.${format.extension}"), s"residue: $names")
       assert(Files.readString(previous) == "previous archive\n")
       if (sharded) assert(key.toFile.list().toList == List("part-00000"), key.toFile.list().toList)
-    } finally {
+    }
+  }
+
+  /** Runs `body` with the `faulty` scheme registered and `fault` injected. */
+  private def withFault(fault: String)(body: => Unit): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    hconf.setBoolean("fs.faulty.impl.disable.cache", true)
+    hconf.set("fs.faulty.fault", fault)
+    try body
+    finally {
       hconf.unset("fs.faulty.impl")
       hconf.unset("fs.faulty.impl.disable.cache")
       hconf.unset("fs.faulty.fault")
@@ -181,6 +187,26 @@ class CancellationSpec extends SparkSpec {
   test("a failed commit rename of a sharded re-archive restores the previous archive, no staging residue") {
     for (format <- Seq(Format.Csv, Format.JsonArray, Format.Parquet))
       assertFaultLeavesKeyUntouched("rename", format, sharded = true)
+  }
+
+  test("a commit whose restore rename fails too keeps the previous object under staging and names it") {
+    import spark.implicits._
+    withFault("restore") {
+      val out = Files.createTempDirectory("graft-restore")
+      Files.writeString(out.resolve("t.csv"), "previous archive\n")
+      val e = intercept[ArchiveException] {
+        new Engine(spark).archiveDF(Seq(1L, 2L).toDF("id"), s"faulty://$out", "t")
+      }
+      val names = out.toFile.list().toList
+      assert(names.size == 1 && names.head.startsWith("t.csv.staging-"), s"left: $names")
+      assert(e.getMessage.startsWith("graft: upload: ") && e.getMessage.contains(names.head), e.getMessage)
+      assert(Files.readString(out.resolve(names.head).resolve("_previous")) == "previous archive\n")
+      // the periodic reap then puts it back at the key
+      val findings = new Engine(spark).vacuumStaging(out.toString, graceMs = 0L)
+      assert(findings.exists(_.startsWith("restored: ")), findings.mkString("; "))
+      assert(out.toFile.list().toList == List("t.csv"), out.toFile.list().toList)
+      assert(Files.readString(out.resolve("t.csv")) == "previous archive\n")
+    }
   }
 
   /** Every file under `dir`, by its path relative to `dir`, with its bytes. */
@@ -215,11 +241,7 @@ class CancellationSpec extends SparkSpec {
 
   test("a sharded commit onto a key recreated mid-commit fails, never nesting the archive in the key") {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    hconf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
-    hconf.setBoolean("fs.faulty.impl.disable.cache", true)
-    hconf.set("fs.faulty.fault", "race")
-    try {
+    withFault("race") {
       val out = Files.createTempDirectory("graft-race")
       val key = out.resolve("t.json")
       Files.writeString(Files.createDirectories(key).resolve("part-00000"), "previous archive\n")
@@ -231,10 +253,6 @@ class CancellationSpec extends SparkSpec {
       // the concurrent archive holds the key, and nothing of this one is left
       assert(out.toFile.list().toList == List("t.json"), out.toFile.list().toList)
       assert(key.toFile.list().toList == List("concurrent"), key.toFile.list().toList)
-    } finally {
-      hconf.unset("fs.faulty.impl")
-      hconf.unset("fs.faulty.impl.disable.cache")
-      hconf.unset("fs.faulty.fault")
     }
   }
 

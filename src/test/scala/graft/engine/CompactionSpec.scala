@@ -82,27 +82,19 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("continuous landing then compaction: per-batch objects merge, audit stays clean") {
-    // the lifecycle the two pieces exist for: a streaming landing
-    // accumulates one small object per micro-batch; the maintenance
-    // job compacts them and the manifest audit certifies the result
+    // the lifecycle the two pieces exist for: a continuous landing
+    // accumulates one small object per batch; the maintenance job
+    // compacts them and the manifest audit certifies the result
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sql = spark.sqlContext
     val dest = freshDir("stream")
     val eng = new Engine(spark, ArchiveConfig(format = Format.Parquet))
-    val input = MemoryStream[graft.streaming.StreamingOps.Event]
-    def ev(id: Long, user: Long) = graft.streaming.StreamingOps.Event(
-      id, java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z")),
-      user, "click", 1.0)
-    val q = graft.streaming.StreamingOps.archiveStream(
-      input.toDF(), eng, dest, "events")
-    try {
-      (0 until 4).foreach { b =>
-        input.addData(ev(b * 2L, 10), ev(b * 2L + 1, 11))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(listData(dest).size == 4, "one object per micro-batch")
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-01T00:00:00Z"))
+    (0 until 4).foreach { b =>
+      val batch = Seq((b * 2L, ts, 10L, "click", 1.0), (b * 2L + 1, ts, 11L, "click", 1.0))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+      eng.archiveDF(batch, dest, s"events-$b")
+    }
+    assert(listData(dest).size == 4, "one object per batch")
     eng.writeManifest(dest, Format.Parquet)
     val before = spark.read.parquet(dest).sort("event_id").collect().toSeq
     assert(before.size == 8)

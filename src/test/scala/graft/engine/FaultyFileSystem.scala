@@ -10,12 +10,13 @@ import java.net.URI
   * chosen by `fs.faulty.fault`, in a landing:
   *  - `create` (the default): every create of a file named `_object`,
   *    a single object's concat temp object, fails;
-  *  - `rename`: every rename out of a `.staging-` directory, but for
-  *    the previous archive's `_previous`, fails: the commit of a staged
+  *  - `rename`: every commit rename, from directly inside a
+  *    `.staging-` directory to outside it, fails: the commit of a staged
   *    archive onto the key (a single object's temp object or part file,
-  *    a sharded archive's `_object` directory), and a single object's
-  *    part commits; moving the previous archive aside and restoring it
-  *    still work;
+  *    a sharded archive's `_object` directory). Restoring the previous
+  *    archive's `_previous`, moving it aside, and renames that stay
+  *    inside staging, such as a task's part commit, still work;
+  *  - `restore`: as `rename`, and restoring `_previous` fails too;
   *  - `race`: before the commit rename of a staged `_object` onto the
   *    key, the key is recreated as a directory holding one file named
   *    `concurrent`, as a concurrent archive would;
@@ -36,10 +37,12 @@ class FaultyFileSystem extends RawLocalFileSystem {
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 
   override def rename(src: Path, dst: Path): Boolean = {
-    val outOfStaging = src.getParent.getName.contains(".staging-") && src.getName != "_previous"
-    if (fault == "rename" && outOfStaging)
+    val staging = src.getParent
+    val commit = staging.getName.contains(".staging-") &&
+      !dst.toUri.getPath.startsWith(staging.toUri.getPath + "/")
+    if (commit && (fault == "restore" || fault == "rename" && src.getName != "_previous"))
       throw new IOException(s"injected rename failure: $src -> $dst")
-    if (fault == "race" && outOfStaging && src.getName == "_object") {
+    if (fault == "race" && commit && src.getName == "_object") {
       mkdirs(dst)
       super.create(new Path(dst, "concurrent"), true, 4096, 1.toShort, 1L << 20, null).close()
     }

@@ -72,6 +72,25 @@ class VacuumSpec extends SparkSpec {
     assert(!d.exists())
   }
 
+  test("a staging dir holding the only copy of the previous archive restores it onto its key") {
+    val root = freshDir("restore")
+    // killed between the commit's move aside and its rename: no key
+    val obj = mkTree(root, "t.csv.staging-x", "_previous" -> "a,b\n1,2\n", "_object" -> "a,b\n3,4\n")
+    val dir = mkTree(root, "d.json.staging-y/_previous", "part-00000" -> "{\"a\":1}\n").getParentFile
+    // the key is there: `_previous` is a superseded copy, reaped as before
+    val old = mkTree(root, "u.csv.staging-z", "_previous" -> "old\n")
+    java.nio.file.Files.writeString(new java.io.File(root, "u.csv").toPath, "new\n")
+
+    val findings = new Engine(spark).vacuumStaging(root, graceMs = 0L)
+    assert(findings.count(_.startsWith("restored: ")) == 2, findings.mkString("; "))
+    assert(findings.count(_.startsWith("reaped: ")) == 3, findings.mkString("; "))
+    assert(!obj.exists() && !dir.exists() && !old.exists())
+    def read(rel: String) = java.nio.file.Files.readString(new java.io.File(root, rel).toPath)
+    assert(read("t.csv") == "a,b\n1,2\n")
+    assert(read("d.json/part-00000") == "{\"a\":1}\n")
+    assert(read("u.csv") == "new\n")
+  }
+
   test("a clean tree yields no findings; a missing root is a stage-tagged error") {
     val root = freshDir("clean")
     mkTree(root, "dt=2024-01-01", "part-00000.parquet" -> "data")

@@ -75,11 +75,11 @@ class SessionSetupSpec extends SparkSpec {
     } finally stream.close()
   }
 
-  test("lint: register runs at its 3 boundaries, newSession only in childSession, one list of names") {
+  test("lint: register runs at its 2 boundaries, newSession only in childSession, one list of names") {
     val calls = codeLines.filter { case (_, _, l) =>
       """\bregister\(""".r.findFirstIn(l).isDefined && !l.contains("def register(") }
-    assert(calls.map(_._1).sorted == Seq("Expressions.scala", "QueryDef.scala", "StreamingOps.scala"),
-      s"register( outside QueryDef.fn, childSession and maintainIndex:\n  ${calls.mkString("\n  ")}")
+    assert(calls.map(_._1).sorted == Seq("Expressions.scala", "QueryDef.scala"),
+      s"register( outside QueryDef.fn and childSession:\n  ${calls.mkString("\n  ")}")
     val sessions = codeLines.filter(_._3.contains("newSession()"))
     assert(sessions.map(_._1) == Seq("Expressions.scala"),
       s"newSession() outside GraftFunctions.childSession:\n  ${sessions.mkString("\n  ")}")
